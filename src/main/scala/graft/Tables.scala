@@ -19,13 +19,20 @@ object Tables {
     * on EVERY call (a footer read + mergeSchemasInParallel pass), and the
     * suite calls Tables ~2-3× per query — a fixed ~50-150 ms of planning
     * per query that a real warehouse serves from its catalog for free.
-    * The key carries the parquet path's (length, mtime) alongside
-    * (dir, name) — ADVICE r17: a fixture regenerated in-process under
+    * Each (dir, name) holds one entry tagged with the parquet path's
+    * (length, mtime) — ADVICE r17: a fixture regenerated in-process under
     * the same path with a different schema must MISS, not decode
-    * silently-wrong rows through a stale schema. Metadata only — never
-    * rows. */
+    * silently-wrong rows through a stale schema. The miss replaces the
+    * entry, so regenerating a fixture never grows the memo. Metadata
+    * only — never rows. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long, Long), org.apache.spark.sql.types.StructType]()
+    (String, String), ((Long, Long), org.apache.spark.sql.types.StructType)]()
+
+  /** Number of memoized schemas for fixtures under `dir`. */
+  private[graft] def cachedSchemas(dir: String): Int = {
+    import scala.jdk.CollectionConverters._
+    schemaCache.keySet.asScala.count(_._1 == dir)
+  }
 
   /** (size, mtime) of the fixture path — 0s when unreadable (a plain
     * directory-backed dataset or remote path still caches; those are
@@ -54,8 +61,13 @@ object Tables {
     // failure mode an engine can ship.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val sig = fileSig(s"$dir/$name.parquet")
-    val sch = schemaCache.computeIfAbsent((dir, name, sig._1, sig._2),
-      _ => spark.read.parquet(s"$dir/$name.parquet").schema)
+    val sch = schemaCache.get((dir, name)) match {
+      case (`sig`, cached) => cached
+      case _ =>
+        val fresh = spark.read.parquet(s"$dir/$name.parquet").schema
+        schemaCache.put((dir, name), (sig, fresh))
+        fresh
+    }
     val df = spark.read.schema(sch).parquet(s"$dir/$name.parquet")
     if (name == "events") normalizeEventsTs(df)
     // documents/embeddings feed signature computation + pairwise

@@ -2,7 +2,8 @@ package graft.catalog
 
 /** Byte-bounded LRU memo for the driver-side per-file fold caches
   * (round-18 fix of the round-17 eviction hazard, guide §5 driver
-  * memory).
+  * memory), also used for the loaded-model memo of
+  * [[graft.pipeline.FraudPipeline]].
   *
   * The round-17 memos capped by ENTRY COUNT (4096) with a wholesale
   * `clear()`: (a) a table whose live delta chain exceeded the cap
@@ -27,7 +28,7 @@ package graft.catalog
   * (immutable UUID-named files), so a racing duplicate compute is
   * harmless and parquet reads never serialize behind the cache lock.
   */
-private[catalog] final class ByteLruCache[K <: AnyRef, V <: AnyRef](
+private[graft] final class ByteLruCache[K <: AnyRef, V <: AnyRef](
     maxBytes: () => Long, weigh: V => Long) {
   // accessOrder = true: iteration starts at the least-recently-USED entry
   private[this] val map =
@@ -69,20 +70,29 @@ private[catalog] final class ByteLruCache[K <: AnyRef, V <: AnyRef](
     }
   }
 
+  /** Snapshot of the cached keys (does not touch access order). */
+  def keys: Seq[K] = synchronized {
+    import scala.jdk.CollectionConverters._
+    map.keySet.asScala.toVector
+  }
+
   def currentBytes: Long = synchronized(bytes)
   def entryCount: Int = synchronized(map.size)
   def clear(): Unit = synchronized { map.clear(); bytes = 0L }
 }
 
-private[catalog] object ByteLruCache {
-  /** Per-cache budget (three fold caches exist: delta parses, DV
+private[graft] object ByteLruCache {
+  /** Default per-cache budget: 256 MiB. */
+  val DefaultBytes: Long = 256L << 20
+
+  /** Per-cache budget of the fold caches (three exist: delta parses, DV
     * vectors, eq-delete keys — worst-case driver hold 3 × this).
     * Overridable for constrained drivers / specs; read per insert so
     * a running JVM honors changes. */
   def budgetBytes(): Long =
     try sys.props.get("graft.fold.cache.bytes").map(_.toLong)
-      .getOrElse(256L << 20)
-    catch { case _: NumberFormatException => 256L << 20 }
+      .getOrElse(DefaultBytes)
+    catch { case _: NumberFormatException => DefaultBytes }
 
   /** Rough JVM-heap weight of one cached key value (fold sets hold
     * canonical Long/Integer/String/Vector ids). */

@@ -88,4 +88,17 @@ class FixtureContractSpec extends SparkSpec {
     val e = intercept[IllegalStateException](Tables(spark, dir, "events"))
     assert(e.getMessage.contains("unrecognized"))
   }
+
+  test("a fixture regenerated in place re-reads its schema and keeps one memo entry") {
+    val dir = Files.createTempDirectory("graft_fixture_regen_").toString
+    val path = s"$dir/region.parquet"
+    val gens = Seq(Seq("a"), Seq("a", "b"), Seq("a", "b", "c"))
+    gens.foreach { cols =>
+      spark.range(3).select(cols.map(c => col("id").as(c)): _*)
+        .write.mode("overwrite").parquet(path)
+      assert(Tables(spark, dir, "region").columns.toSeq == cols,
+        "the regenerated fixture must miss the memo, not reuse the stale schema")
+    }
+    assert(Tables.cachedSchemas(dir) == 1)
+  }
 }
