@@ -1,5 +1,7 @@
 package graft.catalog
 
+import java.util.concurrent.{CompletableFuture, CompletionException}
+
 /** Byte-bounded LRU memo for the driver-side per-file fold caches
   * (round-18 fix of the round-17 eviction hazard, guide §5 driver
   * memory), also used for the loaded-model memo of
@@ -24,9 +26,13 @@ package graft.catalog
   * count or per-file size.
   *
   * Values must be immutable — they are handed out shared. `compute`
-  * runs OUTSIDE the lock: fold results are pure functions of the key
-  * (immutable UUID-named files), so a racing duplicate compute is
-  * harmless and parquet reads never serialize behind the cache lock.
+  * runs OUTSIDE the lock, so parquet reads never serialize behind the
+  * cache lock and misses on different keys compute concurrently. Misses
+  * are single-flight per key: concurrent misses on one key wait for the
+  * first caller's compute instead of repeating it (two `predict` calls
+  * missing on one model do one `PipelineModel.load`). A compute that
+  * throws leaves no entry; its waiters get its exception and the next
+  * caller computes again.
   */
 private[graft] final class ByteLruCache[K <: AnyRef, V <: AnyRef](
     maxBytes: () => Long, weigh: V => Long) {
@@ -34,17 +40,36 @@ private[graft] final class ByteLruCache[K <: AnyRef, V <: AnyRef](
   private[this] val map =
     new java.util.LinkedHashMap[K, (V, Long)](64, 0.75f, true)
   private[this] var bytes = 0L
+  // misses being computed right now, by key (guarded like `map`)
+  private[this] val inflight = new java.util.HashMap[K, CompletableFuture[V]]
 
   def getOrCompute(k: K)(compute: => V): V = {
-    val hit = synchronized {
+    val (hit, flight, owner) = synchronized {
       val e = map.get(k) // updates access order
-      if (e == null) null.asInstanceOf[V] else e._1
+      if (e != null) (e._1, null, false)
+      else inflight.get(k) match {
+        case null =>
+          val f = new CompletableFuture[V]
+          inflight.put(k, f)
+          (null.asInstanceOf[V], f, true)
+        case f => (null.asInstanceOf[V], f, false)
+      }
     }
     if (hit != null) hit
+    else if (!owner)
+      try flight.join()
+      catch { case e: CompletionException => throw e.getCause }
     else {
-      val v = compute
-      val w = math.max(0L, weigh(v))
+      val (v, w) =
+        try { val v = compute; (v, math.max(0L, weigh(v))) }
+        catch {
+          case t: Throwable =>
+            synchronized(inflight.remove(k))
+            flight.completeExceptionally(t)
+            throw t
+        }
       synchronized {
+        inflight.remove(k)
         val prev = map.put(k, (v, w))
         bytes += w - (if (prev == null) 0L else prev._2)
         val budget = maxBytes() // read per insert: specs tune it live
@@ -56,6 +81,7 @@ private[graft] final class ByteLruCache[K <: AnyRef, V <: AnyRef](
           if (!e.getKey.equals(k)) { bytes -= e.getValue._2; it.remove() }
         }
       }
+      flight.complete(v)
       v
     }
   }

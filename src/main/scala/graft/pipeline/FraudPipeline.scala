@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,6 +33,11 @@ import graft.streaming.Replay
   *     long-running stream, the model is loaded once per saved version
   *     per JVM: every later call against an unchanged model directory
   *     reuses it, and re-saving the model is picked up on the next call.
+  *     The saved version is told by a fingerprint of the directory: the
+  *     sorted (relative path, length, mtime) of every file under it,
+  *     walked with `FileSystem.listStatus`, which reads no permissions
+  *     (`listFiles` would fork an `ls -ld` per file on the local
+  *     filesystem).
   *
   * Every stage is cluster-shaped: no collect() (replay streams via
   * toLocalIterator), checkpointed exactly-once sink, schema-enforced
@@ -92,18 +97,20 @@ object FraudPipeline {
       () => ByteLruCache.DefaultBytes, m => SizeEstimator.estimate(m))
 
   /** (relative path, length, mtime) of every file under `dir`, sorted;
-    * listed through the Hadoop FileSystem, so HDFS model dirs work too. */
+    * listed through the Hadoop FileSystem, so HDFS model dirs work too.
+    * Walks `listStatus` rather than `listFiles`: the `LocatedFileStatus`
+    * of `listFiles` reads each file's owner and permissions, which the
+    * local filesystem does by forking `ls -ld` per file, and the
+    * fingerprint needs neither. */
   private def fingerprint(spark: SparkSession, dir: String): Vector[(String, Long, Long)] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prefix = fs.makeQualified(root).toString.stripSuffix("/") + "/"
-    val it = fs.listFiles(root, true)
-    val files = Vector.newBuilder[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      files += ((f.getPath.toString.stripPrefix(prefix), f.getLen, f.getModificationTime))
-    }
-    files.result().sortBy(_._1)
+    def files(p: Path): Vector[FileStatus] = fs.listStatus(p).toVector
+      .flatMap(s => if (s.isDirectory) files(s.getPath) else Vector(s))
+    files(root)
+      .map(f => (f.getPath.toString.stripPrefix(prefix), f.getLen, f.getModificationTime))
+      .sortBy(_._1)
   }
 
   /** The model saved in `dir`, loaded from disk once per saved version. */

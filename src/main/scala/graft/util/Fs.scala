@@ -45,7 +45,7 @@ object Fs {
       Files.delete(p)
     }
 
-  /** Minimal bounded-parallel foreach over a small Seq (no external
+  /** Minimal bounded-parallel foreach over a Seq (no external
     * parallel-collections dependency): `n` worker threads drain an
     * index counter. Exceptions propagate (first one wins). */
   implicit final class ParSeq[A](private val xs: Seq[A]) {
@@ -53,13 +53,17 @@ object Fs {
   }
   final class ParRunner[A](xs: Seq[A], n: Int) {
     def foreach(f: A => Unit): Unit = {
+      // indexed once: `children` returns a List, whose size and apply(i)
+      // are O(n) each, so indexing it per step would make the drain O(n²)
+      val items = xs.toIndexedSeq
+      val size = items.size
       val idx = new java.util.concurrent.atomic.AtomicInteger(0)
       val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
-      val threads = (0 until math.min(n, xs.size)).map { _ =>
+      val threads = (0 until math.min(n, size)).map { _ =>
         val t = new Thread(() => {
           var i = idx.getAndIncrement()
-          while (i < xs.size && err.get() == null) {
-            try f(xs(i))
+          while (i < size && err.get() == null) {
+            try f(items(i))
             catch { case e: Throwable => err.compareAndSet(null, e): Unit }
             i = idx.getAndIncrement()
           }
