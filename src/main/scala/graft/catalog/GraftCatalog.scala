@@ -95,21 +95,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
 
   override def loadTable(ident: Identifier): Table = {
-    // `<table>$changes`: the MOR change-feed companion (Iceberg-style
-    // metadata-table naming) — a read-only view over the base table's
-    // change ledger, never cached (it wraps the cached base handle)
+    // `<table>$changes`: the change-feed companion of every table kind
+    // (Iceberg-style metadata-table naming) — a read-only view over the
+    // base table's changes, never cached (it wraps the cached base
+    // handle); each kind's feed contract lives on its [[ChangeSource]]
     if (ident.name().endsWith("$changes")) {
       val base = Identifier.of(ident.namespace(),
         ident.name().stripSuffix("$changes"))
       return loadTable(base) match {
-        case dv: GraftDvTable =>
-          new GraftDvChangeFeedTable(idxKey(ident), dv)
-        case mor: GraftDeltaTable =>
-          new GraftChangeFeedTable(idxKey(ident), mor)
-        // plain CoW: the INCREMENTAL APPEND feed (bounded snapshot
-        // diff; removals inside the range refuse loudly)
-        case cow: GraftTable =>
-          new GraftCowChangeFeedTable(idxKey(ident), cow)
+        case t: GraftTable =>
+          new GraftChangeFeedTable(idxKey(ident), ChangeSource.of(t))
         case _ => throw new UnsupportedOperationException(
           s"$$changes is not available on ${idxKey(base)}")
       }
@@ -4968,7 +4963,7 @@ class GraftScan(tableSchema: StructType, requiredSchema: StructType,
 
   // NOTE: streamTable being set does NOT mean streaming execution —
   // it is the toMicroBatchStream capability hook, present on every
-  // table scan; a streaming read plans through GraftMicroBatchStream,
+  // table scan; a streaming read plans through GraftLogStream,
   // which never consults runtimeFiles, so advertising here is safe.
   override def filterAttributes():
       Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -5248,8 +5243,12 @@ class GraftScan(tableSchema: StructType, requiredSchema: StructType,
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     streamTable match {
       case Some(t) =>
-        new GraftMicroBatchStream(t, tableSchema, requiredSchema, rowFilters,
-          admission)
+        new GraftLogStream(t, changeLedger = false, admission,
+          _.filter(f => rowFilters.forall(
+              GraftStorage.mayMatch(tableSchema, f, _)))
+            .map(f => GraftFilePartition(f.path, f.cols, f.rows,
+              colIds = f.colIds): InputPartition).toArray,
+          createReaderFactory())
       case None => throw new UnsupportedOperationException(
         s"${getClass.getName}: this scan is not streamable")
     }
@@ -5398,37 +5397,68 @@ class GraftRowPipeline(neededSchema: StructType, requiredSchema: StructType,
   override def close(): Unit = closeable.close()
 }
 
-/** Streaming source half of the CDC loop: offsets index the table's
-  * append log (every appended file, in commit order), so a restart
-  * resumes at the exact file boundary its checkpoint recorded —
-  * the same offset discipline as Spark's FileStreamSource, with the
-  * catalog's commit log as the file ledger. */
-/** ADMISSION CONTROL + Trigger.AvailableNow for the catalog's
-  * log-indexed streams (append log, change feed): both index an
-  * ordered ledger with integer offsets where each entry is ONE file
-  * with exact recorded rows/bytes — so `maxFilesPerTrigger` bounds a
-  * micro-batch exactly, and `maxRowsPerTrigger`/`maxBytesPerTrigger`
-  * (VERDICT r12 item 8) bound it by walking the ledger's per-entry
-  * row/byte counts (at least one file always admits, the file-source
-  * progress guarantee; composite limits take the tightest cap). This
-  * is the backpressure a 100-TB backfill needs — bounded state,
-  * bounded task count, steady checkpoint cadence instead of one giant
-  * batch; with AvailableNow the end offset is PINNED at query start,
-  * so a bounded backfill terminates even while writers keep
-  * committing. */
-trait GraftLogStream
-    extends org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
+/** The catalog's LEDGER stream: offsets index one of the table's
+  * ordered file ledgers — the append log (every appended file, in
+  * commit order) or the change ledger (every row-level change file, in
+  * commit order, surviving compaction) — so a restart resumes at the
+  * exact entry boundary its checkpoint recorded: the same offset
+  * discipline as Spark's FileStreamSource, with the catalog's commit
+  * log as the file ledger. Offsets are GLOBAL ledger positions; the
+  * retained window starts at the ledger's base, where a fresh stream
+  * starts, and a checkpoint older than the window fails loudly —
+  * silently resuming at the window edge would skip data. Every poll
+  * refreshes from disk: a stream tailing a table WRITTEN BY ANOTHER
+  * PROCESS must observe its commits, or it silently stalls at its
+  * plan-time offset (ADVICE r11). `partitionsOf` turns a ledger slice
+  * into input partitions (the append log prunes files by its pushed
+  * filters; each change feed resolves its own entries).
+  *
+  * ADMISSION CONTROL + Trigger.AvailableNow: each ledger entry is ONE
+  * file with exact recorded rows/bytes — so `maxFilesPerTrigger`
+  * bounds a micro-batch exactly, and `maxRowsPerTrigger`/
+  * `maxBytesPerTrigger` (VERDICT r12 item 8) bound it by walking the
+  * ledger's per-entry row/byte counts (at least one file always
+  * admits, the file-source progress guarantee; composite limits take
+  * the tightest cap). This is the backpressure a 100-TB backfill
+  * needs — bounded state, bounded task count, steady checkpoint
+  * cadence instead of one giant batch; with AvailableNow the end
+  * offset is PINNED at query start, so a bounded backfill terminates
+  * even while writers keep committing. */
+final class GraftLogStream(table: GraftTable, changeLedger: Boolean,
+    admission: GraftAdmission,
+    partitionsOf: Vector[GraftFileRef] => Array[InputPartition],
+    readerFactory: PartitionReaderFactory)
+    extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, ReadMaxRows}
 
+  private val ledgerName = if (changeLedger) "change ledger" else "append log"
+
+  /** (base, entries) of the retained ledger in `st`. */
+  private def ledger(st: GraftTableState): (Int, Vector[GraftFileRef]) =
+    if (changeLedger) (st.changeBase, st.changeLog)
+    else (st.appendBase, st.appendLog)
+
   /** Current [base, end) of the retained ledger, disk-fresh. */
-  protected def logWindow(): (Int, Int)
+  private def logWindow(): (Int, Int) = {
+    table.refreshFromDisk()
+    val (base, log) = ledger(table.stateNow)
+    (base, base + log.size)
+  }
+
   /** The ledger entries for GLOBAL offsets [from, until). */
-  protected def logEntries(from: Int, until: Int): Vector[GraftFileRef]
-  /** Per-trigger admission caps (0 = unbounded). */
-  protected def admission: GraftAdmission
+  private def logEntries(from: Int, until: Int): Vector[GraftFileRef] = {
+    val (base, log) = ledger(table.stateNow)
+    log.slice(from - base, until - base)
+  }
 
   @volatile private var pinnedEnd: Int = -1
+
+  override def initialOffset(): Offset =
+    GraftStreamOffset(ledger(table.stateNow)._1)
+  override def latestOffset(): Offset = GraftStreamOffset(logWindow()._2)
+  override def deserializeOffset(json: String): Offset =
+    GraftStreamOffset.parse(json)
 
   override def getDefaultReadLimit: ReadLimit = {
     val ls = Seq(
@@ -5483,6 +5513,20 @@ trait GraftLogStream
     }
     GraftStreamOffset(math.max(s, math.min(end, capOf(limit))))
   }
+
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val s = start.asInstanceOf[GraftStreamOffset].i
+    val e = end.asInstanceOf[GraftStreamOffset].i
+    val (base, log) = ledger(table.stateNow)
+    require(s >= base, s"stream offset $s has expired: $ledgerName " +
+      s"retention kept [$base, ${base + log.size})")
+    require(e <= base + log.size,
+      s"offset $e beyond $ledgerName (${base + log.size})")
+    partitionsOf(log.slice(s - base, e - base))
+  }
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
 }
 
 /** Per-trigger admission caps for the catalog streams (0 = off). */
@@ -5503,62 +5547,6 @@ object GraftAdmission {
     GraftAdmission(long("maxFilesPerTrigger").toInt,
       long("maxRowsPerTrigger"), long("maxBytesPerTrigger"))
   }
-}
-
-class GraftMicroBatchStream(table: GraftTable, tableSchema: StructType,
-    requiredSchema: StructType,
-    filters: Array[org.apache.spark.sql.sources.Filter],
-    protected val admission: GraftAdmission = GraftAdmission())
-    extends MicroBatchStream with GraftLogStream {
-
-  protected def logWindow(): (Int, Int) = {
-    // observe FOREIGN-process appends at every poll (ADVICE r11)
-    table.refreshFromDisk()
-    val st = table.stateNow
-    (st.appendBase, st.appendBase + st.appendLog.size)
-  }
-
-  protected def logEntries(from: Int, until: Int): Vector[GraftFileRef] = {
-    val st = table.stateNow
-    st.appendLog.slice(from - st.appendBase, until - st.appendBase)
-  }
-
-  // a FRESH stream starts at the earliest RETAINED entry (appendBase);
-  // only a checkpoint that predates the retention window errors
-  override def initialOffset(): Offset =
-    GraftStreamOffset(table.stateNow.appendBase)
-  override def latestOffset(): Offset = GraftStreamOffset(logWindow()._2)
-  override def deserializeOffset(json: String): Offset =
-    GraftStreamOffset(JsonMethods.parse(json).asInstanceOf[JObject]
-      .obj.toMap.apply("i") match {
-        case JInt(n) => n.toInt
-        case JLong(n) => n.toInt
-        case other => throw new IllegalStateException(s"bad offset $other")
-      })
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GraftStreamOffset].i
-    val e = end.asInstanceOf[GraftStreamOffset].i
-    val st = table.stateNow
-    // offsets are GLOBAL append positions; the retained window starts
-    // at appendBase. A checkpoint older than the window must fail
-    // loudly — silently resuming at the window edge would skip data.
-    require(s >= st.appendBase,
-      s"stream offset $s has expired: append-log retention kept " +
-        s"[${st.appendBase}, ${st.appendBase + st.appendLog.size})")
-    require(e <= st.appendBase + st.appendLog.size,
-      s"offset $e beyond append log " +
-        s"(${st.appendBase + st.appendLog.size})")
-    st.appendLog.slice(s - st.appendBase, e - st.appendBase)
-      .filter(f => filters.forall(GraftStorage.mayMatch(tableSchema, f, _)))
-      .map(f => GraftFilePartition(f.path, f.cols, f.rows,
-        colIds = f.colIds): InputPartition)
-      .toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(tableSchema, requiredSchema, filters)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 case class GraftStreamOffset(i: Int) extends Offset {

@@ -562,31 +562,6 @@ class GraftMorReaderFactory(tableSchema: StructType,
     }
 }
 
-/** Read-only CDC companion table — what `<table>$changes` resolves to
-  * for a merge-on-read table (VERDICT r10 item 6, the missing half of
-  * q197's lakehouse relay): the table's CHANGE-FEED ledger (every
-  * committed delta file, in commit order, surviving compaction) as
-  * rows `(__op, __id, <data cols>)`. Batch read returns the whole
-  * retained window; MICRO_BATCH_READ streams it with offsets over
-  * delta-file arrival — each micro-batch reads only newly committed
-  * change files, a lagging checkpoint older than the retention window
-  * fails loudly. The standard CDC consumption pattern applies: seed a
-  * mirror from a snapshot (`VERSION AS OF`), then apply the feed. */
-class GraftChangeFeedTable(ident: String, table: GraftDeltaTable)
-    extends Table with SupportsRead {
-  override def name(): String = ident
-  override def schema(): StructType = table.changeFeedSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    table.refreshFromDisk()
-    new GraftChangeFeedScanBuilder(table,
-      GraftAdmission.fromOptions(options),
-      GraftChangeBounds.fromOptions(options, table))
-  }
-}
-
 /** Version bounds for INCREMENTAL batch reads of the change feed
   * (Iceberg's incremental read / Delta's table_changes):
   * `spark.read.option("from_version", v1).option("to_version", v2)
@@ -707,201 +682,6 @@ object GraftChangeBounds {
     for (f <- b.fromVer; t <- b.toVer) require(f <= t,
       s"from_version $f must be <= to_version $t")
     b
-  }
-}
-
-class GraftChangeFeedScanBuilder(table: GraftDeltaTable,
-    admission: GraftAdmission = GraftAdmission(),
-    bounds: GraftChangeBounds = GraftChangeBounds(None, None))
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private val feedSchema = table.changeFeedSchema
-  private var required: StructType = feedSchema
-  // change-feed rows all come from parquet delta files via the shared
-  // FileIterator, so validated nested prunes are honored end-to-end
-  override def pruneColumns(r: StructType): Unit =
-    required = GraftStorage.sanitizeRequired(feedSchema, r, nested = true)
-  override def build(): Scan =
-    new GraftChangeFeedScan(table, feedSchema, required, admission, bounds)
-}
-
-class GraftChangeFeedScan(table: GraftDeltaTable, feedSchema: StructType,
-    requiredSchema: StructType, admission: GraftAdmission = GraftAdmission(),
-    bounds: GraftChangeBounds = GraftChangeBounds(None, None))
-    extends Scan with Batch {
-  override def readSchema(): StructType = requiredSchema
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    bounds.slice(table.stateNow).map(f =>
-      GraftFilePartition(f.path, f.cols, f.rows,
-        colIds = f.colIds): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(feedSchema, requiredSchema, Array.empty)
-  override def description(): String = {
-    val st = table.stateNow
-    s"GraftChangeFeedScan(${st.changeLog.map(_.rows).sum} change ops, " +
-      s"window [${st.changeBase}, ${st.changeBase + st.changeLog.size})" +
-      (if (bounds.bounded) s", versions (${bounds.fromVer.getOrElse("")}," +
-        s" ${bounds.toVer.getOrElse("")}]" else "") + ")"
-  }
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    // version bounds are a BATCH contract; a stream's progress axis is
-    // its checkpointed offset — mixing the two would double-track
-    require(!bounds.bounded,
-      "from_version/to_version apply to batch reads of $changes; " +
-        "streaming reads track progress via their checkpoint")
-    new GraftChangeFeedStream(table, feedSchema, requiredSchema,
-      admission)
-  }
-}
-
-/** Offsets index the change ledger exactly like [[GraftMicroBatchStream]]
-  * indexes the append log — same retention/expiry discipline. */
-class GraftChangeFeedStream(table: GraftDeltaTable, feedSchema: StructType,
-    requiredSchema: StructType,
-    protected val admission: GraftAdmission = GraftAdmission())
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with GraftLogStream {
-
-  protected def logEntries(from: Int, until: Int): Vector[GraftFileRef] = {
-    val st = table.stateNow
-    st.changeLog.slice(from - st.changeBase, until - st.changeBase)
-  }
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  protected def logWindow(): (Int, Int) = {
-    // a CDC stream tailing a table WRITTEN BY ANOTHER PROCESS must
-    // observe foreign delta commits at every poll — the handle's cached
-    // state only advances on same-process commits, so without this
-    // refresh the stream silently stalls at its plan-time offset
-    // (ADVICE r11); planInputPartitions then reads the refreshed state
-    table.refreshFromDisk()
-    val st = table.stateNow
-    (st.changeBase, st.changeBase + st.changeLog.size)
-  }
-
-  override def initialOffset(): Offset =
-    GraftStreamOffset(table.stateNow.changeBase)
-  override def latestOffset(): Offset = GraftStreamOffset(logWindow()._2)
-  override def deserializeOffset(json: String): Offset =
-    GraftStreamOffset.parse(json)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GraftStreamOffset].i
-    val e = end.asInstanceOf[GraftStreamOffset].i
-    val st = table.stateNow
-    require(s >= st.changeBase,
-      s"change-feed offset $s has expired: retention kept " +
-        s"[${st.changeBase}, ${st.changeBase + st.changeLog.size})")
-    require(e <= st.changeBase + st.changeLog.size,
-      s"offset $e beyond change ledger " +
-        s"(${st.changeBase + st.changeLog.size})")
-    st.changeLog.slice(s - st.changeBase, e - st.changeBase)
-      .map(f => GraftFilePartition(f.path, f.cols, f.rows,
-        colIds = f.colIds): InputPartition)
-      .toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(feedSchema, requiredSchema, Array.empty)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-/** INCREMENTAL CHANGE feed — `<table>$changes` for a PLAIN
-  * copy-on-write table: a version- or timestamp-bounded BATCH read of
-  * what changed in (from, to], computed from retained-snapshot file
-  * diffs — O(files) driver metadata, zero scans beyond the changed
-  * files themselves. Two regimes:
-  *
-  *  - APPEND-ONLY range (Iceberg's incremental append scan): the rows
-  *    of the files ADDED, each stamped `__op = 0` and its commit
-  *    `__ver` — "what arrived since the snapshot I last processed".
-  *  - Range containing REMOVALS (UPDATE/DELETE/overwrite rewrote
-  *    files — round-16, VERDICT r15 item 6): requires a declared
-  *    `graft.row_id`; each commit resolves as a file-set diff —
-  *    removed files stream as `__op = 2` rows, added files as
-  *    `__op = 0`, same version — Iceberg's changelog-scan shape. The
-  *    standard MOR-feed consumer collapse (per key, max `__ver`,
-  *    insert wins within a version) converges a keyed mirror exactly;
-  *    unchanged rows the CoW rewrite copied appear as canceling
-  *    pairs, the honest raw-changelog cost (net-change collapse is a
-  *    distributed step that belongs to the consumer, not the scan).
-  *
-  * Soundness is loud, never silent: the range endpoints must be
-  * RETAINED snapshots (or from omitted on a complete history), every
-  * version inside the range must be retained (a trimmed gap cannot be
-  * proven complete), and a removal-bearing range on an id-LESS table
-  * refuses (positions do not survive a CoW rewrite, so delete-rows
-  * would be unaddressable). `readStream` on this companion is the
-  * checkpointed variant of the same walk
-  * ([[GraftCowChangeFeedStream]], r16 item 5): offsets are commit
-  * versions, so micro-batches and batch ranges deliver byte-identical
-  * changelog rows. */
-class GraftCowChangeFeedTable(ident: String, table: GraftTable)
-    extends Table with SupportsRead {
-  private[catalog] def feedSchema: StructType =
-    StructType(
-      StructField("__op", IntegerType, nullable = false) +:
-      StructField("__ver", IntegerType, nullable = false) +:
-      table.schema().fields.map(_.copy(nullable = true)))
-  override def name(): String = ident
-  override def schema(): StructType = feedSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    table.refreshFromDisk()
-    new GraftCowChangeFeedScanBuilder(table, feedSchema,
-      GraftChangeBounds.fromOptions(options, table))
-  }
-}
-
-class GraftCowChangeFeedScanBuilder(table: GraftTable,
-    feedSchema: StructType, bounds: GraftChangeBounds)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = feedSchema
-  override def pruneColumns(r: StructType): Unit =
-    required = GraftStorage.sanitizeRequired(feedSchema, r, nested = true)
-  override def build(): Scan =
-    new GraftCowChangeFeedScan(table, feedSchema, required, bounds)
-}
-
-class GraftCowChangeFeedScan(table: GraftTable, feedSchema: StructType,
-    requiredSchema: StructType, bounds: GraftChangeBounds)
-    extends Scan with Batch {
-  override def readSchema(): StructType = requiredSchema
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val st = table.stateNow
-    val win = st.snapshots
-    require(win.nonEmpty, s"${table.name()} has no commits")
-    val toVer = bounds.toVer.getOrElse(win.last.version)
-    require(win.exists(_.version == toVer),
-      s"to_version $toVer is not a retained snapshot of " +
-        s"${table.name()} (window [${win.head.version}, " +
-        s"${win.last.version}])")
-    val fromVer = bounds.fromVer.getOrElse(-1)
-    GraftCowChangeFeed.plan(table, fromVer, toVer)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftDvChangeFeedReaderFactory(feedSchema, requiredSchema)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    // version bounds are a BATCH contract; a stream's progress axis is
-    // its checkpointed offset — mixing the two would double-track
-    // (same rule as the MOR feed stream)
-    require(!bounds.bounded,
-      "from_version/to_version apply to batch reads of $changes; " +
-        "streaming reads track progress via their checkpoint")
-    new GraftCowChangeFeedStream(table, feedSchema, requiredSchema)
-  }
-
-  override def description(): String = {
-    s"GraftCowChangeFeedScan(${table.name()}" +
-      (if (bounds.bounded) s", versions (${bounds.fromVer.getOrElse("")}" +
-        s", ${bounds.toVer.getOrElse("")}]" else "") + ")"
   }
 }
 
@@ -1042,8 +822,8 @@ private[catalog] object GraftCowChangeFeed {
   * start, the same pattern as [[GraftLogStream]]. At 100 TB a
   * downstream mirror follows a CoW table at O(rows the DML rewrote)
   * per trigger with no bespoke polling loop. */
-class GraftCowChangeFeedStream(table: GraftTable, feedSchema: StructType,
-    requiredSchema: StructType)
+class GraftCowChangeFeedStream(table: GraftTable,
+    readerFactory: PartitionReaderFactory)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
@@ -1085,8 +865,7 @@ class GraftCowChangeFeedStream(table: GraftTable, feedSchema: StructType,
     GraftCowChangeFeed.plan(table,
       start.asInstanceOf[GraftStreamOffset].i,
       end.asInstanceOf[GraftStreamOffset].i)
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftDvChangeFeedReaderFactory(feedSchema, requiredSchema)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }

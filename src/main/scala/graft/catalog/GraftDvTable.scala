@@ -161,19 +161,6 @@ class GraftDvTable(ident: String, dir: NioPath,
   /** DV delta-file schema: one (file, position) tombstone per row. */
   private def dvSchema: StructType = GraftDvTable.DvSchema
 
-  /** CHANGE-FEED schema for an id-less table: `(__op, __ver, <data>)`.
-    * No `__id` — positional tables have none; instead every op carries
-    * `__ver`, its commit version, so a consumer can collapse an
-    * UPDATE's delete+insert pair (same key, same version → the insert
-    * wins) and order ops across commits without a ledger cursor. op
-    * 0 = insert, 2 = delete (delete rows are FULL rows, resolved
-    * against the base file at read time). */
-  private[catalog] def changeFeedSchema: StructType =
-    StructType(
-      StructField("__op", IntegerType, nullable = false) +:
-      StructField("__ver", IntegerType, nullable = false) +:
-      schema().fields.map(_.copy(nullable = true)))
-
   /** Every retained base-file ref by path — what a change-ledger
     * vector entry resolves its positions against. Sources: retained
     * snapshots plus the append log (a compaction may have replaced the
@@ -951,59 +938,6 @@ class GraftDvReaderFactory(tableSchema: StructType,
   }
 }
 
-/** Read-only CDC companion — `<table>$changes` for a DELETION-VECTOR
-  * table (VERDICT r14 item 1, the id-less half of the q197/q262 CDC
-  * surface): the change LEDGER (every row-level DV commit, in commit
-  * order, surviving compaction) served as rows
-  * `(__op, __ver, <data cols>)`. Positional deletes are resolved to
-  * FULL DELETE-ROWS at read time — each vector entry ships (file,
-  * positions) to a reader that materializes exactly the tombstoned
-  * ordinals from the base file, reading only the row groups that
-  * contain them (O(touched groups), never a base-file scan); insert
-  * entries are the commit's data files read as op-0 rows unchanged
-  * ("inserts ride the ledger as they landed"). There is no `__id`
-  * (positional tables have none); instead every op carries `__ver`,
-  * its commit version, so a consumer collapses an UPDATE's honest
-  * delete+insert pair (same version) and orders ops across commits
-  * without a ledger cursor.
-  *
-  * Batch reads return the whole retained window or a `from_version`/
-  * `to_version` slice ([[GraftChangeBounds]], same refusal discipline
-  * as the MOR feed); MICRO_BATCH_READ streams the ledger with
-  * checkpointed offsets. Soundness edges: a vector whose base file
-  * left the retention window fails LOUDLY at plan time (and
-  * [[GraftDvTable.gcExtraLive]] pins referenced bases against GC so
-  * the retained window stays materializable); metadata-only DELETE
-  * (whole-file drop) bypasses the row-level path and does not enter
-  * the feed — MOR-feed parity, documented not silent. */
-class GraftDvChangeFeedTable(ident: String, table: GraftDvTable)
-    extends Table with SupportsRead {
-  override def name(): String = ident
-  override def schema(): StructType = table.changeFeedSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    table.refreshFromDisk()
-    new GraftDvChangeFeedScanBuilder(table,
-      GraftAdmission.fromOptions(options),
-      GraftChangeBounds.fromOptions(options, table))
-  }
-}
-
-class GraftDvChangeFeedScanBuilder(table: GraftDvTable,
-    admission: GraftAdmission = GraftAdmission(),
-    bounds: GraftChangeBounds = GraftChangeBounds(None, None))
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private val feedSchema = table.changeFeedSchema
-  private var required: StructType = feedSchema
-  override def pruneColumns(r: StructType): Unit =
-    required = GraftStorage.sanitizeRequired(feedSchema, r, nested = true)
-  override def build(): Scan =
-    new GraftDvChangeFeedScan(table, feedSchema, required, admission,
-      bounds)
-}
-
 object GraftDvChangeFeed {
   /** Map a change-ledger slice to input partitions: a vector entry
     * becomes per-touched-row-group delete partitions (positions
@@ -1113,84 +1047,6 @@ object GraftDvChangeFeed {
           }
     }.toArray
   }
-}
-
-class GraftDvChangeFeedScan(table: GraftDvTable, feedSchema: StructType,
-    requiredSchema: StructType,
-    admission: GraftAdmission = GraftAdmission(),
-    bounds: GraftChangeBounds = GraftChangeBounds(None, None))
-    extends Scan with Batch {
-  override def readSchema(): StructType = requiredSchema
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    GraftDvChangeFeed.partitions(bounds.slice(table.stateNow), table)
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftDvChangeFeedReaderFactory(feedSchema, requiredSchema)
-  override def description(): String = {
-    val st = table.stateNow
-    s"GraftDvChangeFeedScan(${st.changeLog.size} ledger entries, " +
-      s"window [${st.changeBase}, ${st.changeBase + st.changeLog.size})" +
-      (if (bounds.bounded) s", versions (${bounds.fromVer.getOrElse("")}," +
-        s" ${bounds.toVer.getOrElse("")}]" else "") + ")"
-  }
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    // version bounds are a BATCH contract; a stream's progress axis is
-    // its checkpointed offset — mixing the two would double-track
-    require(!bounds.bounded,
-      "from_version/to_version apply to batch reads of $changes; " +
-        "streaming reads track progress via their checkpoint")
-    new GraftDvChangeFeedStream(table, feedSchema, requiredSchema,
-      admission)
-  }
-}
-
-/** Offsets index the change ledger exactly like the MOR
-  * [[GraftChangeFeedStream]] — same retention/expiry discipline, same
-  * admission control. */
-class GraftDvChangeFeedStream(table: GraftDvTable, feedSchema: StructType,
-    requiredSchema: StructType,
-    protected val admission: GraftAdmission = GraftAdmission())
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with GraftLogStream {
-
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  protected def logEntries(from: Int, until: Int): Vector[GraftFileRef] = {
-    val st = table.stateNow
-    st.changeLog.slice(from - st.changeBase, until - st.changeBase)
-  }
-
-  protected def logWindow(): (Int, Int) = {
-    // a CDC stream tailing a table written by another process must
-    // observe foreign commits at every poll (ADVICE r11 discipline)
-    table.refreshFromDisk()
-    val st = table.stateNow
-    (st.changeBase, st.changeBase + st.changeLog.size)
-  }
-
-  override def initialOffset(): Offset =
-    GraftStreamOffset(table.stateNow.changeBase)
-  override def latestOffset(): Offset = GraftStreamOffset(logWindow()._2)
-  override def deserializeOffset(json: String): Offset =
-    GraftStreamOffset.parse(json)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GraftStreamOffset].i
-    val e = end.asInstanceOf[GraftStreamOffset].i
-    val st = table.stateNow
-    require(s >= st.changeBase,
-      s"change-feed offset $s has expired: retention kept " +
-        s"[${st.changeBase}, ${st.changeBase + st.changeLog.size})")
-    require(e <= st.changeBase + st.changeLog.size,
-      s"offset $e beyond change ledger " +
-        s"(${st.changeBase + st.changeLog.size})")
-    GraftDvChangeFeed.partitions(
-      st.changeLog.slice(s - st.changeBase, e - st.changeBase), table)
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftDvChangeFeedReaderFactory(feedSchema, requiredSchema)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 case class GraftDvChangeInsertPartition(path: String,

@@ -1400,10 +1400,22 @@ class GraftStorageSpec extends SparkSpec {
            TBLPROPERTIES ('graft.mode'='mor', 'graft.row_id'='k')""")
     sql("INSERT INTO gstore.default.fstr VALUES (1,'a')")
     sql("UPDATE gstore.default.fstr SET v = 'b' WHERE k = 1") // 1 change op
-    val t = tbl("fstr").asInstanceOf[graft.catalog.GraftDeltaTable]
-    val cdc = new graft.catalog.GraftChangeFeedStream(t, t.schema(), t.schema())
-    val app = new graft.catalog.GraftMicroBatchStream(t, t.schema(),
-      t.schema(), Array.empty)
+    // a MOR table streams row-level ops on `$changes`; the append log
+    // streams from a plain table's own readStream
+    sql("DROP TABLE IF EXISTS gstore.default.fstr_app")
+    sql("CREATE TABLE gstore.default.fstr_app (k BIGINT, v STRING)")
+    sql("INSERT INTO gstore.default.fstr_app VALUES (1,'a')")
+    def stream(name: String) =
+      spark.sessionState.catalogManager.catalog("gstore")
+        .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+        .loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(
+          Array("default"), name))
+        .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+        .newScanBuilder(
+          org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+        .build().toMicroBatchStream("")
+    val cdc = stream("fstr$changes")
+    val app = stream("fstr_app")
     val cdc0 = cdc.latestOffset().asInstanceOf[graft.catalog.GraftStreamOffset].i
     val app0 = app.latestOffset().asInstanceOf[graft.catalog.GraftStreamOffset].i
     // a SECOND DRIVER appends and deletes — the polling streams' handle
@@ -1411,6 +1423,7 @@ class GraftStorageSpec extends SparkSpec {
     graft.catalog.GraftCatalog.dropHandlesForTest()
     sql("INSERT INTO gstore.default.fstr VALUES (2,'c')")
     sql("DELETE FROM gstore.default.fstr WHERE k = 2")
+    sql("INSERT INTO gstore.default.fstr_app VALUES (2,'c')")
     val cdc1 = cdc.latestOffset().asInstanceOf[graft.catalog.GraftStreamOffset].i
     val app1 = app.latestOffset().asInstanceOf[graft.catalog.GraftStreamOffset].i
     assert(cdc1 == cdc0 + 1,
@@ -1418,6 +1431,7 @@ class GraftStorageSpec extends SparkSpec {
     assert(app1 == app0 + 1,
       s"append-log stream stalled at $app0 (got $app1) after a foreign append")
     sql("DROP TABLE gstore.default.fstr")
+    sql("DROP TABLE gstore.default.fstr_app")
   }
 
   test("ARRAY<STRUCT> columns: exact round-trip incl. null elements, " +
