@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Locale.ROOT decimal formatting for the JSON artifact — the
     * f-interpolator uses the JVM default locale, which renders "1,234"
@@ -9,44 +8,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NTZ fixture timestamps normalize via a session-tz-dependent cast;
-      // pin UTC so bench results match Verify's regardless of host tz.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Guide §2.2: let AQE coalesce small shuffle partitions BY SIZE.
-      // The Spark default parallelismFirst=true keeps tiny post-shuffle
-      // partitions at the session partition count to "maximize
-      // parallelism" — at sf0.1 that is 32 near-empty tasks per stage of
-      // every catalog DML cycle (measured: q259 3.46 s -> 3.02 s, q284
-      // 3.03 s -> 2.72 s with size-based coalescing). Scale-adaptive by
-      // construction: partitions are sized by advisoryPartitionSizeInBytes
-      // (64 MB default), not by any local core-count constant.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      // Advisory post-shuffle partition size for the size-based
-      // coalescing above, parameterised (SPARK_GRAFT_ADVISORY; guide
-      // §2.2/§9 suggests 64-256m at scale). Default = Spark's own 64m:
-      // a full-suite A/B vs 8m read 183.7 s vs 191.2 s — the CPU-heavy
-      // CoW rewrites prefer smaller partitions (q278 4.10 -> 3.37) but
-      // the MOR/DV feed cycles prefer the FEWER output files of larger
-      // ones (q210 2.17 -> 2.77, q268 1.70 -> 2.15), and 64m wins on
-      // totals and geomean.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
-      // Structural half of the r15 stall hunt: ContextCleaner only frees
-      // shuffle/broadcast/checkpoint state when the driver GCs, and a
-      // large mostly-idle heap can go 30+ min (the default periodicGC
-      // interval) without one — accumulated map-output state then slows
-      // scheduling session-wide. 2 min bounds the accumulation window for
-      // ANY long session on this engine, not just the bench (whose
-      // per-sample System.gc() nudge remains as belt-and-braces).
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Same loud pre-flight as Verify: a drifted fixture encoding must
     // fail the run, not time 156 garbage-input queries (round-7 lesson).

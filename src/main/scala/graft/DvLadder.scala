@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Deletion-vector DELETE-size ladder (VERDICT r14 item 3): how scan
   * cost grows with the fraction of rows tombstoned — 1% / 10% / 30% of
   * a fresh orders-shaped DV table positionally deleted, then a
@@ -20,16 +18,8 @@ import org.apache.spark.sql.SparkSession
 object DvLadder {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[graft.catalog.GraftCatalog].getName)
 
     spark.read.parquet(s"$sfDir/orders.parquet")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")

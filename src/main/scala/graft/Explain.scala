@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the formatted physical plan of every declared query — the plan
   * audit loop: check PushedFilters reach the scans, ReadSchema is pruned,
   * small dims broadcast, WholeStageCodegen spans are wide, and no
@@ -12,34 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Guide §2.2: let AQE coalesce small shuffle partitions BY SIZE.
-      // The Spark default parallelismFirst=true keeps tiny post-shuffle
-      // partitions at the session partition count to "maximize
-      // parallelism" — at sf0.1 that is 32 near-empty tasks per stage of
-      // every catalog DML cycle (measured: q259 3.46 s -> 3.02 s, q284
-      // 3.03 s -> 2.72 s with size-based coalescing). Scale-adaptive by
-      // construction: partitions are sized by advisoryPartitionSizeInBytes
-      // (64 MB default), not by any local core-count constant.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      // Advisory post-shuffle partition size for the size-based
-      // coalescing above, parameterised (SPARK_GRAFT_ADVISORY; guide
-      // §2.2/§9 suggests 64-256m at scale). Default = Spark's own 64m:
-      // a full-suite A/B vs 8m read 183.7 s vs 191.2 s — the CPU-heavy
-      // CoW rewrites prefer smaller partitions (q278 4.10 -> 3.37) but
-      // the MOR/DV feed cycles prefer the FEWER output files of larger
-      // ones (q210 2.17 -> 2.77, q268 1.70 -> 2.15), and 64m wins on
-      // totals and geomean.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.allDefs
       .filter(q => only.isEmpty || only.contains(q.name))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage breakdown — the measurement half of guide §1.
   * Runs each named query once warm (after one untimed run) with a
@@ -15,26 +14,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      // Advisory post-shuffle partition size for the size-based
-      // coalescing above, parameterised (SPARK_GRAFT_ADVISORY; guide
-      // §2.2/§9 suggests 64-256m at scale). Default = Spark's own 64m:
-      // a full-suite A/B vs 8m read 183.7 s vs 191.2 s — the CPU-heavy
-      // CoW rewrites prefer smaller partitions (q278 4.10 -> 3.37) but
-      // the MOR/DV feed cycles prefer the FEWER output files of larger
-      // ones (q210 2.17 -> 2.77, q268 1.70 -> 2.15), and 64m wins on
-      // totals and geomean.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.preflight(spark, sfDir)
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Catalog-scan constant-factor ladder (VERDICT r10 item 3): the same
   * rows as a plain parquet directory vs a managed catalog table,
   * read-only, x1 and x10 — the managed read path must stay within a
@@ -18,16 +16,8 @@ import org.apache.spark.sql.SparkSession
 object ScanLadder {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[graft.catalog.GraftCatalog].getName)
     import org.apache.spark.sql.functions._
 
     val work = java.nio.file.Files.createTempDirectory("scan-ladder-")

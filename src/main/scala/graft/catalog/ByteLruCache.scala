@@ -129,40 +129,3 @@ private[graft] object ByteLruCache {
     case _ => 32L // boxed Long / Integer
   }
 }
-
-/** Bounded parallel map for the driver-side per-file fold parses
-  * (round-18, guide §1/§5): after a DML wave every fresh DV/delta file
-  * is parsed ONCE (memo miss) on the driver — serially, that was
-  * ~5-10 ms × dozens of files on q275's profile. The parses are
-  * independent pure functions of immutable files, so a small fixed
-  * pool folds them concurrently; callers still APPLY results in commit
-  * order. Daemon threads; never more than 8 wide (driver-side metadata
-  * work must not compete with executor threads for the host). */
-private[catalog] object FoldPar {
-  private lazy val pool = java.util.concurrent.Executors.newFixedThreadPool(
-    8,
-    (r: Runnable) => {
-      val t = new Thread(r, "graft-fold")
-      t.setDaemon(true)
-      t
-    })
-
-  /** Order-preserving map; serial below 3 elements (pool handoff costs
-    * more than it saves on one or two files) and when already ON a
-    * fold thread (nested use must not deadlock the fixed pool). */
-  def map[A, B](in: Vector[A])(f: A => B): Vector[B] =
-    if (in.size < 3 ||
-        Thread.currentThread().getName.startsWith("graft-fold")) in.map(f)
-    else {
-      import scala.jdk.CollectionConverters._
-      val tasks: java.util.List[java.util.concurrent.Callable[B]] =
-        in.map(a => (() => f(a)): java.util.concurrent.Callable[B]).asJava
-      pool.invokeAll(tasks).asScala.map { fut =>
-        try fut.get()
-        catch { // keep the fold's own failure loud, not the wrapper
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      }.toVector
-    }
-}

@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{GraftSession, QueryDef, Tables}
 
 /** SQL-surface spelling of the CDC apply: the q131 changeset applied via
   * a real `MERGE INTO` statement against a [[GraftCatalog]] managed
@@ -77,8 +77,7 @@ object CatalogQueries {
     QueryDef(
       "q183_scripted_backfill",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.backfill")
         s.sql("""CREATE TABLE graft_cat.default.backfill
                  (mon INT, o_orderpriority STRING, n BIGINT,
@@ -251,8 +250,7 @@ object CatalogQueries {
     QueryDef(
       "q194_alter_add_column",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_alter")
         s.sql("""CREATE TABLE graft_cat.default.orders_alter
                  (o_orderkey BIGINT, o_totalprice DOUBLE)""")
@@ -345,8 +343,7 @@ object CatalogQueries {
     QueryDef(
       "q200_partitioned_table",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_part")
         s.sql("""CREATE TABLE graft_cat.default.orders_part
                  (o_orderkey BIGINT, o_orderpriority STRING,
@@ -414,8 +411,7 @@ object CatalogQueries {
     QueryDef(
       "q202_partition_lifecycle",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_po")
         s.sql("""CREATE TABLE graft_cat.default.orders_po
                  (o_orderkey BIGINT, o_orderpriority STRING,
@@ -466,8 +462,7 @@ object CatalogQueries {
     QueryDef(
       "q203_decimal_catalog",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_dec")
         s.sql("""CREATE TABLE graft_cat.default.orders_dec
                  (o_orderkey BIGINT, o_orderpriority STRING,
@@ -551,8 +546,7 @@ object CatalogQueries {
     QueryDef(
       "q204_mor_alter_add_column",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_malter")
         Tables(s, d, "orders")
           .select("o_orderkey", "o_totalprice")
@@ -603,8 +597,7 @@ object CatalogQueries {
     QueryDef(
       "q205_partitioned_mor_lifecycle",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_pmor")
         s.sql("""CREATE TABLE graft_cat.default.orders_pmor
                  (o_orderkey BIGINT, o_orderpriority STRING,
@@ -715,8 +708,7 @@ object CatalogQueries {
       "q207_expire_snapshots",
       (s, d) => {
         import org.apache.spark.sql.functions.{col, lit}
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_gc")
         s.sql("""CREATE TABLE graft_cat.default.orders_gc
                  (o_orderkey BIGINT, o_totalprice DOUBLE)
@@ -767,8 +759,7 @@ object CatalogQueries {
     QueryDef(
       "q208_embedding_catalog",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.emb_store")
         Tables(s, d, "embeddings").createOrReplaceTempView("q208_emb")
         s.sql("""CREATE TABLE graft_cat.default.emb_store
@@ -816,8 +807,7 @@ object CatalogQueries {
     QueryDef(
       "q209_sorted_table",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_sorted")
         s.sql("""CREATE TABLE graft_cat.default.orders_sorted
                  (o_orderkey BIGINT, o_custkey BIGINT,
@@ -912,8 +902,7 @@ object CatalogQueries {
     QueryDef(
       "q211_corpus_curation",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus")
         Tables(s, d, "documents").createOrReplaceTempView("q211_docs")
         s.sql("""CREATE TABLE graft_cat.default.corpus
@@ -967,8 +956,7 @@ object CatalogQueries {
     QueryDef(
       "q212_storage_partitioned_join",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.nation_cust")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.nation_supp")
         s.sql("""CREATE TABLE graft_cat.default.nation_cust
@@ -1032,8 +1020,7 @@ object CatalogQueries {
     QueryDef(
       "q213_schema_evolution",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.evo")
         Tables(s, d, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -1089,8 +1076,7 @@ object CatalogQueries {
     QueryDef(
       "q214_chunk_store",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.chunk_store")
         Tables(s, d, "embeddings").createOrReplaceTempView("q214_emb")
         s.sql("""CREATE TABLE graft_cat.default.chunk_store
@@ -1141,8 +1127,7 @@ object CatalogQueries {
     QueryDef(
       "q215_zorder_table",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_z")
         s.sql("""CREATE TABLE graft_cat.default.orders_z
                  (o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)
@@ -1188,8 +1173,7 @@ object CatalogQueries {
     QueryDef(
       "q216_neardup_curation",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus_nd")
         Tables(s, d, "documents").createOrReplaceTempView("q216_docs")
         s.sql("""CREATE TABLE graft_cat.default.corpus_nd
@@ -1237,8 +1221,7 @@ object CatalogQueries {
     QueryDef(
       "q217_write_audit_publish",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_wap")
         Tables(s, d, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -1305,8 +1288,7 @@ object CatalogQueries {
     QueryDef(
       "q218_bucketed_join",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_bkt")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.lineitem_bkt")
         s.sql("""CREATE TABLE graft_cat.default.orders_bkt
@@ -1364,8 +1346,7 @@ object CatalogQueries {
     QueryDef(
       "q219_type_widening",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_wide")
         s.sql("""CREATE TABLE graft_cat.default.orders_wide
                  (o_orderkey BIGINT, lnum INT, price DECIMAL(12,4))""")
@@ -1421,8 +1402,7 @@ object CatalogQueries {
     QueryDef(
       "q220_nested_catalog",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_nest")
         s.sql("""CREATE TABLE graft_cat.default.orders_nest
                  (o_orderkey BIGINT,
@@ -1471,8 +1451,7 @@ object CatalogQueries {
     QueryDef(
       "q221_column_defaults",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_dfl")
         s.sql("""CREATE TABLE graft_cat.default.orders_dfl
                  (o_orderkey BIGINT, priority STRING,
@@ -1517,8 +1496,7 @@ object CatalogQueries {
     QueryDef(
       "q222_rollback",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_rb")
         s.sql("""CREATE TABLE graft_cat.default.orders_rb
                  (o_orderkey BIGINT, o_orderpriority STRING)""")
@@ -1568,8 +1546,7 @@ object CatalogQueries {
     QueryDef(
       "q223_check_constraint",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_ck")
         s.sql("""CREATE TABLE graft_cat.default.orders_ck
                  (o_orderkey BIGINT, price DECIMAL(12,4),
@@ -1625,8 +1602,7 @@ object CatalogQueries {
     QueryDef(
       "q224_runtime_file_skipping",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.lineitem_rt")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_rt")
         s.sql("""CREATE TABLE graft_cat.default.lineitem_rt
@@ -1670,8 +1646,7 @@ object CatalogQueries {
     QueryDef(
       "q225_files_census",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_census")
         s.sql("""CREATE TABLE graft_cat.default.orders_census
                  (o_orderkey BIGINT, o_orderpriority STRING)
@@ -1709,8 +1684,7 @@ object CatalogQueries {
     QueryDef(
       "q226_agg_pushdown",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_agg")
         Tables(s, d, "orders").createOrReplaceTempView("q226_orders")
         s.sql("""CREATE TABLE graft_cat.default.orders_agg
@@ -1749,8 +1723,7 @@ object CatalogQueries {
     QueryDef(
       "q227_topn_pushdown",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_topn")
         Tables(s, d, "orders").createOrReplaceTempView("q227_orders")
         s.sql("""CREATE TABLE graft_cat.default.orders_topn
@@ -1792,8 +1765,7 @@ object CatalogQueries {
     QueryDef(
       "q228_bloom_skipping",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_bloom")
         Tables(s, d, "orders").createOrReplaceTempView("q228_orders")
         s.sql("""CREATE TABLE graft_cat.default.orders_bloom
@@ -1833,8 +1805,7 @@ object CatalogQueries {
     QueryDef(
       "q229_incremental_mv",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.mv_src")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.mv_totals")
         Tables(s, d, "orders").createOrReplaceTempView("q229_orders")
@@ -1919,8 +1890,7 @@ object CatalogQueries {
     QueryDef(
       "q230_zero_copy_clone",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_dev")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_main")
         Tables(s, d, "orders").createOrReplaceTempView("q230_orders")
@@ -1972,8 +1942,7 @@ object CatalogQueries {
     QueryDef(
       "q231_grouped_agg_pushdown",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_part_agg")
         Tables(s, d, "orders").createOrReplaceTempView("q231_orders")
         s.sql("""CREATE TABLE graft_cat.default.orders_part_agg
@@ -2013,8 +1982,7 @@ object CatalogQueries {
     QueryDef(
       "q232_merge_schema_evolution",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_mse")
         Tables(s, d, "orders").createOrReplaceTempView("q232_orders")
         s.sql("""CREATE TABLE graft_cat.default.orders_mse
@@ -2061,8 +2029,7 @@ object CatalogQueries {
     QueryDef(
       "q233_partition_scoped_compact",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_psc")
         Tables(s, d, "orders").createOrReplaceTempView("q233_orders")
         s.sql("""CREATE TABLE graft_cat.default.orders_psc
@@ -2103,8 +2070,7 @@ object CatalogQueries {
     QueryDef(
       "q234_atomic_replace_table",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         Tables(s, d, "orders").createOrReplaceTempView("q234_orders")
         s.sql("""CREATE OR REPLACE TABLE graft_cat.default.orders_mart AS
                  SELECT o_orderpriority, COUNT(*) AS n
@@ -2144,8 +2110,7 @@ object CatalogQueries {
     QueryDef(
       "q235_small_file_packing",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_pack")
         Tables(s, d, "orders").createOrReplaceTempView("q235_orders")
         s.sql("""CREATE TABLE graft_cat.default.orders_pack
@@ -2192,8 +2157,7 @@ object CatalogQueries {
     QueryDef(
       "q236_target_file_size",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_tfs")
         Tables(s, d, "orders").repartition(24)
           .createOrReplaceTempView("q236_orders")
@@ -2274,8 +2238,7 @@ object CatalogQueries {
     QueryDef(
       "q238_incremental_ingest",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus_live")
         Tables(s, d, "documents").createOrReplaceTempView("q238_docs")
         s.sql("""CREATE TABLE graft_cat.default.corpus_live
@@ -2347,8 +2310,7 @@ object CatalogQueries {
     QueryDef(
       "q239_stream_admission_control",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_ac")
         Tables(s, d, "orders").createOrReplaceTempView("q239_orders")
         s.sql("""CREATE TABLE graft_cat.default.orders_ac
@@ -2405,8 +2367,7 @@ object CatalogQueries {
     QueryDef(
       "q241_prefix_pushdown",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_pfx")
         s.sql("""CREATE TABLE graft_cat.default.orders_pfx
                  (okey STRING, o_totalprice DOUBLE)
@@ -2444,8 +2405,7 @@ object CatalogQueries {
     QueryDef(
       "q242_partition_exact_agg",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_pea")
         s.sql("""CREATE TABLE graft_cat.default.orders_pea
                  (o_orderkey BIGINT, o_totalprice DOUBLE,
@@ -2482,8 +2442,7 @@ object CatalogQueries {
     QueryDef(
       "q243_multi_namespace",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP NAMESPACE IF EXISTS graft_cat.analytics CASCADE")
         s.sql("DROP NAMESPACE IF EXISTS graft_cat.staging CASCADE")
         s.sql("CREATE NAMESPACE graft_cat.staging")
@@ -2522,8 +2481,7 @@ object CatalogQueries {
     QueryDef(
       "q244_zorder_bloom_compose",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_zb")
         s.sql("""CREATE TABLE graft_cat.default.orders_zb
                  (o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)
@@ -2574,8 +2532,7 @@ object CatalogQueries {
     QueryDef(
       "q245_partitions_table",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_pt")
         s.sql("""CREATE TABLE graft_cat.default.orders_pt
                  (o_orderkey BIGINT, o_orderpriority STRING)
@@ -2607,8 +2564,7 @@ object CatalogQueries {
       "q246_offset_pushdown",
       (s, d) => {
         import org.apache.spark.sql.functions.{col, ntile}
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_ofs")
         s.sql("CREATE TABLE graft_cat.default.orders_ofs (k BIGINT)")
         val w = org.apache.spark.sql.expressions.Window.orderBy("o_orderkey")
@@ -2652,8 +2608,7 @@ object CatalogQueries {
     QueryDef(
       "q248_nested_add_column",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.docs_ev")
         s.sql("""CREATE TABLE graft_cat.default.docs_ev
                  (doc_id BIGINT,
@@ -2717,8 +2672,7 @@ object CatalogQueries {
     QueryDef(
       "q249_retune_properties",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_rt2")
         s.sql("""CREATE TABLE graft_cat.default.orders_rt2
                  (o_orderkey BIGINT, o_totalprice DOUBLE)""")
@@ -2774,8 +2728,7 @@ object CatalogQueries {
     QueryDef(
       "q250_hidden_partitioning",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.events_hp")
         s.sql("""CREATE TABLE graft_cat.default.events_hp
                  (event_id BIGINT, ts TIMESTAMP, event_type STRING,
@@ -2831,8 +2784,7 @@ object CatalogQueries {
     QueryDef(
       "q251_mv_auto_rewrite",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_mvb")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_mvv")
         s.sql("""CREATE TABLE graft_cat.default.orders_mvb
@@ -2912,8 +2864,7 @@ object CatalogQueries {
     QueryDef(
       "q252_branch_fast_forward",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS " +
           "graft_cat.default.orders_br_branch_repair")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_br")
@@ -2980,8 +2931,7 @@ object CatalogQueries {
     QueryDef(
       "q254_sql_views",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("CALL graft_cat.system.drop_view('default.pri_stats')")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_vw")
         s.sql("""CREATE TABLE graft_cat.default.orders_vw
@@ -3041,8 +2991,7 @@ object CatalogQueries {
     QueryDef(
       "q255_column_reorder",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_mv_pos")
         s.sql("""CREATE TABLE graft_cat.default.orders_mv_pos
                  (o_orderkey BIGINT, o_orderpriority STRING,
@@ -3087,8 +3036,7 @@ object CatalogQueries {
     QueryDef(
       "q256_partition_evolution",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.events_pe")
         s.sql("""CREATE TABLE graft_cat.default.events_pe
                  (event_id BIGINT, ts TIMESTAMP, value DOUBLE)""")
@@ -3151,8 +3099,7 @@ object CatalogQueries {
     QueryDef(
       "q262_incremental_changes",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_inc")
         Tables(s, d, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -3245,8 +3192,7 @@ object CatalogQueries {
     QueryDef(
       "q263_merge_by_source",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         Tables(s, d, "orders")
           .select("o_orderkey", "o_totalprice")
           .createOrReplaceTempView("q263_orders")
@@ -3342,8 +3288,7 @@ object CatalogQueries {
     QueryDef(
       "q264_deletion_vectors",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_dv")
         Tables(s, d, "orders")
           .select("o_orderkey", "o_totalprice")
@@ -3437,8 +3382,7 @@ object CatalogQueries {
     QueryDef(
       "q265_analyze_stats",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_an")
         Tables(s, d, "orders")
           .select("o_orderkey", "o_custkey", "o_orderpriority")
@@ -3481,8 +3425,7 @@ object CatalogQueries {
     QueryDef(
       "q266_generated_columns",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_gen")
         Tables(s, d, "orders")
           .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -3537,8 +3480,7 @@ object CatalogQueries {
     QueryDef(
       "q267_dv_curation",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus_dv")
         Tables(s, d, "documents").createOrReplaceTempView("q267_docs")
         s.sql("""CREATE TABLE graft_cat.default.corpus_dv
@@ -3604,8 +3546,7 @@ object CatalogQueries {
     QueryDef(
       "q268_dv_change_apply",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus_cdc")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus_tok")
         Tables(s, d, "documents").createOrReplaceTempView("q268_docs")
@@ -3693,8 +3634,7 @@ object CatalogQueries {
     QueryDef(
       "q269_mv_star2",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         Seq("orders_s2f", "cust_s2d", "prio_s2d", "orders_s2mv")
           .foreach(t => s.sql(s"DROP TABLE IF EXISTS graft_cat.default.$t"))
         Tables(s, d, "orders").createOrReplaceTempView("q269_orders")
@@ -3831,8 +3771,7 @@ object CatalogQueries {
     QueryDef(
       "q270_timestamp_changes",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_tsc")
         Tables(s, d, "orders")
           .select("o_orderkey", "o_totalprice")
@@ -3908,8 +3847,7 @@ object CatalogQueries {
     QueryDef(
       "q271_analyze_histogram",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_hf")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_hd")
         Tables(s, d, "orders").createOrReplaceTempView("q271_orders")
@@ -3971,8 +3909,7 @@ object CatalogQueries {
     QueryDef(
       "q272_dv_streaming_upsert",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_up")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_cdcfeed")
         Tables(s, d, "orders").createOrReplaceTempView("q272_orders")
@@ -4050,8 +3987,7 @@ object CatalogQueries {
     QueryDef(
       "q273_dv_feed_mv",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus_fm")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus_fm_mv")
         Tables(s, d, "documents").createOrReplaceTempView("q273_docs")
@@ -4166,8 +4102,7 @@ object CatalogQueries {
     QueryDef(
       "q274_incremental_append",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_app")
         Tables(s, d, "orders").createOrReplaceTempView("q274_orders")
         s.sql("""CREATE TABLE graft_cat.default.orders_app
@@ -4239,8 +4174,7 @@ object CatalogQueries {
     QueryDef(
       "q275_ann_index_feed",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         Seq("emb_cdc", "ann_cells", "ann_idx")
           .foreach(t => s.sql(s"DROP TABLE IF EXISTS graft_cat.default.$t"))
         Tables(s, d, "embeddings").createOrReplaceTempView("q275_src")
@@ -4441,8 +4375,7 @@ object CatalogQueries {
     QueryDef(
       "q276_analyze_mcv",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.ord_mcv")
         Tables(s, d, "orders").createOrReplaceTempView("q276_orders")
         s.sql("""CREATE TABLE graft_cat.default.ord_mcv
@@ -4505,8 +4438,7 @@ object CatalogQueries {
     QueryDef(
       "q277_auto_salted_join",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.fact_skew")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.dim_skew")
         Tables(s, d, "orders").createOrReplaceTempView("q277_orders")
@@ -4575,8 +4507,7 @@ object CatalogQueries {
     QueryDef(
       "q278_cow_dml_feed",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_cdf")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_cdf_mir")
         Tables(s, d, "orders").createOrReplaceTempView("q278_orders")
@@ -4668,8 +4599,7 @@ object CatalogQueries {
     QueryDef(
       "q279_atomic_publish",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         Seq("fact_ap", "dim_ap", "fact_ap_branch_pub",
           "dim_ap_branch_pub", "fact_ap_branch_pub2",
           "dim_ap_branch_pub2").foreach(t =>
@@ -4773,8 +4703,7 @@ object CatalogQueries {
     QueryDef(
       "q280_mv_count_distinct",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_cd")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_cd_mv")
         Tables(s, d, "orders").createOrReplaceTempView("q280_orders")
@@ -4864,8 +4793,7 @@ object CatalogQueries {
     QueryDef(
       "q281_ann_index_sq",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         Seq("emb_sq", "sq_cells", "sq_idx")
           .foreach(t => s.sql(s"DROP TABLE IF EXISTS graft_cat.default.$t"))
         Tables(s, d, "embeddings").createOrReplaceTempView("q281_src")
@@ -5100,8 +5028,7 @@ object CatalogQueries {
     QueryDef(
       "q282_cow_feed_mv",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus_cfm")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus_cfm_mv")
         Tables(s, d, "documents").createOrReplaceTempView("q282_docs")
@@ -5217,8 +5144,7 @@ object CatalogQueries {
     QueryDef(
       "q283_refresh_stats",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.ord_rstats")
         Tables(s, d, "orders").createOrReplaceTempView("q283_orders")
         s.sql("""CREATE TABLE graft_cat.default.ord_rstats
@@ -5304,8 +5230,7 @@ object CatalogQueries {
     QueryDef(
       "q284_cow_stream_apply",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus_cowf")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.corpus_cowtok")
         Tables(s, d, "documents").createOrReplaceTempView("q284_docs")
@@ -5400,8 +5325,7 @@ object CatalogQueries {
     QueryDef(
       "q285_ann_reindex",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         Seq("emb_rx", "cells_rx", "idx_rx",
             "cells_rx_branch_reindex", "idx_rx_branch_reindex")
           .foreach(t => s.sql(s"DROP TABLE IF EXISTS graft_cat.default.$t"))
@@ -5586,8 +5510,7 @@ object CatalogQueries {
     QueryDef(
       "q286_consistent_cut_publish",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         Seq("orders_ccb_branch_cut", "orders_ccv_branch_cut",
             "orders_ccb", "orders_ccv")
           .foreach(t => s.sql(s"DROP TABLE IF EXISTS graft_cat.default.$t"))
@@ -5710,8 +5633,7 @@ object CatalogQueries {
     QueryDef(
       "q258_mv_rollup",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_rub")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_ruv")
         s.sql("""CREATE TABLE graft_cat.default.orders_rub
@@ -5796,8 +5718,7 @@ object CatalogQueries {
     QueryDef(
       "q259_transform_dml",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.events_td")
         s.sql("""CREATE TABLE graft_cat.default.events_td
                  (event_id BIGINT, ts TIMESTAMP, value DOUBLE)
@@ -5871,8 +5792,7 @@ object CatalogQueries {
     QueryDef(
       "q260_mv_join",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_jf")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.cust_jd")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_jmv")
@@ -5965,8 +5885,7 @@ object CatalogQueries {
     QueryDef(
       "q261_branch_lifecycle",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_bl_branch_fill")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_bl_branch_junk")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.orders_bl")
@@ -6019,7 +5938,7 @@ object CatalogQueries {
     * q195/q196 apply their own single-statement DML on top). */
   private def seedMorPlain(s: org.apache.spark.sql.SparkSession,
       d: String, table: String, prefix: String): Unit = {
-    s.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
+    GraftSession.registerCatalog(s)
     s.sql(s"DROP TABLE IF EXISTS graft_cat.default.$table")
     Tables(s, d, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -6057,7 +5976,7 @@ object CatalogQueries {
     * always exactly [seed, merged] no matter how often queries ran. */
   private def seedAndMergeInto(s: org.apache.spark.sql.SparkSession,
       d: String, table: String, tblProps: String, prefix: String): Unit = {
-    s.conf.set("spark.sql.catalog.graft_cat", classOf[GraftCatalog].getName)
+    GraftSession.registerCatalog(s)
     s.sql(s"DROP TABLE IF EXISTS graft_cat.default.$table")
     Tables(s, d, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")

@@ -14,6 +14,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.util.Par
+
 /** MERGE-ON-READ managed table — the delta-based half of Spark's
   * row-level-operation seam ([[GraftTable]] is the copy-on-write half).
   *
@@ -323,13 +325,13 @@ object GraftDeltaTable {
       tableSchema.fields.map(f =>
         s"${f.name}:${f.dataType.catalogString}:" +
           GraftStorage.fieldId(f).getOrElse(-1)).mkString(",")
-    // PARSE in parallel (FoldPar; fresh post-commit files are all memo
+    // PARSE in parallel (Par; fresh post-commit files are all memo
     // misses and each parse is an independent pure function), APPLY
     // serially below in commit order. One UnsafeProjection per parsed
     // file: generated projections are single-threaded (mutable row
     // buffer), and codegen is cached by expression tree so the repeat
     // creations are lookups, not recompiles.
-    val parsedAll = FoldPar.map(delta) { f =>
+    val parsedAll = Par.map(delta) { f =>
       deltaParseCache.getOrCompute(
         (f.path, f.rows, f.bytes, schemaSig)) {
           val dataProj = UnsafeProjection.create(

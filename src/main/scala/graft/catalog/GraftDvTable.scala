@@ -14,6 +14,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.util.Par
+
 /** DELETION-VECTOR managed table (`graft.mode = 'dv'`) — the
   * position-delete half of the merge-on-read trade (Iceberg v3 deletion
   * vectors / Delta Lake DVs), for tables with NO natural row-id column:
@@ -474,7 +476,7 @@ object GraftDvTable {
     * bounded by compaction cadence, the eq sibling of [[foldVectors]]. */
   private[catalog] def foldEq(eq: Vector[GraftFileRef],
       tableSchema: StructType): Vector[EqDeletes] =
-    FoldPar.map(eq) { f =>
+    Par.map(eq) { f =>
       val names = tableSchema.fieldNames.toIndexedSeq
       val fields = f.cols.map { c =>
         val o = GraftStorage.ordinalByName(names, c)
@@ -555,8 +557,8 @@ object GraftDvTable {
     // per-file fold from the memo (one parquet read per distinct file
     // per JVM — see the memo comment above)
     // parallel first-parse: after a DML wave every file is a memo miss;
-    // the parses are independent (FoldPar), results merge in order below
-    val perFile: Vector[Map[String, Array[Long]]] = FoldPar.map(delta) { f =>
+    // the parses are independent (Par), results merge in order below
+    val perFile: Vector[Map[String, Array[Long]]] = Par.map(delta) { f =>
       vecFoldCache.getOrCompute((f.path, f.rows, f.bytes)) {
         val m = new java.util.HashMap[String, java.util.TreeSet[java.lang.Long]]()
         val it = new GraftStorage.FileIterator(f.path, f.cols, DvSchema,

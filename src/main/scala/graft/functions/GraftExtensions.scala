@@ -50,8 +50,8 @@ object GraftExtensions {
     // match would never fire there (ADVICE r13 — the registration was
     // dead code); and analysis is already over, so view expansion is
     // impossible. Both require the
-    // spark.sql.extensions=GraftExtensions config (as Verify/Bench and
-    // every spec session set) — on a vanilla session the MV rewrite
+    // spark.sql.extensions=GraftExtensions config (as every
+    // graft.GraftSession sets) — on a vanilla session the MV rewrite
     // simply never applies (correctness never depends on it) and
     // reading `cat.ns.view` fails loudly with TABLE_OR_VIEW_NOT_FOUND,
     // never silently wrong.

@@ -85,31 +85,39 @@ object Dag {
       }
     }
 
+    def runWithRetries(s: Stage): Status = {
+      var attempt = 0
+      var outcome: Status = null
+      while (outcome == null) {
+        attempt += 1
+        try { s.run(); outcome = Succeeded }
+        catch {
+          case e: Throwable if attempt > s.maxRetries =>
+            outcome = Failed(attempt, e)
+          case _: Throwable => // retry
+        }
+      }
+      outcome
+    }
+
+    // a throwing isDone guard fails its stage (0 attempts) instead of
+    // killing the pool task, which would leave `done` short forever
     def submit(s: Stage): Unit = pool.execute { () =>
       if (depsFailed(s)) finish(s.name, Skipped)
-      else if (s.isDone()) { started.add(s.name); finish(s.name, AlreadyDone) }
       else {
         started.add(s.name)
-        var attempt = 0
-        var outcome: Status = null
-        while (outcome == null) {
-          attempt += 1
-          try { s.run(); outcome = Succeeded }
-          catch {
-            case e: Throwable if attempt > s.maxRetries =>
-              outcome = Failed(attempt, e)
-            case _: Throwable => // retry
-          }
-        }
-        finish(s.name, outcome)
+        finish(s.name,
+          try if (s.isDone()) AlreadyDone else runWithRetries(s)
+          catch { case e: Throwable => Failed(0, e) })
       }
     }
 
     val roots = stages.filter(_.deps.isEmpty)
     require(roots.nonEmpty || stages.isEmpty, "cycle: no root stages")
-    lock.synchronized { roots.foreach(submit) }
-    done.await()
-    pool.shutdown()
+    try {
+      lock.synchronized { roots.foreach(submit) }
+      done.await()
+    } finally pool.shutdown()
     // any stage never reaching the queue means a cycle among non-roots
     require(status.size == stages.size,
       s"cycle detected among: ${stages.map(_.name).filterNot(status.containsKey)}")

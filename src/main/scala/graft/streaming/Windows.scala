@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.{QueryDef, Tables}
+import graft.{GraftSession, QueryDef, Tables}
 import graft.util.Det._
 
 /** Event-time windowing + Structured Streaming (SURVEY.md §2.2 streaming
@@ -1336,8 +1336,7 @@ object Windows {
     QueryDef(
       "q257_stream_hidden_partition",
       (s, d) => withStreamConf(s) {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          classOf[graft.catalog.GraftCatalog].getName)
+        GraftSession.registerCatalog(s)
         val base = stableDir("q257", d)
         val ckpt = base.resolve("ckpt")
         s.sql("DROP TABLE IF EXISTS graft_cat.default.events_hp_live")
@@ -1370,8 +1369,7 @@ object Windows {
     * prove epoch-replay idempotence. */
   private[graft] def streamToTable(s: SparkSession, d: String,
       fresh: Boolean): Unit = {
-    s.conf.set("spark.sql.catalog.graft_cat",
-      classOf[graft.catalog.GraftCatalog].getName)
+    GraftSession.registerCatalog(s)
     val base = stableDir("q190", d)
     val ckpt = base.resolve("ckpt")
     if (fresh) {

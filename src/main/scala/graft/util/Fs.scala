@@ -1,6 +1,6 @@
 package graft.util
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, LinkOption, Path}
 
 /** Tiny NIO helpers for the streaming working dirs.
   *
@@ -24,54 +24,23 @@ object Fs {
     } finally st.close()
   }
 
-  /** Recursive delete (dirs and files; no-op if absent). A directory's
-    * immediate children delete in parallel (round-18, guide §1: DROP
-    * TABLE of a many-file table spent ~360 ms of q281's wall in this
-    * walk single-threaded; per-file unlink latency dominates, and
-    * unlinks of sibling entries are independent). Ordering is
-    * preserved where it matters — a directory is only removed after
-    * every child delete has completed. */
-  def rmTree(p: Path): Unit =
-    if (Files.exists(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-      if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-        val kids = children(p)
-        // fan out only from the caller's thread: a nested level going
-        // parallel again would cascade 8^depth short-lived threads
-        if (kids.size >= 8 &&
-            !Thread.currentThread().getName.startsWith("graft-fs-par"))
-          kids.par(8).foreach(rmTree)
-        else kids.foreach(rmTree)
-      }
-      Files.delete(p)
-    }
-
-  /** Minimal bounded-parallel foreach over a Seq (no external
-    * parallel-collections dependency): `n` worker threads drain an
-    * index counter. Exceptions propagate (first one wins). */
-  implicit final class ParSeq[A](private val xs: Seq[A]) {
-    def par(n: Int): ParRunner[A] = new ParRunner(xs, n)
-  }
-  final class ParRunner[A](xs: Seq[A], n: Int) {
-    def foreach(f: A => Unit): Unit = {
-      // indexed once: `children` returns a List, whose size and apply(i)
-      // are O(n) each, so indexing it per step would make the drain O(n²)
-      val items = xs.toIndexedSeq
-      val size = items.size
-      val idx = new java.util.concurrent.atomic.AtomicInteger(0)
-      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
-      val threads = (0 until math.min(n, size)).map { _ =>
-        val t = new Thread(() => {
-          var i = idx.getAndIncrement()
-          while (i < size && err.get() == null) {
-            try f(items(i))
-            catch { case e: Throwable => err.compareAndSet(null, e): Unit }
-            i = idx.getAndIncrement()
-          }
-        }, "graft-fs-par")
-        t.setDaemon(true); t.start(); t
-      }
-      threads.foreach(_.join())
-      if (err.get() != null) throw err.get()
+  /** Recursive delete (dirs and files; no-op if absent). The files of
+    * the whole tree delete on [[Par]] (DROP TABLE of a many-file table
+    * spent ~360 ms of q281's wall in this walk single-threaded; per-file
+    * unlink latency dominates, and the unlinks are independent), then
+    * the directories, each after everything beneath it. */
+  def rmTree(p: Path): Unit = {
+    val files = Vector.newBuilder[Path]
+    val dirs = Vector.newBuilder[Path]
+    def walk(q: Path): Unit =
+      if (Files.isDirectory(q, LinkOption.NOFOLLOW_LINKS)) {
+        children(q).foreach(walk)
+        dirs += q
+      } else files += q
+    if (Files.exists(p, LinkOption.NOFOLLOW_LINKS)) {
+      walk(p)
+      Par.foreach(files.result())(Files.deleteIfExists(_): Unit)
+      dirs.result().foreach(Files.deleteIfExists(_): Unit)
     }
   }
 }

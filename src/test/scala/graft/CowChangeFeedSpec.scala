@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.Row
 
 /** Incremental change feed on plain copy-on-write tables
-  * ([[graft.catalog.GraftCowChangeFeedTable]]): `<t>$changes` serves
+  * ([[graft.catalog.GraftChangeFeedTable]] over the CoW change source):
+  * `<t>$changes` serves
   * an append-only range as `(__op = 0, __ver, <data>)` rows (Iceberg's
   * incremental append scan) and, on a table with a declared
   * `graft.row_id`, a DML-bearing range as a per-commit FILE-DIFF

@@ -58,6 +58,22 @@ class DagSpec extends SparkSpec {
     }
   }
 
+  test("a throwing isDone guard fails its stage and skips its dependents") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val run = Future(Dag.run(Seq(
+      Stage("guarded", isDone = () => throw new IllegalStateException("guard"))(
+        () => ()),
+      Stage("after_guarded", Seq("guarded"))(() => ()))))
+    val r = Await.result(run, 30.seconds)
+    r.status("guarded") match {
+      case Failed(0, e: IllegalStateException) => assert(e.getMessage == "guard")
+      case other => fail(s"expected Failed(0, guard), got $other")
+    }
+    assert(r.status("after_guarded") == Skipped)
+  }
+
   test("cycles are rejected") {
     val e = intercept[IllegalArgumentException] {
       Dag.run(Seq(Stage("a", Seq("b"))(() => ()), Stage("b", Seq("a"))(() => ())))

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.Row
 
 /** Change feed on DELETION-VECTOR tables
-  * ([[graft.catalog.GraftDvChangeFeedTable]], VERDICT r14 item 1): the
+  * ([[graft.catalog.GraftChangeFeedTable]] over the DV change source,
+  * VERDICT r14 item 1): the
   * id-less CDC surface — `<table>$changes` rows are
   * `(__op, __ver, <data cols>)`, where positional deletes are resolved
   * to FULL delete-rows against the base file at read time and inserts

@@ -11,14 +11,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** The factory's engine on 4 local cores. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val s = GraftSession.builder(4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
