@@ -4396,13 +4396,8 @@ object CatalogQueries {
               r.getString(1)
           }.getOrElse(throw new IllegalStateException(
             "analyze did not persist graft.stats.mcv.k"))
-        val Array(tot, list) = enc.split('|')
-        val rows = ("__total", tot.toLong) +: list.split(';').toSeq.map {
-          e =>
-            val i = e.lastIndexOf(':')
-            (java.net.URLDecoder.decode(e.take(i), "UTF-8"),
-              e.drop(i + 1).toLong)
-        }
+        val (tot, list) = GraftMcv.decode(enc)
+        val rows = ("__total", tot) +: list
         import s.implicits._
         rows.toDF("value", "cnt").orderBy(col("cnt").desc, col("value"))
       },
@@ -5177,13 +5172,8 @@ object CatalogQueries {
               r.getString(1)
           }.getOrElse(throw new IllegalStateException(
             "refresh_stats did not keep graft.stats.mcv.k"))
-        val Array(tot, list) = enc.split('|')
-        val rows = ("__total", tot.toLong) +: list.split(';').toSeq.map {
-          e =>
-            val i = e.lastIndexOf(':')
-            (java.net.URLDecoder.decode(e.take(i), "UTF-8"),
-              e.drop(i + 1).toLong)
-        }
+        val (tot, list) = GraftMcv.decode(enc)
+        val rows = ("__total", tot) +: list
         import s.implicits._
         rows.toDF("value", "cnt").orderBy(col("cnt").desc, col("value"))
       },
@@ -5570,13 +5560,8 @@ object CatalogQueries {
               "graft.stats.mcv.o_orderpriority" => r.getString(1)
           }.getOrElse(throw new IllegalStateException(
             "publish did not transfer graft.stats.mcv.o_orderpriority"))
-        val Array(tot, list) = enc.split('|')
-        val statRows = ("__total", tot.toLong) +:
-          list.split(';').toSeq.map { e =>
-            val i = e.lastIndexOf(':')
-            (java.net.URLDecoder.decode(e.take(i), "UTF-8"),
-              e.drop(i + 1).toLong)
-          }
+        val (tot, list) = GraftMcv.decode(enc)
+        val statRows = ("__total", tot) +: list
         import s.implicits._
         statRows.toDF("k", "v1")
           .selectExpr("'c_stats' AS phase", "k", "v1",

@@ -94,6 +94,26 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       }.toArray
     }
 
+  /** The metadata companions `<table>$<suffix>` (Iceberg-style
+    * naming), keyed by suffix: the one list [[loadTable]] resolves and
+    * [[stageNew]] reserves. */
+  private val metaTables: Seq[(String, GraftMetaTable.Kind)] = Seq(
+    "$files" -> GraftMetaTable.Files,
+    "$history" -> GraftMetaTable.History,
+    "$partitions" -> GraftMetaTable.Partitions,
+    "$refs" -> GraftMetaTable.refs(branchesOf))
+
+  /** `t`'s branches as (branch name, base version), ordered by name. */
+  private def branchesOf(t: GraftTable): Seq[(String, String)] =
+    GraftCatalog.withIndex(warehouse) { idx =>
+      idx -> idx.toSeq.collect {
+        case (k, e) if e.extraProps.get("graft.branch.of")
+            .contains(t.name()) =>
+          (e.extraProps.getOrElse("graft.branch.name", k.split('/').last),
+            e.extraProps.getOrElse("graft.branch.base_version", "-1"))
+      }.sortBy(_._1)
+    }
+
   override def loadTable(ident: Identifier): Table = {
     // `<table>$changes`: the change-feed companion of every table kind
     // (Iceberg-style metadata-table naming) — a read-only view over the
@@ -109,47 +129,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           s"$$changes is not available on ${idxKey(base)}")
       }
     }
-    // `<table>$files`: the file-census metadata companion (works on
-    // both CoW and MOR tables)
-    if (ident.name().endsWith("$files")) {
-      val base = Identifier.of(ident.namespace(),
-        ident.name().stripSuffix("$files"))
-      return new GraftFilesTable(idxKey(ident),
-        loadTable(base).asInstanceOf[GraftTable])
-    }
-    // `<table>$history`: one row per RETAINED snapshot — the commit
-    // audit trail in plain SQL (versions, sizes, delta volume, tags)
-    if (ident.name().endsWith("$history")) {
-      val base = Identifier.of(ident.namespace(),
-        ident.name().stripSuffix("$history"))
-      return new GraftHistoryTable(idxKey(ident),
-        loadTable(base).asInstanceOf[GraftTable])
-    }
-    // `<table>$refs`: every named ref — tags (in-state pins) and
-    // branches (writable sibling tables) — with version and status
-    if (ident.name().endsWith("$refs")) {
-      val base = Identifier.of(ident.namespace(),
-        ident.name().stripSuffix("$refs"))
-      val bt = loadTable(base).asInstanceOf[GraftTable]
-      val branches = GraftCatalog.withIndex(warehouse) { idx =>
-        idx -> idx.toSeq.collect {
-          case (k, e) if e.extraProps.get("graft.branch.of")
-              .contains(idxKey(base)) =>
-            (e.extraProps.getOrElse("graft.branch.name",
-              k.split('/').last),
-              k,
-              e.extraProps.getOrElse("graft.branch.base_version", "-1"))
-        }.sortBy(_._1)
-      }
-      return new GraftRefsTable(idxKey(ident), bt, branches)
-    }
-    // `<table>$partitions`: the per-partition census (file/row/byte
-    // counts per live partition tuple, folded from the commit refs)
-    if (ident.name().endsWith("$partitions")) {
-      val base = Identifier.of(ident.namespace(),
-        ident.name().stripSuffix("$partitions"))
-      return new GraftPartitionsTable(idxKey(ident),
-        loadTable(base).asInstanceOf[GraftTable])
+    // `<table>$files`, `$history`, `$partitions`, `$refs`: the
+    // driver-local metadata companions, one [[GraftMetaTable]] each
+    metaTables.find { case (sfx, _) => ident.name().endsWith(sfx) } match {
+      case Some((sfx, kind)) =>
+        val base = Identifier.of(ident.namespace(),
+          ident.name().stripSuffix(sfx))
+        return loadTable(base) match {
+          case t: GraftTable => new GraftMetaTable(idxKey(ident), t, kind)
+          case _ => throw new UnsupportedOperationException(
+            s"$sfx is not available on ${idxKey(base)}")
+        }
+      case None =>
     }
     val cached = GraftCatalog.tables.get(regKey(ident))
     if (cached != null) cached
@@ -356,13 +347,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def stageNew(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String])
       : (GraftTable, GraftCatalog.IndexEntry) = {
-    require(!ident.name().endsWith("$changes") &&
-        !ident.name().endsWith("$files") &&
-        !ident.name().endsWith("$history") &&
-        !ident.name().endsWith("$partitions") &&
-        !ident.name().endsWith("$refs"),
-      "table names ending in $changes/$files/$history/$partitions/" +
-        "$refs are reserved for metadata companion views")
+    val suffixes = "$changes" +: metaTables.map(_._1)
+    require(!suffixes.exists(ident.name().endsWith),
+      s"table names ending in ${suffixes.mkString("/")} are reserved " +
+        "for metadata companion views")
     GraftStorage.validate(schema)
     val mode = properties.getOrDefault("graft.mode", "cow")
       .toLowerCase match {
@@ -2214,15 +2202,9 @@ class GraftTable(ident: String, val dir: NioPath,
         extraProps.flatMap {
           case (k, value) if k.startsWith("graft.stats.mcv.") =>
             try {
-              val Array(tot, listEnc) = value.split('|')
-              val vs = listEnc.split(';').toVector.map { e =>
-                val i = e.lastIndexOf(':')
-                (java.net.URLDecoder.decode(e.take(i), "UTF-8"),
-                  e.drop(i + 1).toLong)
-              }
+              val (tot, vs) = GraftMcv.decode(value)
               if (vs.isEmpty) None
-              else Some(k.stripPrefix("graft.stats.mcv.") ->
-                (tot.toLong, vs))
+              else Some(k.stripPrefix("graft.stats.mcv.") -> (tot, vs))
             } catch { case _: Exception => None }
           case _ => None
         }
@@ -3700,216 +3682,6 @@ class GraftSnapshotTable(ident: String, tableSchema: StructType,
     new GraftScanBuilder(tableSchema, files, None)
 }
 
-/** `<table>$files` — the file-census metadata companion (Iceberg's
-  * `files` table): one row per live data/delta file with its exact
-  * row/byte counts, bucket id, recorded row-group count, and the full
-  * per-column stats map — the table an operator joins or aggregates
-  * to answer "is this table healthy?" (small-file counts, skew, stats
-  * coverage) in plain SQL instead of spelunking the log. Driver-local
-  * by construction (it IS driver metadata): a [[LocalScan]], so no
-  * executor work is scheduled. Re-reads the base table's on-disk
-  * state at scan build, so foreign commits are visible. */
-class GraftFilesTable(ident: String, base: GraftTable)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.LocalScan
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-
-  override def name(): String = ident
-  override def schema(): StructType = GraftFilesTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new LocalScan {
-      base.refreshFromDisk()
-      private val snap = base.stateNow.current
-      private def row(f: GraftFileRef, kind: String): InternalRow = {
-        val keys = f.stats.keys.toArray
-        new GenericInternalRow(Array[Any](
-          org.apache.spark.unsafe.types.UTF8String.fromString(f.path),
-          org.apache.spark.unsafe.types.UTF8String.fromString(kind),
-          f.rows, f.bytes,
-          if (f.bucket >= 0) f.bucket else null,
-          f.groups.size,
-          new ArrayBasedMapData(
-            new GenericArrayData(keys.map(k =>
-              org.apache.spark.unsafe.types.UTF8String.fromString(k): Any)),
-            new GenericArrayData(keys.map { k =>
-              val st = f.stats(k)
-              new GenericInternalRow(Array[Any](
-                st.min.map(org.apache.spark.unsafe.types.UTF8String
-                  .fromString).orNull,
-                st.max.map(org.apache.spark.unsafe.types.UTF8String
-                  .fromString).orNull,
-                st.nulls, st.ndv)): Any
-            }))))
-      }
-      private val data: Array[InternalRow] =
-        (snap.map(_.files).getOrElse(Vector.empty).map(row(_, "base")) ++
-          snap.map(_.deltaFiles).getOrElse(Vector.empty)
-            .map(row(_, "delta"))).toArray
-      override def rows(): Array[InternalRow] = data
-      override def readSchema(): StructType = GraftFilesTable.Schema
-      override def description(): String =
-        s"GraftFilesTable($ident, ${data.length} live files)"
-    }
-}
-
-object GraftFilesTable {
-  import org.apache.spark.sql.types._
-  val Schema: StructType = StructType(Seq(
-    StructField("path", StringType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("n_rows", LongType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("bucket", IntegerType, nullable = true),
-    StructField("n_row_groups", IntegerType, nullable = false),
-    StructField("stats", MapType(StringType, StructType(Seq(
-      StructField("min", StringType, nullable = true),
-      StructField("max", StringType, nullable = true),
-      StructField("nulls", LongType, nullable = false),
-      StructField("ndv", LongType, nullable = false))), valueContainsNull = false),
-      nullable = false)))
-}
-
-/** `<table>$partitions` — the per-partition census (Iceberg's
-  * `partitions` metadata table): one row per live partition tuple with
-  * exact file/row/byte counts, derived ENTIRELY from the commit refs
-  * (identity-partitioned writes pin each file's partition values as
-  * min == max stats). Driver-local LocalScan — the "is partition X
-  * skewed / piled up with small files?" question on a 100-TB table
-  * costs zero cluster work. Files whose partition tuple is unpinnable
-  * (null partition values) census under a NULL rendering rather than
-  * being silently dropped. Rejects unpartitioned tables loudly. */
-class GraftPartitionsTable(ident: String, base: GraftTable)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.LocalScan
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-
-  require(base.partitionCols.nonEmpty,
-    s"$$partitions requires a partitioned table " +
-      s"(${base.name()} has no PARTITIONED BY columns)")
-
-  override def name(): String = ident
-  override def schema(): StructType = GraftPartitionsTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new LocalScan {
-      base.refreshFromDisk()
-      // honesty gate: a live MOR delta log holds rows the base-file
-      // census cannot attribute to partitions (delta files are not
-      // partition-split) — refusing beats silently under-counting
-      require(base.stateNow.current.forall(_.deltaFiles.isEmpty),
-        s"$$partitions on a merge-on-read table requires an empty " +
-          "delta log (delta rows are not partition-attributable from " +
-          "metadata) — CALL system.compact first")
-      private val pfs = base.partFields
-      private val sch = base.stateNow.schema
-      private def key(f: GraftFileRef): String =
-        pfs.map { pf =>
-          // identity: pinned means min == max; transform: pinned means
-          // min and max land in the SAME transform bucket (a one-day
-          // file's span is within the day) — rendered Iceberg-style
-          // (days(ts)=2024-03-15)
-          val o = GraftStorage.ordinalByName(
-            sch.fieldNames.toIndexedSeq, pf.col)
-          val dt = sch.fields(o).dataType
-          val pinned = f.stats.get(pf.col).collect {
-            case st if st.nulls == 0 && st.min.isDefined =>
-              if (pf.isIdentity) {
-                if (st.min == st.max) Some(st.min.get) else None
-              } else {
-                val kmin = pf.eval(dt,
-                  GraftStorage.statFromString(dt, st.min.get))
-                val kmax = pf.eval(dt,
-                  GraftStorage.statFromString(dt, st.max.get))
-                if (kmin == kmax) Some(pf.render(dt, kmin)) else None
-              }
-          }.flatten
-          s"${pf.encoded}=${pinned.getOrElse("null")}"
-        }.mkString("/")
-      private val data: Array[InternalRow] =
-        base.stateNow.current.map(_.files).getOrElse(Vector.empty)
-          .groupBy(key).toArray.sortBy(_._1)
-          .map { case (k, fs) =>
-            new GenericInternalRow(Array[Any](
-              org.apache.spark.unsafe.types.UTF8String.fromString(k),
-              fs.size.toLong, fs.map(_.rows).sum, fs.map(_.bytes).sum))
-              : InternalRow
-          }
-      override def rows(): Array[InternalRow] = data
-      override def readSchema(): StructType = GraftPartitionsTable.Schema
-      override def description(): String =
-        s"GraftPartitionsTable($ident, ${data.length} partitions)"
-    }
-}
-
-/** `<table>$refs` — every named ref of the table: TAGS (in-state
-  * version pins — WAP publish points, clone/rollback anchors) and
-  * BRANCHES (writable zero-copy sibling tables,
-  * [[GraftCatalog.createBranch]]), each with its pinned/base version
-  * and, for branches, whether main has moved since the fork (the
-  * fast-forward eligibility a reviewer checks before publishing).
-  * Driver-local LocalScan, like the other metadata companions. */
-class GraftRefsTable(ident: String, base: GraftTable,
-    branches: Seq[(String, String, String)])
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.LocalScan
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  override def name(): String = ident
-  override def schema(): StructType = GraftRefsTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new LocalScan {
-      base.refreshFromDisk()
-      private val st = base.stateNow
-      private val curV = st.current.map(_.version).getOrElse(-1)
-      private def row(name: String, kind: String, v: Long,
-          status: String): InternalRow =
-        new GenericInternalRow(Array[Any](
-          UTF8String.fromString(name), UTF8String.fromString(kind),
-          v, UTF8String.fromString(status)))
-      private val data: Array[InternalRow] =
-        (st.tags.toSeq.sortBy(_._1).map { case (n, v) =>
-          row(n, "tag", v.toLong,
-            if (v == curV) "current" else "pinned")
-        } ++ branches.map { case (n, _, bv) =>
-          row(n, "branch", bv.toLong,
-            if (bv.toIntOption.contains(curV)) "fast_forwardable"
-            else "diverged")
-        }).toArray
-      override def rows(): Array[InternalRow] = data
-      override def readSchema(): StructType = GraftRefsTable.Schema
-      override def description(): String =
-        s"GraftRefsTable($ident, ${data.length} refs)"
-    }
-}
-
-object GraftRefsTable {
-  import org.apache.spark.sql.types._
-  val Schema: StructType = StructType(Seq(
-    StructField("ref", StringType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("version", LongType, nullable = false),
-    StructField("status", StringType, nullable = false)))
-}
-
-object GraftPartitionsTable {
-  import org.apache.spark.sql.types._
-  val Schema: StructType = StructType(Seq(
-    StructField("partition", StringType, nullable = false),
-    StructField("n_files", LongType, nullable = false),
-    StructField("n_rows", LongType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false)))
-}
-
 /** MANIFEST-SERVED AGGREGATE PUSHDOWN (`SupportsPushDownAggregates`):
   * an unfiltered, ungrouped COUNT(*) / COUNT(col) / MIN(col) / MAX(col)
   * over a managed table is answered from the commit refs' EXACT
@@ -4119,72 +3891,6 @@ private[catalog] object GraftAggPushdown {
     }
     Some((out, rows.result(), descOut))
   }
-}
-
-/** The scan a fully-pushed aggregation plans to: the precomputed result
-  * rows (one, or one per pinned group), served driver-locally
-  * ([[LocalScan]] — Spark plans a LocalTableScan, zero executor tasks,
-  * zero file I/O). */
-class GraftAggScan(out: StructType, values: Array[Array[Any]], nFiles: Int,
-    aggDesc: String)
-    extends org.apache.spark.sql.connector.read.LocalScan {
-  override def rows(): Array[InternalRow] = values.map(v =>
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(v)
-      : InternalRow)
-  override def readSchema(): StructType = out
-  override def description(): String =
-    s"GraftAggScan(manifest-served [$aggDesc] over $nFiles file refs, " +
-      s"${values.length} result rows, zero file I/O)"
-}
-
-/** `<table>$history` — the snapshot-history metadata companion
-  * (Iceberg's `history`/`snapshots` tables): one row per RETAINED
-  * snapshot with commit time, file/delta census, row totals, and the
-  * tags pinning it — the audit a reviewer reads before time-traveling
-  * or rolling back, in plain SQL. Driver-local ([[LocalScan]]);
-  * re-reads disk state at scan build so foreign commits show. */
-class GraftHistoryTable(ident: String, base: GraftTable)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.LocalScan
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-
-  override def name(): String = ident
-  override def schema(): StructType = GraftHistoryTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new LocalScan {
-      base.refreshFromDisk()
-      private val st = base.stateNow
-      private val data: Array[InternalRow] = st.snapshots.map { sn =>
-        val tags = st.tags.collect {
-          case (n, v) if v == sn.version => n
-        }.toSeq.sorted.mkString(",")
-        new GenericInternalRow(Array[Any](
-          sn.version.toLong, sn.tsMillis,
-          sn.files.size.toLong, sn.deltaFiles.size.toLong,
-          sn.files.map(_.rows).sum, sn.deltaFiles.map(_.rows).sum,
-          org.apache.spark.unsafe.types.UTF8String.fromString(tags)))
-          : InternalRow
-      }.toArray
-      override def rows(): Array[InternalRow] = data
-      override def readSchema(): StructType = GraftHistoryTable.Schema
-      override def description(): String =
-        s"GraftHistoryTable($ident, ${data.length} retained snapshots)"
-    }
-}
-
-object GraftHistoryTable {
-  import org.apache.spark.sql.types._
-  val Schema: StructType = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("ts_millis", LongType, nullable = false),
-    StructField("n_files", LongType, nullable = false),
-    StructField("n_delta_files", LongType, nullable = false),
-    StructField("base_rows", LongType, nullable = false),
-    StructField("delta_ops", LongType, nullable = false),
-    StructField("tags", StringType, nullable = false)))
 }
 
 /** Scan builder with COLUMN PRUNING, FILTER PUSHDOWN, and FILE
@@ -4502,7 +4208,12 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
   override def build(): Scan = {
     servedAgg match {
       case Some((out, values, desc)) =>
-        return new GraftAggScan(out, values, effFiles.size, desc)
+        // the precomputed result rows, served driver-locally
+        return new GraftLocalScan(out, values.map(v =>
+          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(v)
+            : InternalRow),
+          s"GraftAggScan(manifest-served [$desc] over ${effFiles.size} " +
+            s"file refs, ${values.length} result rows, zero file I/O)")
       case None => ()
     }
     val base = narrowedByLimit.getOrElse(effFiles)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
-import org.apache.spark.sql.connector.read.{LocalScan, Scan}
+import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * data files referenced by no retained snapshot and no append-log
   * entry (see [[GraftTable.expireOrphanFiles]]).
   *
-  * Each call returns a one-row summary through a [[LocalScan]] — the
+  * Each call returns a one-row summary through a [[GraftLocalScan]] — the
   * driver-visible audit record (files/ops before and after), which is
   * exactly the payload a scheduled maintenance job logs. */
 object GraftProcedures {
@@ -37,39 +37,34 @@ object GraftProcedures {
       .comment("namespace-qualified table name, e.g. 'default.events'")
       .build())
 
+  /** Parse "ns.name" (`what` = "table" or "view") into an identifier. */
+  private def qualifiedIdent(q: String, what: String = "table")
+      : Identifier = {
+    val parts = q.split('.')
+    require(parts.length >= 2,
+      s"expected namespace-qualified $what name, got '$q'")
+    Identifier.of(parts.init, parts.last)
+  }
+
   /** Resolve "ns.table" inside `cat` (the procedure's own catalog). */
   private def resolve(cat: GraftCatalog, qualified: String): (Identifier, GraftTable) = {
-    val parts = qualified.split('.')
-    require(parts.length >= 2,
-      s"expected namespace-qualified table name, got '$qualified'")
-    val ident = Identifier.of(parts.init, parts.last)
+    val ident = qualifiedIdent(qualified)
     (ident, cat.loadTable(ident).asInstanceOf[GraftTable])
   }
 
-  private def summaryScan(fields: Seq[(String, Long)]): Scan = {
-    val schema = StructType(fields.map { case (n, _) =>
-      StructField(n, LongType, nullable = false) })
-    val row = new GenericInternalRow(fields.map(_._2: Any).toArray)
-    new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = schema
-      override def description(): String =
-        s"GraftProcedureResult(${schema.catalogString})"
-    }
-  }
-
-  private def summaryScanStr(fields: Seq[(String, String)]): Scan = {
-    val schema = StructType(fields.map { case (n, _) =>
-      StructField(n, StringType, nullable = false) })
-    val row = new GenericInternalRow(fields.map(f =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(f._2): Any)
-      .toArray)
-    new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = schema
-      override def description(): String =
-        s"GraftProcedureResult(${schema.catalogString})"
-    }
+  /** A one-row result: Long values as BIGINT columns, any other value
+    * as a STRING column. */
+  private def summaryScan(fields: Seq[(String, Any)]): Scan = {
+    val schema = StructType(fields.map {
+      case (n, _: Long) => StructField(n, LongType, nullable = false)
+      case (n, _) => StructField(n, StringType, nullable = false)
+    })
+    val row = new GenericInternalRow(fields.map {
+      case (_, v: Long) => v
+      case (_, v) => UTF8String.fromString(v.toString)
+    }.toArray)
+    new GraftLocalScan(schema, Array(row),
+      s"GraftProcedureResult(${schema.catalogString})")
   }
 
   private abstract class GraftProcedure(procName: String, descr: String,
@@ -147,23 +142,12 @@ object GraftProcedures {
           "counts and row totals per retained commit (the audit view a " +
           "reviewer reads before time-traveling)") {
         override protected def run(input: InternalRow): Scan = {
+          // the `$history` table's scan: disk state re-read, all columns
           val (_, t) = resolve(cat, input.getUTF8String(0).toString)
-          val hist = StructType(Seq(
-            StructField("version", LongType, nullable = false),
-            StructField("ts_millis", LongType, nullable = false),
-            StructField("n_files", LongType, nullable = false),
-            StructField("n_delta_files", LongType, nullable = false),
-            StructField("base_rows", LongType, nullable = false)))
-          val out = t.stateNow.snapshots.map(s =>
-            new GenericInternalRow(Array[Any](s.version.toLong, s.tsMillis,
-              s.files.size.toLong, s.deltaFiles.size.toLong,
-              s.files.map(_.rows).sum)): InternalRow).toArray
-          new LocalScan {
-            override def rows(): Array[InternalRow] = out
-            override def readSchema(): StructType = hist
-            override def description(): String =
-              s"GraftHistory(${out.length} retained snapshots)"
-          }
+          val hist = new GraftMetaTable(s"${t.name()}$$history", t,
+            GraftMetaTable.History).scan()
+          new GraftLocalScan(hist.readSchema(), hist.rows(),
+            s"GraftHistory(${hist.rows().length} retained snapshots)")
         }
       }
       case "tag" => new GraftProcedure("tag",
@@ -220,13 +204,8 @@ object GraftProcedures {
           val dstQ = input.getUTF8String(1).toString
           val at = if (input.isNullAt(2)) None
             else Some(input.getUTF8String(2).toString)
-          def ident(q: String): Identifier = {
-            val parts = q.split('.')
-            require(parts.length >= 2,
-              s"expected namespace-qualified table name, got '$q'")
-            Identifier.of(parts.init, parts.last)
-          }
-          val (nFiles, nRows) = cat.cloneTable(ident(srcQ), ident(dstQ), at)
+          val (nFiles, nRows) = cat.cloneTable(qualifiedIdent(srcQ),
+            qualifiedIdent(dstQ), at)
           summaryScan(Seq(
             "files_linked" -> nFiles,
             "rows" -> nRows))
@@ -255,10 +234,7 @@ object GraftProcedures {
           val sqlText = input.getUTF8String(1).toString
           val replace = !input.isNullAt(2) &&
             input.getUTF8String(2).toString.equalsIgnoreCase("true")
-          val parts = q.split('.')
-          require(parts.length >= 2,
-            s"expected namespace-qualified view name, got '$q'")
-          val ident = Identifier.of(parts.init, parts.last)
+          val ident = qualifiedIdent(q, "view")
           val spark = SparkSession.active
           // refuse definitions over TEMP views: they analyze fine in
           // the CREATING session, then vanish — or bind to a DIFFERENT
@@ -286,7 +262,7 @@ object GraftProcedures {
             java.util.Collections.emptyMap[String, String]())
           val v = if (replace) cat.replaceView(info, true)
             else cat.createView(info)
-          summaryScanStr(Seq(
+          summaryScan(Seq(
             "view" -> v.name(),
             "columns" -> v.schema().fieldNames.mkString(",")))
         }
@@ -299,11 +275,8 @@ object GraftProcedures {
           .build())) {
         override protected def run(input: InternalRow): Scan = {
           val q = input.getUTF8String(0).toString
-          val parts = q.split('.')
-          require(parts.length >= 2,
-            s"expected namespace-qualified view name, got '$q'")
-          val dropped = cat.dropView(Identifier.of(parts.init, parts.last))
-          summaryScanStr(Seq("dropped" -> dropped.toString))
+          val dropped = cat.dropView(qualifiedIdent(q, "view"))
+          summaryScan(Seq("dropped" -> dropped.toString))
         }
       }
       case "show_views" => new GraftProcedure("show_views",
@@ -335,12 +308,8 @@ object GraftProcedures {
                   v.currentNamespace().toSeq).mkString(".")),
                 utf8(v.query()))): InternalRow
             }
-          new LocalScan {
-            override def rows(): Array[InternalRow] = out
-            override def readSchema(): StructType = schema
-            override def description(): String =
-              s"GraftShowViews(${out.length} views)"
-          }
+          new GraftLocalScan(schema, out,
+            s"GraftShowViews(${out.length} views)")
         }
       }
       case "create_branch" => new GraftProcedure("create_branch",
@@ -356,13 +325,10 @@ object GraftProcedures {
           .build()) {
         override protected def run(input: InternalRow): Scan = {
           val qualified = input.getUTF8String(0).toString
-          val parts = qualified.split('.')
-          require(parts.length >= 2,
-            s"expected namespace-qualified table name, got '$qualified'")
-          val ident = Identifier.of(parts.init, parts.last)
+          val ident = qualifiedIdent(qualified)
           val branch = input.getUTF8String(1).toString
           val (branchTable, nf, nr) = cat.createBranch(ident, branch)
-          summaryScanStr(Seq(
+          summaryScan(Seq(
             "branch_table" -> branchTable,
             "files_linked" -> nf.toString,
             "rows" -> nr.toString))
@@ -382,15 +348,12 @@ object GraftProcedures {
           .build()) {
         override protected def run(input: InternalRow): Scan = {
           val qualified = input.getUTF8String(0).toString
-          val parts = qualified.split('.')
-          require(parts.length >= 2,
-            s"expected namespace-qualified table name, got '$qualified'")
-          val ident = Identifier.of(parts.init, parts.last)
+          val ident = qualifiedIdent(qualified)
           val branch = input.getUTF8String(1).toString
           val force = !input.isNullAt(2) &&
             input.getUTF8String(2).toString.equalsIgnoreCase("true")
           val (branchTable, dropped) = cat.dropBranch(ident, branch, force)
-          summaryScanStr(Seq(
+          summaryScan(Seq(
             "branch_table" -> branchTable,
             "dropped" -> dropped.toString))
         }
@@ -407,10 +370,7 @@ object GraftProcedures {
           .build()) {
         override protected def run(input: InternalRow): Scan = {
           val qualified = input.getUTF8String(0).toString
-          val parts = qualified.split('.')
-          require(parts.length >= 2,
-            s"expected namespace-qualified table name, got '$qualified'")
-          val ident = Identifier.of(parts.init, parts.last)
+          val ident = qualifiedIdent(qualified)
           val branch = input.getUTF8String(1).toString
           val (nf, nr) = cat.fastForward(ident, branch)
           val (_, t) = resolve(cat, qualified)
@@ -443,13 +403,10 @@ object GraftProcedures {
           val branch = input.getUTF8String(1).toString
           val specs = input.getUTF8String(0).toString.split(',')
             .map(_.trim).filter(_.nonEmpty).toSeq.map { q =>
-              val parts = q.split('.')
-              require(parts.length >= 2,
-                s"expected namespace-qualified table name, got '$q'")
-              (Identifier.of(parts.init, parts.last), branch)
+              (qualifiedIdent(q), branch)
             }
           val published = cat.publishTables(specs)
-          summaryScanStr(
+          summaryScan(
             published.map { case (n, nf, nr) =>
               n -> s"files=$nf rows=$nr" } :+
               ("tables_published" -> published.size.toString))
@@ -647,9 +604,8 @@ object GraftProcedures {
             val total = s.table(s"${cat.name()}.$qualified")
               .where(s"`$c` IS NOT NULL").count()
             if (top.isEmpty) None
-            else Some(c -> (s"$total|" + top.map(r =>
-              java.net.URLEncoder.encode(r.getString(0), "UTF-8") +
-                ":" + r.getLong(1)).mkString(";")))
+            else Some(c -> GraftMcv.encode(total,
+              top.toSeq.map(r => r.getString(0) -> r.getLong(1))))
           }
           // the hist/mcv passes ran after the NDV drift check: re-check
           // so a commit landing during THEM can't stamp stale artifacts
@@ -691,12 +647,8 @@ object GraftProcedures {
               UTF8String.fromString(c), row.getLong(i), ver.toLong))
               : InternalRow
           }.toArray
-          new LocalScan {
-            override def rows(): Array[InternalRow] = outRows
-            override def readSchema(): StructType = out
-            override def description(): String =
-              s"GraftAnalyzeResult(${cols.mkString(", ")})"
-          }
+          new GraftLocalScan(out, outRows,
+            s"GraftAnalyzeResult(${cols.mkString(", ")})")
         }
       }
       // INCREMENTAL STATISTICS MAINTENANCE (VERDICT r16 item 4): the
@@ -760,19 +712,8 @@ object GraftProcedures {
           val slice = s.read.option("from_version", statsVer.toString)
             .table(s"${cat.name()}.$feedName")
           val allProps = props.asScala.toMap
-          def decodeMcv(enc: String): (Long, Vector[(String, Long)]) = {
-            val Array(tot, listEnc) = enc.split('|')
-            (tot.toLong, listEnc.split(';').toVector.map { e =>
-              val i = e.lastIndexOf(':')
-              (java.net.URLDecoder.decode(e.take(i), "UTF-8"),
-                e.drop(i + 1).toLong)
-            })
-          }
           def encodeMcv(total: Long, vs: Seq[(String, Long)]): String =
-            s"$total|" + vs.sortBy { case (v, c) => (-c, v) }.map {
-              case (v, c) =>
-                java.net.URLEncoder.encode(v, "UTF-8") + ":" + c
-            }.mkString(";")
+            GraftMcv.encode(total, vs.sortBy { case (v, c) => (-c, v) })
           /** Exact delta refresh of one (value -> count) list. `bound`
             * caps any unlisted value's pre-wave count — the analyze-time
             * K-th count on the first refresh, then the PERSISTED running
@@ -834,7 +775,7 @@ object GraftProcedures {
               k.stripPrefix("graft.stats.mcv.") -> v
           }
           val refreshedMcv = mcvCols.map { case (c, enc) =>
-            val (totalOld, listed) = decodeMcv(enc)
+            val (totalOld, listed) = GraftMcv.decode(enc)
             // first refresh: the analyze-time K-th count bounds every
             // unlisted value (it missed the list); afterwards the
             // persisted running bound carries the accumulated slack
@@ -1114,7 +1055,7 @@ object GraftProcedures {
           val tbl = s"\nTBLPROPERTIES (${kv.mkString(", ")})"
           val ddl = s"CREATE TABLE ${cat.name()}.$qualified (\n$cols)" +
             partClause + tbl
-          summaryScanStr(Seq("table" -> qualified, "ddl" -> ddl))
+          summaryScan(Seq("table" -> qualified, "ddl" -> ddl))
         }
       }
       case other => throw new UnsupportedOperationException(
@@ -1146,4 +1087,24 @@ object GraftProcedures {
         Identifier.of(Array("system"), "show_views"),
         Identifier.of(Array("system"), "tag"))
     else Array.empty
+}
+
+/** The persisted most-common-value list `graft.stats.mcv.<column>`:
+  * `total|v:c;v:c`, the not-null row count and then (value, count)
+  * pairs, values URL-encoded (a key may contain the separators). */
+object GraftMcv {
+  /** Encode `values` in the order given. */
+  def encode(total: Long, values: Seq[(String, Long)]): String =
+    s"$total|" + values.map { case (v, c) =>
+      java.net.URLEncoder.encode(v, "UTF-8") + ":" + c
+    }.mkString(";")
+
+  /** Decode an [[encode]]d list; throws on a malformed value. */
+  def decode(enc: String): (Long, Vector[(String, Long)]) = {
+    val Array(tot, listEnc) = enc.split('|')
+    (tot.toLong, listEnc.split(';').toVector.map { e =>
+      val i = e.lastIndexOf(':')
+      (java.net.URLDecoder.decode(e.take(i), "UTF-8"), e.drop(i + 1).toLong)
+    })
+  }
 }
