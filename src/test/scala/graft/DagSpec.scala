@@ -81,6 +81,21 @@ class DagSpec extends SparkSpec {
     assert(e.getMessage.toLowerCase.contains("cycle"))
   }
 
+  test("a cycle below a root stage is rejected before anything runs") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val ran = new AtomicInteger(0)
+    val run = Future(Dag.run(Seq(
+      Stage("r")(() => ran.incrementAndGet()),
+      Stage("a", Seq("r", "b"))(() => ()),
+      Stage("b", Seq("a"))(() => ()))))
+    val e = intercept[IllegalArgumentException](Await.result(run, 30.seconds))
+    assert(e.getMessage.contains("cycle") && e.getMessage.contains("a") &&
+      e.getMessage.contains("b"), e.getMessage)
+    assert(ran.get == 0, "the root ran before the cycle was refused")
+  }
+
   test("the real 4-stage fraud pipeline runs under the DAG and re-runs as no-ops") {
     val work = java.nio.file.Files.createTempDirectory("graft_dag_e2e_").toString
     val (r1, a) = graft.pipeline.FraudPipeline.dag(spark, sfDir, work)
