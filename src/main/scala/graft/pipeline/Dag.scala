@@ -64,8 +64,9 @@ object Dag {
 
     // Kahn over the static graph before anything runs: a stage on a
     // cycle never reaches indegree 0, so the run would wait forever
+    val roots = stages.filter(_.deps.isEmpty)
     val left = indeg.clone()
-    val ready = mutable.Queue(stages.filter(_.deps.isEmpty).map(_.name): _*)
+    val ready = mutable.Queue(roots.map(_.name): _*)
     while (ready.nonEmpty)
       dependents.getOrElse(ready.dequeue(), Nil).foreach { d2 =>
         left(d2) -= 1
@@ -124,7 +125,6 @@ object Dag {
       }
     }
 
-    val roots = stages.filter(_.deps.isEmpty)
     try {
       lock.synchronized { roots.foreach(submit) }
       done.await()
