@@ -1,7 +1,12 @@
 package graft.pipeline
 
+import scala.util.Try
+
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.classification.ProbabilisticClassificationModel
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector => MLVector}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -26,9 +31,10 @@ import graft.streaming.Replay
   *  3. produce: throttled replay of the test split as JSON-lines files —
   *     the sealed-env Kafka topic (producer.py:30-43, graft.streaming.Replay);
   *  4. predict: Structured Streaming file source → schema'd JSON decode →
-  *     loaded PipelineModel.transform → to_json projection carrying
-  *     actual_label + predicted_label side by side → checkpointed file
-  *     sink (predict.py:22-53, output shape tasks/README.md:108-116).
+  *     the loaded model's feature stages → the broadcast classifier's
+  *     `predict` → to_json projection carrying actual_label +
+  *     predicted_label side by side → checkpointed file sink
+  *     (predict.py:22-53, output shape tasks/README.md:108-116).
   *     Like predict.py, which loads the model once and then scores a
   *     long-running stream, the model is loaded once per saved version
   *     per JVM: every later call against an unchanged model directory
@@ -38,6 +44,13 @@ import graft.streaming.Replay
   *     walked with `FileSystem.listStatus`, which reads no permissions
   *     (`listFiles` would fork an `ls -ld` per file on the local
   *     filesystem).
+  *     The classifier reaches the tasks the same way: once per saved
+  *     version, as a broadcast. `PipelineModel.transform` would build its
+  *     prediction UDFs as closures over the forest itself, so every
+  *     micro-batch would Java-serialize the whole forest twice before
+  *     its tasks launch (the closure check and the task binary) and
+  *     deserialize it in each task; the scoring UDF here closes over the
+  *     broadcast handle only.
   *
   * Every stage is cluster-shaped: no collect() (replay streams via
   * toLocalIterator), checkpointed exactly-once sink, schema-enforced
@@ -87,14 +100,23 @@ object FraudPipeline {
     Artifacts(modelDir, topicDir, s"$workDir/predictions", n)
   }
 
-  /** Loaded models, keyed by model directory plus a fingerprint of its
-    * saved files, so a re-saved model (new UUID-named part files) misses.
-    * A miss drops the directory's stale entry: at most one model per
-    * directory, and the whole memo is bounded by bytes. Never handed to
-    * callers, so sharing one instance across calls is safe. */
+  /** A loaded model and a broadcast of its last stage, the classifier. */
+  private final case class Loaded(
+      model: PipelineModel,
+      classifier: Broadcast[ProbabilisticClassificationModel[MLVector, _]])
+
+  /** Loaded models, keyed by model directory, Spark application (a
+    * broadcast belongs to the SparkContext that made it) and a
+    * fingerprint of the saved files, so a re-saved model (new UUID-named
+    * part files) misses. A miss drops the directory's stale entry: at
+    * most one model per directory, and the whole memo is bounded by
+    * bytes. A dropped entry's broadcast is never destroyed here, since a
+    * running query may still read it; Spark's ContextCleaner reclaims it
+    * once nothing references it. Never handed to callers, so sharing one
+    * instance across calls is safe. */
   private val models =
-    new ByteLruCache[(String, Vector[(String, Long, Long)]), PipelineModel](
-      () => ByteLruCache.DefaultBytes, m => SizeEstimator.estimate(m))
+    new ByteLruCache[(String, String, Vector[(String, Long, Long)]), Loaded](
+      () => ByteLruCache.DefaultBytes, l => SizeEstimator.estimate(l.model))
 
   /** (relative path, length, mtime) of every file under `dir`, sorted;
     * listed through the Hadoop FileSystem, so HDFS model dirs work too.
@@ -113,28 +135,48 @@ object FraudPipeline {
       .sortBy(_._1)
   }
 
-  /** The model saved in `dir`, loaded from disk once per saved version. */
-  private[pipeline] def loadedModel(spark: SparkSession, dir: String): PipelineModel = {
-    val key = (dir, fingerprint(spark, dir))
+  /** The model saved in `dir` and its broadcast classifier, loaded from
+    * disk and broadcast once per saved version. */
+  private def loaded(spark: SparkSession, dir: String): Loaded = {
+    val key = (dir, spark.sparkContext.applicationId, fingerprint(spark, dir))
     models.getOrCompute(key) {
       models.invalidateIf(k => k._1 == dir && k != key)
-      PipelineModel.load(dir)
+      val model = PipelineModel.load(dir)
+      Loaded(model, spark.sparkContext.broadcast(classifier(model, dir)))
     }
   }
+
+  /** The model saved in `dir`, loaded from disk once per saved version. */
+  private[pipeline] def loadedModel(spark: SparkSession, dir: String): PipelineModel =
+    loaded(spark, dir).model
+
+  /** The last stage of `model` if it is a probabilistic classifier over
+    * feature vectors; otherwise an IllegalArgumentException naming the
+    * stage's class. */
+  private def classifier(model: PipelineModel,
+                         dir: String): ProbabilisticClassificationModel[MLVector, _] =
+    model.stages.lastOption match {
+      // the features type is erased; transformSchema checks it against a vector column
+      case Some(c: ProbabilisticClassificationModel[_, _]) if Try(c.transformSchema(
+          StructType(Seq(StructField(c.getFeaturesCol, SQLDataTypes.VectorType))))).isSuccess =>
+        c.asInstanceOf[ProbabilisticClassificationModel[MLVector, _]]
+      case last => throw new IllegalArgumentException(
+        s"the model in $dir must end in a ProbabilisticClassificationModel over " +
+          s"feature vectors; its last stage is ${last.fold("missing")(_.getClass.getName)}")
+    }
 
   /** Number of loaded models held for `dir` (at most one). */
   private[pipeline] def cachedModels(dir: String): Int =
     models.keys.count(_._1 == dir)
 
-  /** Stage 4: streaming score (predict.py:22-53 analog). Returns the
-    * started query; callers await termination (AvailableNow drains the
-    * replayed topic and stops). The model is loaded once per saved
-    * version and reused by later calls. The checkpoint lives under
-    * `outDir` (`_checkpoint`, hidden from file listings), so a repeat
-    * call on the same Artifacts resumes where the last one stopped and
-    * scores every record exactly once. */
-  def predict(spark: SparkSession, a: Artifacts): StreamingQuery = {
-    val model = loadedModel(spark, a.modelDir)
+  /** The stream `predict` writes: one JSON string per replayed record,
+    * carrying vec_id, actual_label and predicted_label. The loaded
+    * model's stages before the last (the assembler) run as they are;
+    * `predicted_label` is one UDF over the broadcast classifier, whose
+    * `predict` applies the same thresholds-or-argmax rule as the
+    * `prediction` column of its `transform`. */
+  private[pipeline] def scored(spark: SparkSession, a: Artifacts): DataFrame = {
+    val Loaded(model, classifier) = loaded(spark, a.modelDir)
     // The wire carries only raw columns (recordSchema); the loaded 2-stage
     // model's assembler stage rebuilds `features` itself — predict derives
     // the assembler INPUTS (scalar summaries + vectorized embedding) and
@@ -142,25 +184,35 @@ object FraudPipeline {
     // The embedding dim comes FROM the persisted model (assembled width
     // minus the 2 scalars), declared as vector-size metadata so the
     // assembler never needs a batch first() on the stream.
-    val dim = model.stages.last
-      .asInstanceOf[org.apache.spark.ml.classification.RandomForestClassificationModel]
-      .numFeatures - 2
+    val dim = classifier.value.numFeatures - 2
     val parsed = graft.ml.MLQueries.withAssemblerInputs(
       spark.readStream.schema(recordSchema).json(a.topicDir), Some(dim))
-    val scored = model.transform(parsed)
-      .select(to_json(struct(
-        col("vec_id"),
-        col("label").as("actual_label"),
-        col("prediction").as("predicted_label"))).as("value"))
+    val features = model.stages.init.foldLeft(parsed)((df, t) => t.transform(df))
+    val label = udf((v: MLVector) => classifier.value.predict(v))
+    features.select(to_json(struct(
+      col("vec_id"),
+      col("label").as("actual_label"),
+      label(col(classifier.value.getFeaturesCol)).as("predicted_label"))).as("value"))
+  }
+
+  /** Stage 4: streaming score (predict.py:22-53 analog). Returns the
+    * started query; callers await termination (AvailableNow drains the
+    * replayed topic and stops). The model is loaded and its classifier
+    * broadcast once per saved version and reused by later calls; a model
+    * whose last stage is not a probabilistic classifier over feature
+    * vectors is refused before any query starts. The checkpoint lives
+    * under `outDir` (`_checkpoint`, hidden from file listings), so a
+    * repeat call on the same Artifacts resumes where the last one stopped
+    * and scores every record exactly once. */
+  def predict(spark: SparkSession, a: Artifacts): StreamingQuery =
     // text sink: one JSON string per line — the Kafka message-value shape
-    scored.writeStream
+    scored(spark, a).writeStream
       .format("text")
       .option("path", a.outDir)
       .option("checkpointLocation", s"${a.outDir}/_checkpoint")
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .start()
-  }
 
   /** Reads back the prediction topic as a DataFrame of the documented
     * output shape (tasks/README.md:108-116). */
