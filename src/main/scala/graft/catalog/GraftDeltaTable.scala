@@ -177,10 +177,10 @@ class GraftDeltaTable(ident: String, dir: NioPath,
     super.alterAddColumn(f)
   }
 
-  /** MOR read: fold the delta log (driver work O(|delta|)) and plan a
-    * partitioned scan — base files minus superseded ids, plus the
-    * replacement rows. A log-free table takes the plain file-scan
-    * path unchanged. */
+  /** MOR read: fold the delta log (driver work O(|delta|)) and plan it
+    * as a deletion-vector scan — base files minus the superseded ids
+    * (equality deletes on the row id), plus the replacement rows. A
+    * log-free table takes the plain file-scan path unchanged. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     refreshFromDisk() // observe foreign-process commits at plan time
     val st = stateNow
@@ -192,10 +192,9 @@ class GraftDeltaTable(ident: String, dir: NioPath,
       // report and bucket pruning
       new GraftScanBuilder(st.schema, files, None, partSpecEncoded,
         bucketSpec, sortColumns ++ zorderColumns)
-    else {
-      val fold = GraftDeltaTable.foldDelta(delta, st.schema, idType)
-      new GraftMorScanBuilder(st.schema, files, fold, resolvedIdCol)
-    }
+    else GraftDeltaTable.foldedScan(st.schema, files, delta, idType,
+      resolvedIdCol, partSpecEncoded, bucketSpec,
+      sortColumns ++ zorderColumns)
   }
 
   /** COMPACTION — the MOR maintenance op (Iceberg's rewrite_data_files,
@@ -261,15 +260,17 @@ object GraftDeltaTable {
           s"got ${other.catalogString}")
     }
 
-  /** The folded delta log: per-id FINAL action, last op wins. An id in
-    * `dropIds` is superseded — its base row must not be emitted, but
-    * only in base files BELOW the op's fence (files that existed when
-    * the delta committed; later appends are exempt — review find);
-    * `replacements` holds the surviving final rows (updates and
-    * inserts), in table-schema layout. */
+  /** The folded delta log: per-id FINAL action, last op wins. Every
+    * folded id is superseded — its base row must not be emitted, but
+    * only in base files BELOW the final op's fence (files that existed
+    * when the delta committed; later appends are exempt — review
+    * find): `deletes` holds them as equality deletes on the row-id
+    * column, one entry per fence (an unfenced legacy ref, fence -1,
+    * covers every base file). `replacements` holds the surviving final
+    * rows (updates and inserts), in table-schema layout. */
   private[catalog] final case class DeltaFold(
-      dropIds: Array[(AnyRef, Int)], replacements: Array[UnsafeRow],
-      idType: DataType, ops: Long)
+      deletes: Vector[GraftDvTable.EqDeletes],
+      replacements: Array[UnsafeRow])
 
   /** Extract a row-id as a plain JVM value (stable equals/hashCode,
     * java-serializable into input partitions). */
@@ -311,7 +312,7 @@ object GraftDeltaTable {
     * delta file in commit order, last op per id wins. Work and memory
     * are O(|delta|), bounded by delta volume between compactions. */
   private[catalog] def foldDelta(delta: Vector[GraftFileRef],
-      tableSchema: StructType, idType: DataType): DeltaFold = {
+      tableSchema: StructType, idType: DataType, idCol: String): DeltaFold = {
     val ds = StructType(
       StructField("__op", IntegerType, nullable = false) +:
       StructField("__id", idType, nullable = true) +:
@@ -356,11 +357,9 @@ object GraftDeltaTable {
         }
     }
     val m = new java.util.LinkedHashMap[AnyRef, (UnsafeRow, Int)]()
-    var ops = 0L
     delta.indices.foreach { fi =>
       val f = delta(fi)
       val parsed = parsedAll(fi)
-      ops += parsed.length
       var i = 0
       while (i < parsed.length) {
         val (id, op, row) = parsed(i)
@@ -369,199 +368,44 @@ object GraftDeltaTable {
         i += 1
       }
     }
-    val drop = new Array[(AnyRef, Int)](m.size())
+    val byFence = new java.util.TreeMap[Int, java.util.HashSet[AnyRef]]()
     val repl = scala.collection.mutable.ArrayBuffer.empty[UnsafeRow]
-    val it = m.entrySet().iterator()
-    var i = 0
-    while (it.hasNext) {
-      val e = it.next()
-      drop(i) = (e.getKey, e.getValue._2)
-      if (e.getValue._1 != null) repl += e.getValue._1
-      i += 1
+    m.forEach { (id, v) =>
+      byFence.computeIfAbsent(v._2, _ => new java.util.HashSet[AnyRef]())
+        .add(id)
+      if (v._1 != null) repl += v._1
     }
-    DeltaFold(drop, repl.toArray, idType, ops)
+    val deletes = Vector.newBuilder[GraftDvTable.EqDeletes]
+    byFence.forEach((fence, ids) =>
+      deletes += GraftDvTable.EqDeletes(fence, Vector(idCol), ids))
+    DeltaFold(deletes.result(), repl.toArray)
+  }
+
+  /** The MOR read over a live delta log: the deletion-vector scan with
+    * no vectors, the fold's equality deletes and its replacement rows
+    * — one read path, runtime file skipping and row-group splitting
+    * included. */
+  private[catalog] def foldedScan(tableSchema: StructType,
+      files: Vector[GraftFileRef], delta: Vector[GraftFileRef],
+      idType: DataType, idCol: String, partCols: Seq[String] = Nil,
+      bucketSpec: Option[(String, Int)] = None,
+      clusterCols: Seq[String] = Nil): ScanBuilder = {
+    val fold = foldDelta(delta, tableSchema, idType, idCol)
+    new GraftDvScanBuilder(tableSchema, files, Map.empty, partCols,
+      bucketSpec, clusterCols, fold.deletes, fold.replacements)
   }
 }
 
 /** Read-only MOR table pinned to one historical snapshot — what
   * `VERSION AS OF` / `TIMESTAMP AS OF` resolve to for merge-on-read:
-  * the fold of THAT snapshot's delta files over THAT snapshot's base.
-  * Deliberately NOT SupportsWrite. */
+  * the fold of THAT snapshot's delta files over THAT snapshot's base. */
 class GraftMorSnapshotTable(ident: String, tableSchema: StructType,
     files: Vector[GraftFileRef], delta: Vector[GraftFileRef],
-    idType: DataType, idCol: String) extends Table with SupportsRead {
-  override def name(): String = ident
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
+    idType: DataType, idCol: String)
+    extends GraftSnapshotTable(ident, tableSchema, files) {
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (delta.isEmpty) new GraftScanBuilder(tableSchema, files, None)
-    else new GraftMorScanBuilder(tableSchema, files,
-      GraftDeltaTable.foldDelta(delta, tableSchema, idType), idCol)
-}
-
-/** MOR scan builder: column pruning and filter pushdown both apply —
-  * accepted filters row-filter the EFFECTIVE rows (sound: the fold
-  * happens before the filter in every partition), and file skipping
-  * stays sound because a base file's surviving rows are a subset of
-  * the rows its stats describe. */
-class GraftMorScanBuilder(tableSchema: StructType,
-    files: Vector[GraftFileRef], fold: GraftDeltaTable.DeltaFold,
-    idCol: String)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-
-  private var required: StructType = tableSchema
-  private var accepted: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var all: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-
-  // nested = false: the replacements partition ships FULL-width delta
-  // rows straight from the fold (no parquet request to prune), so the
-  // scan's emitted layout must stay the table's own nested types —
-  // widen and let Spark project nested extractions above the scan
-  // (VERDICT r12 item 1)
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = GraftStorage.sanitizeRequired(tableSchema, requiredSchema,
-      nested = false)
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter]):
-      Array[org.apache.spark.sql.sources.Filter] = {
-    all = filters
-    val (ok, rest) = filters.partition(GraftFilterEval.supports(tableSchema, _))
-    accepted = ok
-    rest
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-    accepted
-
-  override def build(): Scan = {
-    // keep each file's ORIGINAL snapshot index through the skip filter:
-    // delta fences reference positions in the full base-file vector
-    val surviving = files.zipWithIndex.filter { case (f, _) =>
-      all.forall(GraftStorage.mayMatch(tableSchema, f, _)) }
-    new GraftMorScan(tableSchema, required, accepted, surviving,
-      files.size - surviving.size, fold, idCol)
-  }
-}
-
-class GraftMorScan(tableSchema: StructType, requiredSchema: StructType,
-    rowFilters: Array[org.apache.spark.sql.sources.Filter],
-    indexedFiles: Vector[(GraftFileRef, Int)], skipped: Int,
-    fold: GraftDeltaTable.DeltaFold, idCol: String)
-    extends Scan with Batch with SupportsReportStatistics {
-
-  private def files: Vector[GraftFileRef] = indexedFiles.map(_._1)
-
-  override def readSchema(): StructType = requiredSchema
-  override def toBatch: Batch = this
-
-  /** Effective-size estimate: base bytes plus a per-row guess for the
-    * shipped replacements (deletes only shrink the result — an upper
-    * bound is the safe direction for join sizing). Unknown unless
-    * EVERY base ref carries a real size (pre-stats refs read 0 and a
-    * partial sum would invite a false broadcast). */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val known = files.forall(_.bytes > 0)
-    override def sizeInBytes(): java.util.OptionalLong =
-      if (known)
-        java.util.OptionalLong.of(files.map(_.bytes).sum +
-          fold.replacements.map(_.getSizeInBytes.toLong).sum)
-      else java.util.OptionalLong.empty()
-    override def numRows(): java.util.OptionalLong =
-      java.util.OptionalLong.of(
-        files.map(_.rows).sum + fold.replacements.length)
-  }
-
-  /** Ship each base file only the superseded ids that (a) its row-id
-    * range can contain (min/max stats) and (b) whose final op's FENCE
-    * covers this file's snapshot position — a tombstone never reaches
-    * a base file appended after it committed. */
-  private def idsFor(f: GraftFileRef, fileIdx: Int): Array[AnyRef] = {
-    val fenced = fold.dropIds.filter { case (_, fence) =>
-      fence < 0 || fileIdx < fence }
-    f.stats.get(idCol) match {
-      case Some(st) if st.min.isDefined && st.max.isDefined =>
-        val dt = fold.idType
-        def cmpVal(v: AnyRef): Any = dt match {
-          case StringType => UTF8String.fromString(v.asInstanceOf[String])
-          case _ => v
-        }
-        val lo = GraftStorage.statFromString(dt, st.min.get)
-        val hi = GraftStorage.statFromString(dt, st.max.get)
-        fenced.collect { case (id, _)
-            if GraftStorage.typedCompare(dt, cmpVal(id), lo) >= 0 &&
-              GraftStorage.typedCompare(dt, cmpVal(id), hi) <= 0 => id }
-      case _ => fenced.map(_._1)
-    }
-  }
-
-  // base files stay one-per-task here (no row-group splitting): MOR
-  // base files are written per task by appends and by the compaction
-  // self-overwrite, so their sizes are writer-bounded — unlike a CoW
-  // compaction artifact, nothing concentrates a MOR base into one
-  // multi-GB file
-  override def planInputPartitions(): Array[InputPartition] = {
-    val base = indexedFiles.map { case (f, i) =>
-      GraftMorFilePartition(f.path, f.cols, f.rows,
-        idsFor(f, i), f.colIds): InputPartition }
-    if (fold.replacements.isEmpty) base.toArray
-    else (base :+ (GraftMorRowsPartition(fold.replacements): InputPartition))
-      .toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftMorReaderFactory(tableSchema, requiredSchema, rowFilters, idCol)
-
-  override def description(): String =
-    s"GraftMorScan(${files.map(_.rows).sum} base rows, ${files.size} files " +
-      s"($skipped skipped), ${fold.ops} delta ops folded, " +
-      s"PushedFilters: [${rowFilters.mkString(", ")}], " +
-      s"ReadSchema: ${requiredSchema.catalogString})"
-}
-
-case class GraftMorFilePartition(path: String, cols: Vector[String],
-    rows: Long, dropIds: Array[AnyRef],
-    colIds: Vector[Int] = Vector.empty) extends InputPartition
-case class GraftMorRowsPartition(rows: Array[UnsafeRow]) extends InputPartition
-
-/** Per-task MOR fold: a base-file partition streams its parquet rows,
-  * drops ids superseded by the delta log (hash-set probe), then runs
-  * the shared filter+project pipeline; the replacements partition runs
-  * the same pipeline over the shipped rows. */
-class GraftMorReaderFactory(tableSchema: StructType,
-    requiredSchema: StructType,
-    filters: Array[org.apache.spark.sql.sources.Filter], idCol: String)
-    extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case fp: GraftMorFilePartition =>
-        val needed = GraftStorage.projectionSchema(tableSchema,
-          requiredSchema, filters, Set(idCol))
-        val idOrd = GraftStorage.ordinalByName(
-          needed.fieldNames.toIndexedSeq, idCol)
-        val idDt = needed.fields(idOrd).dataType
-        val drop = new java.util.HashSet[AnyRef]()
-        fp.dropIds.foreach(drop.add)
-        // accepted filters also run inside parquet: filter-then-fold
-        // equals fold-then-filter for row-level predicates, so skipping
-        // row groups early is sound
-        val it = new GraftStorage.FileIterator(fp.path, fp.cols, needed,
-          fp.rows, pushFilters = filters, fileColIds = fp.colIds)
-        val surviving =
-          if (drop.isEmpty) it
-          else it.filter(r =>
-            !drop.contains(GraftDeltaTable.idValue(r, idOrd, idDt)))
-        new GraftRowPipeline(needed, requiredSchema, filters, surviving, it,
-          Map("_file" ->
-            org.apache.spark.unsafe.types.UTF8String.fromString(fp.path)))
-      case rp: GraftMorRowsPartition =>
-        // replacement rows come from the delta log, not a data file
-        new GraftRowPipeline(tableSchema, requiredSchema, filters,
-          rp.rows.iterator, () => (), Map("_file" -> null))
-      case other =>
-        throw new IllegalStateException(s"unexpected partition $other")
-    }
+    if (delta.isEmpty) super.newScanBuilder(options)
+    else GraftDeltaTable.foldedScan(tableSchema, files, delta, idType, idCol)
 }
 
 /** Per-task delta writer: Spark's DeltaWritingSparkTask has already

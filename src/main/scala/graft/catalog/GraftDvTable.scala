@@ -5,7 +5,7 @@ import java.util
 import java.util.UUID
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeRow}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read._
@@ -406,9 +406,11 @@ object GraftDvTable {
   /** One equality-delete entry, folded: kill every row whose `keyCols`
     * tuple is in `keys`, in base files BELOW `fence` (files that
     * existed when the upsert committed — later files, including the
-    * upsert's own inserts, are exempt). Key values are canonical JVM
-    * values ([[GraftDeltaTable.idValue]]); multi-column keys fold as
-    * `Vector[AnyRef]`. `keys` coming out of the fold memo is an
+    * upsert's own inserts, are exempt; a negative fence, an unfenced
+    * legacy ref, covers every file). Upserts and the merge-on-read fold
+    * ([[GraftDeltaTable.foldDelta]]) both produce them. Key values are
+    * canonical JVM values ([[GraftDeltaTable.idValue]]); multi-column
+    * keys fold as `Vector[AnyRef]`. `keys` coming out of the fold memo is an
     * UNMODIFIABLE view (ADVICE r17): the memoized sets are shared by
     * reference across every fold, so accidental mutation must throw
     * instead of corrupting every later fold of the file. */
@@ -456,10 +458,12 @@ object GraftDvTable {
     vecFoldCache.currentBytes + eqFoldCache.currentBytes
 
   /** [[foldEq]] plus a merge of same-(fence, key-columns) groups —
-    * the per-task eq files of one commit collapse to ONE probe set,
-    * so the read-side per-row cost is O(distinct probe shapes), not
-    * O(task files). Merged groups build a FRESH set (the singletons
-    * hand out the memoized set, which must stay immutable). */
+    * the per-task eq files of one commit collapse to ONE set; the scan
+    * then merges each base file's applicable fences per key shape
+    * ([[narrowKeys]]), so the read-side per-row cost is O(distinct
+    * probe shapes), not O(task files or epochs). Merged groups build a
+    * FRESH set (the singletons hand out the memoized set, which must
+    * stay immutable). */
   private[catalog] def foldEqMerged(eq: Vector[GraftFileRef],
       tableSchema: StructType): Vector[EqDeletes] =
     foldEq(eq, tableSchema)
@@ -512,16 +516,25 @@ object GraftDvTable {
       EqDeletes(f.fence, f.cols, set)
     }
 
-  /** Key-set narrowing for ONE base file: single-column keys outside
-    * the file's recorded min/max can't match — ship only the keys the
-    * file could contain (the [[GraftMorScan.idsFor]] discipline).
-    * Multi-column keys and stat-less files ship whole. */
+  /** The ONE key set a base file probes for the groups `es` (all on
+    * the same key columns): single-column keys outside the file's
+    * recorded min/max can't match — ship only the keys the file could
+    * contain. Multi-column keys and stat-less files ship every key; a
+    * lone group ships its (shared, immutable) set uncopied. */
   private[catalog] def narrowKeys(f: GraftFileRef,
-      tableSchema: StructType, e: EqDeletes): java.util.Set[AnyRef] = {
-    if (e.keyCols.size != 1) return e.keys
+      tableSchema: StructType, es: Seq[EqDeletes]): java.util.Set[AnyRef] = {
+    def all: java.util.Set[AnyRef] =
+      if (es.size == 1) es.head.keys
+      else {
+        val u = new java.util.HashSet[AnyRef]()
+        es.foreach(e => u.addAll(e.keys): Unit)
+        u
+      }
+    val keyCols = es.head.keyCols
+    if (keyCols.size != 1) return all
     val names = tableSchema.fieldNames.toIndexedSeq
-    val o = GraftStorage.ordinalByName(names, e.keyCols.head)
-    if (o < 0) return e.keys
+    val o = GraftStorage.ordinalByName(names, keyCols.head)
+    if (o < 0) return all
     val fld = tableSchema.fields(o)
     val fo = GraftStorage.refOrdinal(f, fld)
     if (fo < 0) return new java.util.HashSet[AnyRef]() // col absent: null
@@ -536,21 +549,21 @@ object GraftDvTable {
             case _ => v
           }
           val out = new java.util.HashSet[AnyRef]()
-          e.keys.forEach { k =>
+          es.foreach(_.keys.forEach { k =>
             val c = cmpVal(k)
             if (GraftStorage.typedCompare(fld.dataType, c, lo) >= 0 &&
                 GraftStorage.typedCompare(fld.dataType, c, hi) <= 0)
               out.add(k): Unit
-          }
+          })
           out
-        } catch { case _: Exception => e.keys }
-      case _ => e.keys
+        } catch { case _: Exception => all }
+      case _ => all
     }
   }
 
   /** Driver-side fold of the live vectors: path -> SORTED DISTINCT
     * deleted positions. O(deleted positions), bounded by compaction
-    * cadence — the DV analog of [[GraftDeltaTable.foldDelta]]. */
+    * cadence — the positional sibling of [[foldEq]]. */
   private[catalog] def foldVectors(
       delta: Vector[GraftFileRef]): Map[String, Array[Long]] = {
     if (delta.isEmpty) return Map.empty
@@ -677,7 +690,9 @@ private[catalog] class GraftDvCowScanBuilder(tableSchema: StructType,
 }
 
 /** Scan builder for a DV table with live vectors (and for every DV
-  * row-level rewrite, which needs `_pos`). Deliberately implements
+  * row-level rewrite, which needs `_pos`), and for a merge-on-read
+  * table with a live delta log, whose fold arrives as equality deletes
+  * on the row id plus the replacement `rows`. Deliberately implements
   * ONLY column pruning and filter-driven FILE pruning: per-file row
   * counts include deleted rows, so the aggregate/limit/offset/exact-
   * partition seams of [[GraftScanBuilder]] would all be unsound here.
@@ -688,7 +703,8 @@ class GraftDvScanBuilder(tableSchema: StructType,
     partCols: Seq[String] = Nil,
     bucketSpec: Option[(String, Int)] = None,
     clusterCols: Seq[String] = Nil,
-    eq: Vector[GraftDvTable.EqDeletes] = Vector.empty)
+    eq: Vector[GraftDvTable.EqDeletes] = Vector.empty,
+    rows: Array[UnsafeRow] = Array.empty)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
 
@@ -697,8 +713,13 @@ class GraftDvScanBuilder(tableSchema: StructType,
     Array.empty
   private var all: Array[org.apache.spark.sql.sources.Filter] = Array.empty
 
+  // replacement rows ship full-width from the fold (no parquet request
+  // to prune), so with any of them the scan's emitted layout must stay
+  // the table's own nested types — widen and let Spark project nested
+  // extractions above the scan
   override def pruneColumns(r: StructType): Unit =
-    required = GraftStorage.sanitizeRequired(tableSchema, r, nested = true)
+    required = GraftStorage.sanitizeRequired(tableSchema, r,
+      nested = rows.isEmpty)
 
   override def pushFilters(
       filters: Array[org.apache.spark.sql.sources.Filter])
@@ -712,12 +733,14 @@ class GraftDvScanBuilder(tableSchema: StructType,
 
   override def build(): Scan = {
     // ORIGINAL snapshot indices survive the skip filter: equality-
-    // delete fences bind by position in the full base-file vector
+    // delete fences bind by position in the full base-file vector.
+    // Skipping by every filter is sound: deletes only shrink a file's
+    // rows inside the range its stats describe
     val surviving = files.zipWithIndex.filter { case (f, _) =>
-      accepted.forall(GraftStorage.mayMatch(tableSchema, f, _)) }
+      all.forall(GraftStorage.mayMatch(tableSchema, f, _)) }
     new GraftDvScan(tableSchema, required, accepted, surviving, dv,
       skipped = files.size - surviving.size, partCols, bucketSpec,
-      clusterCols, eq)
+      clusterCols, eq, rows)
   }
 }
 
@@ -728,7 +751,8 @@ class GraftDvScan(tableSchema: StructType, requiredSchema: StructType,
     skipped: Int, partCols: Seq[String] = Nil,
     bucketSpec: Option[(String, Int)] = None,
     clusterCols: Seq[String] = Nil,
-    eq: Vector[GraftDvTable.EqDeletes] = Vector.empty)
+    eq: Vector[GraftDvTable.EqDeletes] = Vector.empty,
+    rows: Array[UnsafeRow] = Array.empty)
     extends Scan with Batch
     with SupportsReportStatistics
     with SupportsRuntimeV2Filtering {
@@ -744,8 +768,9 @@ class GraftDvScan(tableSchema: StructType, requiredSchema: StructType,
   // file whose stats (or bucket id) exclude all probed keys is never
   // opened. SOUND with live vectors: this only drops WHOLE files (a
   // skipped file's deleted positions are simply unused), and surviving
-  // files still apply their vectors. Without this, the vector window
-  // after a DELETE would silently cost a full fact scan per star join.
+  // files still apply their vectors. The replacement-rows partition is
+  // never dropped. Without this, the vector window after a DELETE
+  // would silently cost a full fact scan per star join.
   @volatile private var runtimeFiles: Vector[(GraftFileRef, Int)] =
     indexedFiles
 
@@ -779,15 +804,18 @@ class GraftDvScan(tableSchema: StructType, requiredSchema: StructType,
   // never be guessed from a byte split).
   override def planInputPartitions(): Array[InputPartition] = {
     val target = GraftScan.splitTargetBytesNow
-    runtimeFiles.flatMap { case (f, idx) =>
+    val base = runtimeFiles.flatMap { case (f, idx) =>
       val dels = dv.getOrElse(f.path, Array.emptyLongArray)
       // equality deletes applicable to THIS file: fence strictly above
-      // its snapshot index (files the upsert had already seen), keys
-      // narrowed by the file's stats where a single-column key allows
+      // its snapshot index (files the write had already seen; an
+      // unfenced legacy entry covers every file), merged into ONE set
+      // per key shape and narrowed by the file's stats where a
+      // single-column key allows
       val eqDels: Seq[(Vector[String], java.util.Set[AnyRef])] =
-        eq.collect { case e if idx < e.fence =>
-          (e.keyCols, GraftDvTable.narrowKeys(f, tableSchema, e))
-        }.filter(!_._2.isEmpty)
+        eq.filter(e => e.fence < 0 || idx < e.fence)
+          .groupBy(_.keyCols).toSeq.map { case (keyCols, es) =>
+            (keyCols, GraftDvTable.narrowKeys(f, tableSchema, es))
+          }.filter(!_._2.isEmpty)
       if (f.bytes <= target || f.bytes <= 0 || f.groups.isEmpty)
         Seq(GraftDvFilePartition(f.path, f.cols, f.rows, f.colIds, dels,
           eqDels = eqDels))
@@ -803,32 +831,40 @@ class GraftDvScan(tableSchema: StructType, requiredSchema: StructType,
           p
         }
       }
-    }.map(p => p: InputPartition).toArray
+    }.map(p => p: InputPartition)
+    (if (rows.isEmpty) base else base :+ GraftMorRowsPartition(rows)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftDvReaderFactory(tableSchema, requiredSchema, filters)
 
   /** Live-row statistics: physical rows minus the (exact) deleted
-    * count — so join sizing sees the effective table. */
+    * count plus the replacement rows — so join sizing sees the
+    * effective table (equality deletes only shrink it: an upper bound
+    * is the safe direction). Size is unknown unless EVERY base ref
+    * carries a real size (pre-stats refs read 0, and a partial sum
+    * would invite a false broadcast). */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     val phys = files.map(_.rows).sum
     val deleted = files.map(f => dv.get(f.path).map(_.length.toLong)
       .getOrElse(0L)).sum
-    val bytes = files.map(_.bytes).sum
+    val bytes = files.map(_.bytes).sum +
+      rows.map(_.getSizeInBytes.toLong).sum
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(math.max(1L, bytes))
+        if (files.exists(_.bytes <= 0)) java.util.OptionalLong.empty()
+        else java.util.OptionalLong.of(math.max(1L, bytes))
       override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(math.max(0L, phys - deleted))
+        java.util.OptionalLong.of(math.max(0L, phys - deleted) + rows.length)
     }
   }
 
   override def description(): String =
-    s"GraftDvScan(${files.size} files, $skipped skipped, " +
+    s"GraftDvScan(${files.size} files ($skipped skipped), " +
       s"${dv.valuesIterator.map(_.length).sum} deleted positions, " +
-      s"${eq.map(_.keys.size).sum} equality-delete keys)"
+      s"${eq.map(_.keys.size).sum} equality-delete keys, " +
+      s"${rows.length} replacement rows)"
 }
 
 case class GraftDvFilePartition(path: String, cols: Vector[String],
@@ -837,11 +873,14 @@ case class GraftDvFilePartition(path: String, cols: Vector[String],
     posBase: Long = 0L,
     eqDels: Seq[(Vector[String], java.util.Set[AnyRef])] = Nil)
     extends InputPartition
+/** A merge-on-read fold's replacement rows, in table-schema layout. */
+case class GraftMorRowsPartition(rows: Array[UnsafeRow]) extends InputPartition
 
 /** DV reader: iterate the file in PHYSICAL order (no in-parquet
   * filtering — ordinals must count every stored row), drop deleted
-  * ordinals, then run the shared filter/project pipeline with `_file`
-  * as a partition constant and `_pos` as a per-row appended column. */
+  * ordinals and equality-deleted keys, then run the shared
+  * filter/project pipeline with `_file` as a partition constant and
+  * `_pos` as a per-row appended column. */
 class GraftDvReaderFactory(tableSchema: StructType,
     requiredSchema: StructType,
     filters: Array[org.apache.spark.sql.sources.Filter])
@@ -852,65 +891,68 @@ class GraftDvReaderFactory(tableSchema: StructType,
   private val dataRequired = StructType(requiredSchema.fields
     .filterNot(f => f.name == "_file" || f.name == "_pos"))
 
+  /** "Some equality delete kills this row", bound to `schema`'s
+    * ordinals once. A null key component never matches (upsert writes
+    * reject null keys, so no tombstone can bind to one). */
+  private def eqDead(schema: StructType,
+      eqDels: Seq[(Vector[String], java.util.Set[AnyRef])])
+      : InternalRow => Boolean = {
+    val names = schema.fieldNames.toIndexedSeq
+    val probes = eqDels.map { case (keyCols, keys) =>
+      (keyCols.map { c =>
+        val o = GraftStorage.ordinalByName(names, c)
+        (o, schema.fields(o).dataType)
+      }.toArray, keys)
+    }.toArray
+    r => probes.exists { case (ords, keys) =>
+      !ords.exists(o => r.isNullAt(o._1)) && keys.contains(
+        if (ords.length == 1)
+          GraftDeltaTable.idValue(r, ords(0)._1, ords(0)._2)
+        else Vector.tabulate(ords.length)(j =>
+          GraftDeltaTable.idValue(r, ords(j)._1, ords(j)._2)))
+    }
+  }
+
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[GraftDvFilePartition]
-    // UNTOUCHED-FILE FAST PATH: a file with no tombstoned positions
-    // and no applicable equality deletes has nothing ordinal-bound to
-    // honor — when the query doesn't ask for `_pos` either, read it
-    // exactly like the plain scan, WITH in-parquet row-group skipping.
-    // A 10-row DELETE must not tax the 10,000 clean files of a 100-TB
-    // table with full-ordinal iteration.
-    val needsPos = requiredSchema.fieldNames
-      .exists(_.equalsIgnoreCase("_pos"))
-    if (fp.dels.isEmpty && fp.eqDels.isEmpty && !needsPos) {
-      val plainSchema = GraftStorage.projectionSchema(tableSchema,
-        dataRequired, filters, Set.empty)
-      val pit = new GraftStorage.FileIterator(fp.path, fp.cols,
-        plainSchema, fp.rows, fp.rangeStart, fp.rangeEnd,
-        pushFilters = filters, fileColIds = fp.colIds)
-      return new GraftRowPipeline(plainSchema, requiredSchema, filters,
-        pit, pit, Map("_file" -> UTF8String.fromString(fp.path)))
+    val fp = p match {
+      case fp: GraftDvFilePartition => fp
+      case rp: GraftMorRowsPartition =>
+        // replacement rows come from the delta log, not a data file
+        return new GraftRowPipeline(tableSchema, requiredSchema, filters,
+          rp.rows.iterator, () => (), Map("_file" -> null))
+      case other =>
+        throw new IllegalStateException(s"unexpected partition $other")
     }
     // equality-delete key columns must be READ even when the query
-    // didn't ask for them (the MOR idCol discipline); the pipeline's
-    // projection drops them afterwards
+    // didn't ask for them; the pipeline's projection drops them
     val fileSchema: StructType =
       GraftStorage.projectionSchema(tableSchema, dataRequired, filters,
         fp.eqDels.flatMap(_._1).toSet)
+    val dead = eqDead(fileSchema, fp.eqDels)
+    // NO-POSITION FAST PATH: a file with no tombstoned positions has
+    // nothing ordinal-bound to honor — when the query doesn't ask for
+    // `_pos` either, read it like the plain scan, WITH in-parquet
+    // row-group skipping, and drop equality-deleted keys as a row
+    // filter (filter-then-drop equals drop-then-filter for row-level
+    // predicates). A 10-row DELETE must not tax the 10,000 clean files
+    // of a 100-TB table with full-ordinal iteration.
+    val needsPos = requiredSchema.fieldNames
+      .exists(_.equalsIgnoreCase("_pos"))
+    if (fp.dels.isEmpty && !needsPos) {
+      val pit = new GraftStorage.FileIterator(fp.path, fp.cols,
+        fileSchema, fp.rows, fp.rangeStart, fp.rangeEnd,
+        pushFilters = filters, fileColIds = fp.colIds)
+      return new GraftRowPipeline(fileSchema, requiredSchema, filters,
+        if (fp.eqDels.isEmpty) pit else pit.filterNot(dead), pit,
+        Map("_file" -> UTF8String.fromString(fp.path)))
+    }
     val neededSchema: StructType =
       StructType(fileSchema.fields :+
         StructField("_pos", LongType, nullable = false))
     val it = new GraftStorage.FileIterator(fp.path, fp.cols, fileSchema,
       fp.rows, fp.rangeStart, fp.rangeEnd, fileColIds = fp.colIds)
     val dels = fp.dels
-    // equality probes, bound to the FILE-schema ordinals once
-    val fileNames = fileSchema.fieldNames.toIndexedSeq
-    val eqProbes: Array[(Array[(Int, org.apache.spark.sql.types.DataType)],
-        java.util.Set[AnyRef])] =
-      fp.eqDels.map { case (keyCols, keys) =>
-        (keyCols.map { c =>
-          val o = GraftStorage.ordinalByName(fileNames, c)
-          (o, fileSchema.fields(o).dataType)
-        }.toArray, keys)
-      }.toArray
-    def eqDead(r: InternalRow): Boolean = {
-      var i = 0
-      while (i < eqProbes.length) {
-        val (ords, keys) = eqProbes(i)
-        // a null key component never matches (upsert writes reject
-        // null keys, so no tombstone can bind to one)
-        if (!ords.exists(o => r.isNullAt(o._1))) {
-          val v: AnyRef =
-            if (ords.length == 1)
-              GraftDeltaTable.idValue(r, ords(0)._1, ords(0)._2)
-            else Vector.tabulate(ords.length)(j =>
-              GraftDeltaTable.idValue(r, ords(j)._1, ords(j)._2))
-          if (keys.contains(v)) return true
-        }
-        i += 1
-      }
-      false
-    }
+    val anyEq = fp.eqDels.nonEmpty
     val posRow = new GenericInternalRow(1)
     val joined = new JoinedRow()
     val wrapped = new Iterator[InternalRow] {
@@ -922,7 +964,7 @@ class GraftDvReaderFactory(tableSchema: StructType,
           val r = it.next()
           pos += 1 // ordinals count every PHYSICAL row, drops included
           if (java.util.Arrays.binarySearch(dels, pos) < 0 &&
-              (eqProbes.length == 0 || !eqDead(r))) {
+              !(anyEq && dead(r))) {
             posRow.setLong(0, pos)
             cur = joined(r, posRow)
             return true
@@ -985,17 +1027,10 @@ object GraftDvChangeFeed {
             s"change entry (version ${entry.ver}) predates the " +
               "retained snapshot window — the feed cannot resolve its " +
               "equality deletes; reseed from a snapshot"))
-        val es = GraftDvTable.foldEq(group, tableSchema)
-        // copy-on-merge: the singleton sets are memoized and immutable
-        val merged =
-          if (es.size == 1) es.head
-          else {
-            val keys = new java.util.HashSet[AnyRef](es.head.keys)
-            es.tail.foreach(x => keys.addAll(x.keys): Unit)
-            GraftDvTable.EqDeletes(es.head.fence, es.head.keyCols, keys)
-          }
+        // the group shares one (fence, key columns): one merged entry
+        val merged = GraftDvTable.foldEqMerged(group, tableSchema).head
         snapFiles.take(entry.fence).flatMap { f =>
-          val keys = GraftDvTable.narrowKeys(f, tableSchema, merged)
+          val keys = GraftDvTable.narrowKeys(f, tableSchema, Seq(merged))
           if (keys.isEmpty) None
           else Some(GraftDvChangeEqDeletePartition(f.path, f.cols,
             f.rows, f.colIds, merged.keyCols, keys, entry.ver)

@@ -40,8 +40,9 @@ import org.json4s.jackson.JsonMethods
   *     is NULL — the same answer Spark computes).
   *
   * MOR tables with live deltas never reach this code (they plan through
-  * [[GraftMorScanBuilder]]); snapshot views serve their own version's
-  * refs, so time travel aggregates stay version-exact. */
+  * [[GraftDvScanBuilder]], which has no aggregate seam); snapshot views
+  * serve their own version's refs, so time travel aggregates stay
+  * version-exact. */
 private[catalog] object GraftAggPushdown {
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.expressions.aggregate._

@@ -235,9 +235,20 @@ class DeletionVectorSpec extends SparkSpec {
     }
   }
 
-  test("runtime file skipping works WITH live vectors: a dim-side " +
-      "predicate prunes sorted DV-fact files at execution time, and " +
-      "survivors still apply their tombstones") {
+  // mor: the merge-on-read fold plans through the same DV scan, so a
+  // live delta log keeps runtime file skipping; its replacement-rows
+  // partition is never skipped
+  for ((mode, title, props, dml, expected) <- Seq(
+      ("dv", "runtime file skipping works WITH live vectors: a dim-side " +
+        "predicate prunes sorted DV-fact files at execution time, and " +
+        "survivors still apply their tombstones",
+        "'graft.mode'='dv'", Seq.empty[String], Seq("[5,35]")),
+      ("mor", "runtime file skipping works WITH a live MOR delta log: a " +
+        "dim-side predicate prunes sorted MOR-fact files at execution " +
+        "time, survivors drop superseded ids, replacements still ship",
+        "'graft.mode'='mor', 'graft.row_id'='k'",
+        Seq("UPDATE gdv.default.mor_rtfact SET v = -5 WHERE k = 5"),
+        Seq("[5,-5]")))) test(title) {
     spark.conf.set("spark.sql.catalog.gdv",
       classOf[graft.catalog.GraftCatalog].getName)
     val saved = Seq("spark.sql.adaptive.enabled",
@@ -253,25 +264,31 @@ class DeletionVectorSpec extends SparkSpec {
     spark.conf.set(
       "spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
     try {
-      sql("DROP TABLE IF EXISTS gdv.default.dv_rtfact")
-      sql("DROP TABLE IF EXISTS gdv.default.dv_rtdim")
-      sql("""CREATE TABLE gdv.default.dv_rtfact (k BIGINT, v BIGINT)
-             TBLPROPERTIES ('graft.mode'='dv', 'graft.sort_by'='k')""")
-      sql("""INSERT INTO gdv.default.dv_rtfact
+      sql(s"DROP TABLE IF EXISTS gdv.default.${mode}_rtfact")
+      sql(s"DROP TABLE IF EXISTS gdv.default.${mode}_rtdim")
+      sql(s"""CREATE TABLE gdv.default.${mode}_rtfact (k BIGINT, v BIGINT)
+             TBLPROPERTIES ($props, 'graft.sort_by'='k')""")
+      sql(s"""INSERT INTO gdv.default.${mode}_rtfact
              SELECT id, id * 7 FROM range(4096)""")
-      val factFiles = table("dv_rtfact").stateNow.current.get.files.size
+      val factFiles = spark.sessionState.catalogManager.catalog("gdv")
+        .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+        .loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(
+          Array("default"), s"${mode}_rtfact"))
+        .asInstanceOf[graft.catalog.GraftTable]
+        .stateNow.current.get.files.size
       assert(factFiles >= 4, s"sorted insert made only $factFiles files")
       // live vectors: tombstone k = 9 (one of the probe keys)
-      sql("DELETE FROM gdv.default.dv_rtfact WHERE k IN (9, 700)")
-      sql("CREATE TABLE gdv.default.dv_rtdim (k BIGINT, tag STRING)")
-      sql("""INSERT INTO gdv.default.dv_rtdim VALUES
+      sql(s"DELETE FROM gdv.default.${mode}_rtfact WHERE k IN (9, 700)")
+      dml.foreach(sql)
+      sql(s"CREATE TABLE gdv.default.${mode}_rtdim (k BIGINT, tag STRING)")
+      sql(s"""INSERT INTO gdv.default.${mode}_rtdim VALUES
              (5, 'pick'), (9, 'pick'), (4000, 'other')""")
       val df = sql(
-        """SELECT f.k, f.v FROM gdv.default.dv_rtfact f
-           JOIN gdv.default.dv_rtdim d ON f.k = d.k
+        s"""SELECT f.k, f.v FROM gdv.default.${mode}_rtfact f
+           JOIN gdv.default.${mode}_rtdim d ON f.k = d.k
            WHERE d.tag = 'pick' ORDER BY f.k""")
       // k=9 was tombstoned: only k=5 survives the join
-      assert(df.collect().map(_.toString).toSeq == Seq("[5,35]"))
+      assert(df.collect().map(_.toString).toSeq == expected)
       val scan = df.queryExecution.executedPlan.collectLeaves().collect {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
             if b.scan.isInstanceOf[graft.catalog.GraftDvScan] => b.scan
