@@ -72,12 +72,7 @@ object Bench {
         sb.toString.getBytes("UTF-8")): Unit
       System.err.println(s"[bench] STALL watchdog fired: BENCH_STALL_$tag.txt")
     } catch { case _: Throwable => () }
-    def clearArtifacts(): Unit = if (cold) {
-      graft.dedup.Dedup.clearArtifactCache()
-      graft.similarity.Clustering.clearArtifactCache()
-      graft.text.Bpe.clearArtifactCache()
-      graft.relational.Graph.clearArtifactCache()
-    }
+    def clearArtifacts(): Unit = if (cold) graft.util.ArtifactCache.clear()
     // Untimed warm-up: JVM JIT + Catalyst/codegen class-loading otherwise
     // land entirely on the alphabetically-first query (measured ~3 s).
     try SparkEntry.queries("q02_filter_project")(spark, sfDir).count()

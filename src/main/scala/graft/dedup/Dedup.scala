@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
 import graft.text.TextAnalysis.{tokensExpr, trigramsExpr, duckTokens, duckTrigrams}
+import graft.util.ArtifactCache
 import graft.util.Hashing._
 
 /** Deduplication suite over `documents` / `embeddings` — the operators a
@@ -157,46 +158,23 @@ object Dedup {
     (0 until Q44Bands * Q44Bits).map(p =>
       (0 until 64).map(d2 => (md5Long(s"q44:$p:$d2") % 2001) - 1000))
 
-  /** Per-JVM caches for the dedup pipeline's reusable artifacts: the
-    * verified pair index and the cluster-label table are materialized
-    * ONCE per corpus in production (a daily pipeline writes them as
-    * tables; q99 says as much about the band index), so q41/q84/q114 —
-    * and min-of-2 bench re-runs — share one computation per (session,
-    * corpus). Checkpointed ⇒ session-bound ⇒ session identity in the
-    * key (the BPE-training-cache precedent). */
-  private val dedupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Drop all cached artifacts (Bench cold mode — each query then pays
-    * its own build cost instead of riding another query's). */
-  private[graft] def clearArtifactCache(): Unit = dedupCache.clear()
-  private def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    // NOT computeIfAbsent: the labels build re-enters `cached` for the
-    // pair index, and a nested computeIfAbsent on the same map throws
-    // "Recursive update" whenever the two keys share a bin (bin choice
-    // varies per run via identityHashCode). A lost race merely costs a
-    // duplicate build.
-    val k = s"${graft.util.SessionToken(s)}:$key"
-    val existing = dedupCache.get(k)
-    if (existing != null) existing
-    else {
-      val df = build.localCheckpoint(true)
-      val prev = dedupCache.putIfAbsent(k, df)
-      if (prev != null) prev else df
-    }
-  }
-
   /** q41's verified duplicate pairs (doc_a < doc_b, jaccard >= 0.8) —
     * shared by q41 (pair listing) and q84/q114 (cluster resolution /
-    * keep-best materialization); cached per (session, corpus). */
+    * keep-best materialization). Materialized ONCE per corpus in
+    * production (a daily pipeline writes it as a table; q99 says as
+    * much about the band index): an [[ArtifactCache]] entry per
+    * (session, corpus). */
   private def minhashDupPairs(s: SparkSession, d: String): DataFrame =
-    cached(s, s"pairs:$d") { minhashDupPairsUncached(s, d) }
+    ArtifactCache.cached(s, s"dedup:pairs:$d") {
+      minhashDupPairsUncached(s, d).localCheckpoint(true)
+    }
 
   /** Cluster labels from the cached pair index — shared by q84 and q114. */
   private def dupLabels(s: SparkSession, d: String): DataFrame =
-    cached(s, s"labels:$d") {
+    ArtifactCache.cached(s, s"dedup:labels:$d") {
       connectedComponents(minhashDupPairs(s, d)
         .select(col("doc_a").as("x"), col("doc_b").as("y")))
+        .localCheckpoint(true)
     }
 
   private def minhashDupPairsUncached(s: SparkSession, d: String): DataFrame = {

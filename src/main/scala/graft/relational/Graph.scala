@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.util.ArtifactCache
 
 /** Graph analytics over the brand co-occurrence graph.
   *
@@ -30,8 +31,8 @@ import graft.{QueryDef, Tables}
 object Graph {
 
   /** Per-(session, sfDir) graph artifacts, built once and
-    * localCheckpointed — the same artifact-cache pattern as the dedup
-    * pair index (`Dedup.cached`) and k-means centroids. Round 7 measured
+    * localCheckpointed in the [[ArtifactCache]] (with the dedup pair
+    * index and the k-means run). Round 7 measured
     * the four graph queries independently rebuilding the baskets →
     * pairCounts → knnEdges chain (~2.5 s each: a corpus join + orderkey
     * shuffle + window); a production graph pipeline derives the basket /
@@ -40,28 +41,9 @@ object Graph {
     *   - arr:   per-order sorted distinct-brand array (the materialized
     *            basket table; |orders|-sized, the ONLY corpus shuffle)
     *   - pairs: co-occurrence counts (|brands|²-bounded)
-    *   - edges: undirected kNN edge set (≤ 3·|brands|)
-    * Checkpointed ⇒ session-bound ⇒ session identity in the key. NOT
-    * computeIfAbsent: pairs/edges builds re-enter `cached` for their
-    * upstream artifact, and a nested computeIfAbsent on the same map can
-    * throw "Recursive update" when keys share a bin (the Dedup lesson). */
-  private val graphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Drop the cached graph artifacts (Bench cold mode — each query then
-    * pays its own graph-build cost instead of riding another query's). */
-  private[graft] def clearArtifactCache(): Unit = graphCache.clear()
-
-  private def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val k = s"${graft.util.SessionToken(s)}:$key"
-    val existing = graphCache.get(k)
-    if (existing != null) existing
-    else {
-      val df = build.localCheckpoint(true)
-      val prev = graphCache.putIfAbsent(k, df)
-      if (prev != null) prev else df
-    }
-  }
+    *   - edges: undirected kNN edge set (≤ 3·|brands|) */
+  private def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    ArtifactCache.cached(s, key)(build.localCheckpoint(true))
 
   /** (ok, b): distinct order→brand incidences. One broadcast join; the
     * distinct folds into the downstream groupBy(ok) shuffle. */

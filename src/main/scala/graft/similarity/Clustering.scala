@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.util.ArtifactCache
 
 /** Embedding clustering + semantic deduplication (the SemDeDup recipe:
   * k-means the corpus embeddings, then prune near-duplicates WITHIN each
@@ -48,26 +49,6 @@ object Clustering {
     * drops. The knob, not the pipeline, is fixture-specific. */
   val Tau = 0.4
 
-  /** Per-(session, corpus) cache of the final assignment — q127 and q128
-    * share one k-means run, like the dedup pair index (Dedup.cached:
-    * plain get/putIfAbsent, NOT computeIfAbsent — no recursive-update
-    * hazard, a lost race only duplicates work). */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Drop the cached k-means run (Bench cold mode). */
-  private[graft] def clearArtifactCache(): Unit = cache.clear()
-  private def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val k = s"${graft.util.SessionToken(s)}:$key"
-    val existing = cache.get(k)
-    if (existing != null) existing
-    else {
-      val df = build.localCheckpoint(true)
-      val prev = cache.putIfAbsent(k, df)
-      if (prev != null) prev else df
-    }
-  }
-
   private def points(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "embeddings").select(col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("pe"))
@@ -110,12 +91,14 @@ object Clustering {
       .agg(expr("transform(array_sort(collect_list(struct(dim, m))), s -> s.m)")
         .as("ce"))
 
-  /** The final (vec_id, cluster, sq_dist) assignment after `Rounds`
-    * updates. Centroids are localCheckpoint'd per round (k rows — O(1)):
-    * the iteration never stacks lineage, the q84 connected-components
-    * precedent. */
-  private def finalAssign(s: SparkSession, d: String): DataFrame =
-    cached(s, s"kmeans:$d") {
+  /** The k-means run: the final (vec_id, cluster, sq_dist) assignment
+    * after `Rounds` updates and the centroids it was scored against.
+    * q127 and q128 share one run per (session, corpus), an
+    * [[ArtifactCache]] entry. Centroids are localCheckpoint'd per round
+    * (k rows — O(1)): the iteration never stacks lineage, the q84
+    * connected-components precedent. */
+  private def kmeans(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    ArtifactCache.cached(s, s"kmeans:$d") {
       val pts = points(s, d)
       // O(1)-row scalar probe (count → k); the corpus itself never
       // collects. At 100 TB this is a metadata-cheap count vs a
@@ -127,9 +110,11 @@ object Clustering {
       for (_ <- 1 to Rounds) {
         cents = centroids(pts, assign(pts, cents)).localCheckpoint(true)
       }
-      cache.putIfAbsent(s"${graft.util.SessionToken(s)}:kmeans-cents:$d", cents)
-      assign(pts, cents)
+      (assign(pts, cents).localCheckpoint(true), cents)
     }
+
+  private def finalAssign(s: SparkSession, d: String): DataFrame =
+    kmeans(s, d)._1
 
   /** One raw (un-checkpointed) assignment pass against the seed
     * centroids — spec-only surface so the plan shape of the iteration
@@ -143,10 +128,8 @@ object Clustering {
 
   /** The centroid frame the final assignment was scored against —
     * spec-only surface (Voronoi-optimality check). */
-  private[graft] def finalCentroids(s: SparkSession, d: String): DataFrame = {
-    finalAssign(s, d)
-    cache.get(s"${graft.util.SessionToken(s)}:kmeans-cents:$d")
-  }
+  private[graft] def finalCentroids(s: SparkSession, d: String): DataFrame =
+    kmeans(s, d)._2
 
   /** The k-means replay as DuckDB CTEs (terminal CTE: `a2`), shared by
     * both oracles. a-CTEs are assignment passes (QUALIFY argmin with the

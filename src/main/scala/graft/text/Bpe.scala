@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.util.ArtifactCache
 
 /** BPE vocabulary learning — the tokenizer-training op of an LLM data
   * pipeline (Sennrich et al. 2016's corpus side): iteratively count
@@ -57,35 +58,15 @@ object Bpe {
                      concat(acc, array(x))))""")
   }
 
-  /** Per-JVM cache of training runs: a trained tokenizer is a reusable
-    * artifact (train once, apply everywhere), so q111 and q113 — and the
-    * bench's min-of-2 re-runs — share one learning pass per (session,
-    * corpus, rounds). The cached word table is localCheckpoint'ed, i.e.
-    * session-bound, hence the session identity in the key (q90's
-    * fingerprinted-cache precedent). Plain get/putIfAbsent, NOT
-    * computeIfAbsent — the build runs Spark jobs and must not execute
-    * inside the map's lock (the Dedup.cached recursive-update lesson);
-    * a lost race only duplicates work. */
-  private val trainedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Int, String, String, Long)], DataFrame)]()
-
-  /** Drop cached training runs (Bench cold mode). */
-  private[graft] def clearArtifactCache(): Unit = trainedCache.clear()
-
   /** Run the merge-learning loop; returns the merge table AND the word
     * table in its post-merge state (word, freq, syms) — the trained
-    * tokenizer q113 applies. */
+    * tokenizer q113 applies. A trained tokenizer is a reusable artifact
+    * (train once, apply everywhere), so q111 and q113 — and the bench's
+    * min-of-2 re-runs — share one learning pass per (session, corpus,
+    * rounds), an [[ArtifactCache]] entry. */
   private def trained(s: SparkSession, d: String, rounds: Int)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
-    val key = s"${graft.util.SessionToken(s)}:$d:$rounds"
-    val existing = trainedCache.get(key)
-    if (existing != null) existing
-    else {
-      val built = trainUncached(s, d, rounds)
-      val prev = trainedCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
+      : (Seq[(Int, String, String, Long)], DataFrame) =
+    ArtifactCache.cached(s, s"bpe:$d:$rounds")(trainUncached(s, d, rounds))
 
   /** The same greedy left-to-right merge as [[mergeFold]], on a local
     * symbol sequence — the trainer-side twin of the SQL fold (BpeSpec
