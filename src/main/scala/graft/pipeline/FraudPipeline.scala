@@ -74,31 +74,41 @@ object FraudPipeline {
   /** Stages 1-3: prepare, train, persist model, replay test split. */
   def prepareTrainProduce(spark: SparkSession, sfDir: String,
                           workDir: String, replayBatch: Int = 50): Artifacts = {
-    // 1. prepare — exact stratified 70/30 (prepare_data.py:26-31 analog),
-    // ranked via the two-phase bucketed ranking (Sampling.rankedByClass):
-    // no bare-label window, so prep parallelism never collapses to #labels.
+    val (train, test) = prepareSplit(spark, sfDir)
+    val modelDir = s"$workDir/credit_model"
+    trainAndSave(train, modelDir)
+    val topicDir = s"$workDir/input_data"
+    val n = produce(test, topicDir, replayBatch)
+    Artifacts(modelDir, topicDir, s"$workDir/predictions", n)
+  }
+
+  /** Stage 1, prepare: the exact stratified 70/30 split as (train, test)
+    * (prepare_data.py:26-31 analog), ranked via the two-phase bucketed
+    * ranking (Sampling.rankedByClass): no bare-label window, so prep
+    * parallelism never collapses to #labels. */
+  private def prepareSplit(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame) = {
     val base = Sampling.rankedByClass(Tables(spark, sfDir, "embeddings"),
         "label", md5(concat(lit("42:"), col("vec_id").cast("string"))), "vec_id")
       .withColumn("is_train", col("rn") <= ceil(col("n_class") * 0.7).cast("long"))
-    val train = base.filter(col("is_train"))
-      .select("vec_id", "embedding", "label")
-    val test = base.filter(!col("is_train"))
-      .select("vec_id", "embedding", "label")
-
-    // 2. train + persist (train_model.py:16-33 analog): the 2-stage
-    // VectorAssembler -> RF pipeline — feature assembly is PERSISTED with
-    // the classifier, so predict round-trips the full recipe via load.
-    val model = graft.ml.MLQueries.pipeline()
-      .fit(graft.ml.MLQueries.withAssemblerInputs(train))
-    val modelDir = s"$workDir/credit_model"
-    model.write.overwrite().save(modelDir)
-
-    // 3. produce — throttled JSON replay (producer.py:30-43 analog)
-    val topicDir = s"$workDir/input_data"
-    val n = Replay.replay(test, "vec_id", topicDir,
-      batchSize = replayBatch, intervalMs = 0L)
-    Artifacts(modelDir, topicDir, s"$workDir/predictions", n)
+    (base.filter(col("is_train")).select("vec_id", "embedding", "label"),
+      base.filter(!col("is_train")).select("vec_id", "embedding", "label"))
   }
+
+  /** Stage 2, train + persist (train_model.py:16-33 analog): the 2-stage
+    * VectorAssembler -> RF pipeline — feature assembly is PERSISTED with
+    * the classifier, so predict round-trips the full recipe via load. */
+  private def trainAndSave(train: DataFrame, modelDir: String): Unit =
+    graft.ml.MLQueries.pipeline()
+      .fit(graft.ml.MLQueries.withAssemblerInputs(train))
+      .write.overwrite().save(modelDir)
+
+  /** Stage 3, produce: throttled JSON replay of the test split
+    * (producer.py:30-43 analog); returns the records replayed. */
+  private def produce(test: DataFrame, topicDir: String,
+      replayBatch: Int): Long =
+    Replay.replay(test, "vec_id", topicDir,
+      batchSize = replayBatch, intervalMs = 0L)
 
   /** A loaded model and a broadcast of its last stage, the classifier. */
   private final case class Loaded(
@@ -243,24 +253,17 @@ object FraudPipeline {
 
     val prepare = Dag.Stage("prepare",
       isDone = () => done(trainPath) && done(testPath)) { () =>
-      val base = Sampling.rankedByClass(Tables(spark, sfDir, "embeddings"),
-          "label", md5(concat(lit("42:"), col("vec_id").cast("string"))), "vec_id")
-        .withColumn("is_train", col("rn") <= ceil(col("n_class") * 0.7).cast("long"))
-      base.filter(col("is_train")).select("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(trainPath)
-      base.filter(!col("is_train")).select("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(testPath)
+      val (train, test) = prepareSplit(spark, sfDir)
+      train.write.mode("overwrite").parquet(trainPath)
+      test.write.mode("overwrite").parquet(testPath)
     }
     val train = Dag.Stage("train", deps = Seq("prepare"),
       isDone = () => new java.io.File(modelDir).exists) { () =>
-      val model = graft.ml.MLQueries.pipeline().fit(
-        graft.ml.MLQueries.withAssemblerInputs(spark.read.parquet(trainPath)))
-      model.write.overwrite().save(modelDir)
+      trainAndSave(spark.read.parquet(trainPath), modelDir)
     }
-    val produce = Dag.Stage("produce", deps = Seq("prepare"),
+    val produceStage = Dag.Stage("produce", deps = Seq("prepare"),
       isDone = () => new java.io.File(topicDir).exists) { () =>
-      Replay.replay(spark.read.parquet(testPath), "vec_id", topicDir,
-        batchSize = replayBatch, intervalMs = 0L): Unit
+      produce(spark.read.parquet(testPath), topicDir, replayBatch): Unit
     }
     // the streaming text sink writes _spark_metadata (not _SUCCESS):
     // directory existence is the idempotence marker here
@@ -269,7 +272,7 @@ object FraudPipeline {
       predict(spark, Artifacts(modelDir, topicDir, outDir, -1L))
         .awaitTermination()
     }
-    val report = Dag.run(Seq(prepare, train, produce, predictStage), parallelism = 2)
+    val report = Dag.run(Seq(prepare, train, produceStage, predictStage), parallelism = 2)
     (report, Artifacts(modelDir, topicDir, outDir, -1L))
   }
 }
