@@ -952,7 +952,6 @@ class GraftDvReaderFactory(tableSchema: StructType,
     val it = new GraftStorage.FileIterator(fp.path, fp.cols, fileSchema,
       fp.rows, fp.rangeStart, fp.rangeEnd, fileColIds = fp.colIds)
     val dels = fp.dels
-    val anyEq = fp.eqDels.nonEmpty
     val posRow = new GenericInternalRow(1)
     val joined = new JoinedRow()
     val wrapped = new Iterator[InternalRow] {
@@ -963,8 +962,7 @@ class GraftDvReaderFactory(tableSchema: StructType,
         while (it.hasNext) {
           val r = it.next()
           pos += 1 // ordinals count every PHYSICAL row, drops included
-          if (java.util.Arrays.binarySearch(dels, pos) < 0 &&
-              !(anyEq && dead(r))) {
+          if (java.util.Arrays.binarySearch(dels, pos) < 0 && !dead(r)) {
             posRow.setLong(0, pos)
             cur = joined(r, posRow)
             return true
