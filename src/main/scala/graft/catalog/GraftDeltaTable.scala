@@ -392,7 +392,8 @@ object GraftDeltaTable {
       clusterCols: Seq[String] = Nil): ScanBuilder = {
     val fold = foldDelta(delta, tableSchema, idType, idCol)
     new GraftDvScanBuilder(tableSchema, files, Map.empty, partCols,
-      bucketSpec, clusterCols, fold.deletes, fold.replacements)
+      bucketSpec, clusterCols, fold.deletes, fold.replacements,
+      exactFilters = true)
   }
 }
 

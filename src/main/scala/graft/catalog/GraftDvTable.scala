@@ -697,14 +697,18 @@ private[catalog] class GraftDvCowScanBuilder(tableSchema: StructType,
   * counts include deleted rows, so the aggregate/limit/offset/exact-
   * partition seams of [[GraftScanBuilder]] would all be unsound here.
   * Every filter returns as a post-scan residual (the file-source
-  * convention — Spark's codegen does exact row eval). */
+  * convention — Spark's codegen does exact row eval, and dynamic
+  * partition pruning anchors on a dim side's Filter node), unless
+  * `exactFilters`: the MOR read keeps its accepted filters exact, as it
+  * always has (every reader branch applies them), so its plans carry
+  * no residual Filter and compile no per-literal Filter code. */
 class GraftDvScanBuilder(tableSchema: StructType,
     files: Vector[GraftFileRef], dv: Map[String, Array[Long]],
     partCols: Seq[String] = Nil,
     bucketSpec: Option[(String, Int)] = None,
     clusterCols: Seq[String] = Nil,
     eq: Vector[GraftDvTable.EqDeletes] = Vector.empty,
-    rows: Array[UnsafeRow] = Array.empty)
+    rows: Array[UnsafeRow] = Array.empty, exactFilters: Boolean = false)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
 
@@ -726,7 +730,7 @@ class GraftDvScanBuilder(tableSchema: StructType,
       : Array[org.apache.spark.sql.sources.Filter] = {
     all = filters
     accepted = filters.filter(GraftFilterEval.supports(tableSchema, _))
-    filters // everything stays a residual
+    if (exactFilters) filters.filterNot(accepted.contains) else filters
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
     accepted
