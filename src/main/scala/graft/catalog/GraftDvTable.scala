@@ -699,9 +699,9 @@ private[catalog] class GraftDvCowScanBuilder(tableSchema: StructType,
   * Every filter returns as a post-scan residual (the file-source
   * convention — Spark's codegen does exact row eval, and dynamic
   * partition pruning anchors on a dim side's Filter node), unless
-  * `exactFilters`: the MOR read keeps its accepted filters exact, as it
-  * always has (every reader branch applies them), so its plans carry
-  * no residual Filter and compile no per-literal Filter code. */
+  * `exactFilters`: the MOR read keeps its accepted filters exact (every
+  * reader branch applies them), so its plans carry no residual Filter
+  * and compile no per-literal Filter code. */
 class GraftDvScanBuilder(tableSchema: StructType,
     files: Vector[GraftFileRef], dv: Map[String, Array[Long]],
     partCols: Seq[String] = Nil,
