@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.catalog.GraftCatalog
 
@@ -21,6 +22,17 @@ object GraftSession {
   lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   private val CatalogKey = "spark.sql.catalog.graft_cat"
+
+  /** Spark's session artifact isolation, which the engine turns off.
+    * While it is on, each session UUID gets its own executor class
+    * loader, and Spark caches generated classes per class loader; a
+    * streaming `start()` clones its session under a new UUID, so every
+    * query compiles all of its executor-side code again (6 Janino
+    * compiles per fraud scoring cycle in Spark 4.1). graft adds no
+    * session artifacts (jars, files, classes), so turning it off only
+    * lets every session's tasks share the executor's default class
+    * loader and its code cache. */
+  private val IsolationKey = "spark.sql.artifact.isolation.enabled"
 
   /** Every engine key the factory sets, in order, for `cpus` cores. */
   private[graft] def engineConf(cpus: Int): Seq[(String, String)] = Seq(
@@ -48,6 +60,7 @@ object GraftSession {
     // one; accumulated map-output state then slows scheduling. 2 min
     // bounds that window for any long session on this engine.
     "spark.cleaner.periodicGC.interval" -> "2min",
+    IsolationKey -> "false",
     "spark.sql.extensions" -> "graft.functions.GraftExtensions",
     CatalogKey -> classOf[GraftCatalog].getName)
 
@@ -56,6 +69,22 @@ object GraftSession {
     engineConf(cpus).foldLeft(SparkSession.builder()) {
       case (b, (k, v)) => b.config(k, v)
     }
+
+  /** Runs `start`, which starts a streaming query on `spark`, with
+    * artifact isolation off on `spark`, then restores the caller's
+    * previous value (set or unset). A query clones its session inside
+    * `start()` and keeps the clone's conf, so the query's tasks share
+    * the executor's default class loader and compile its generated code
+    * once per JVM, while `spark`'s own conf reads as before. The query
+    * stays in `spark.streams`. This also covers sessions the factory
+    * did not build. Like any conf change, it must not race other work
+    * on `spark`. */
+  def startShared(spark: SparkSession)(start: => StreamingQuery): StreamingQuery = {
+    val prev = spark.conf.getAll.get(IsolationKey) // None when unset
+    spark.conf.set(IsolationKey, "false")
+    try start
+    finally prev.fold(spark.conf.unset(IsolationKey))(spark.conf.set(IsolationKey, _))
+  }
 
   /** Binds `graft_cat` to [[GraftCatalog]] on `spark` — the same key and
     * value [[builder]] sets, so a declared query that calls this also

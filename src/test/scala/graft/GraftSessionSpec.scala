@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 /** [[GraftSession]] is the one home of engine configuration: the spec
   * session runs the factory's engine, and no other file in `src/main`
-  * builds a session or binds `graft_cat` by hand. */
+  * builds a session, binds `graft_cat` or sets artifact isolation by
+  * hand. */
 class GraftSessionSpec extends SparkSpec {
 
   test("the spec session holds every factory engine key at the factory's value") {
@@ -28,7 +29,8 @@ class GraftSessionSpec extends SparkSpec {
     def count(src: String, needle: String): Int =
       Iterator.iterate(src.indexOf(needle))(i => src.indexOf(needle, i + 1))
         .takeWhile(_ >= 0).size
-    Seq("SparkSession.builder()", "\"spark.sql.catalog.graft_cat\"").foreach {
+    Seq("SparkSession.builder()", "\"spark.sql.catalog.graft_cat\"",
+        "\"spark.sql.artifact.isolation.enabled\"").foreach {
       needle =>
         val elsewhere = sources
           .filterNot(_.getFileName.toString == "GraftSession.scala")

@@ -1,11 +1,15 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 import graft.Tables
 import graft.ml.MLQueries
@@ -14,7 +18,9 @@ import graft.streaming.Replay
 /** `FraudPipeline.predict` loads a saved model once per saved version:
   * repeat calls against an unchanged model directory reuse one loaded
   * instance, and overwriting the directory with a new model is picked up
-  * by the next call, which then scores with the new model. */
+  * by the next call, which then scores with the new model. Its queries
+  * share the executor's default class loader, so repeat cycles compile
+  * no generated code, also on a session with artifact isolation on. */
 class ModelCacheSpec extends graft.SparkSpec {
 
   /** A small forest over the pipeline's assembler; `shift` rotates the
@@ -69,5 +75,36 @@ class ModelCacheSpec extends graft.SparkSpec {
     assert(FraudPipeline.loadedModel(spark, modelDir) ne loaded)
     assert(same(p3, batch(m2, rows)), "the re-saved model scores the next cycle")
     assert(FraudPipeline.cachedModels(modelDir) == 1)
+  }
+
+  test("repeat predicts compile no code on a session with artifact isolation on") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val s = spark.newSession()
+    s.conf.set(key, "true")
+    val starts = new AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = starts.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    s.streams.addListener(listener)
+    try {
+      val work = Files.createTempDirectory("graft_codegen_cache_").toString
+      val modelDir = s"$work/model"
+      fit(0).write.overwrite().save(modelDir)
+      val rows = Tables(s, sfDir, "embeddings")
+        .select("vec_id", "embedding", "label").filter(col("vec_id") % 5 === 0)
+      val compiles = (1 to 4).map { i =>
+        val a = FraudPipeline.Artifacts(modelDir, s"$work/c$i/input",
+          s"$work/c$i/predictions", -1L)
+        Replay.replay(rows, "vec_id", a.topicDir, batchSize = 10)
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        FraudPipeline.predict(s, a).awaitTermination()
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      }
+      assert(compiles.drop(2).forall(_ == 0), s"Janino compiles per cycle: $compiles")
+      assert(s.conf.get(key) == "true", "the caller's conf reads as before")
+      assert(starts.get == 4, "every query started in the caller's manager")
+    } finally s.streams.removeListener(listener)
   }
 }
