@@ -306,7 +306,6 @@ object GraftDeltaTable {
   /** Eager memo invalidation for files deleted by the orphan sweep. */
   private[catalog] def invalidateFoldCache(paths: Set[String]): Unit =
     deltaParseCache.invalidateIf(k => paths.contains(k._1))
-  private[catalog] def foldCacheBytes: Long = deltaParseCache.currentBytes
 
   /** Driver-side fold of the delta FILES (never the base): read each
     * delta file in commit order, last op per id wins. Work and memory
@@ -381,9 +380,9 @@ object GraftDeltaTable {
     DeltaFold(deletes.result(), repl.toArray)
   }
 
-  /** The MOR read over a live delta log: the deletion-vector scan with
-    * no vectors, the fold's equality deletes and its replacement rows
-    * — one read path, runtime file skipping and row-group splitting
+  /** The MOR read over a live delta log: the positional scan with no
+    * vectors, the fold's equality deletes and its replacement rows —
+    * one read path, runtime file skipping and row-group splitting
     * included. */
   private[catalog] def foldedScan(tableSchema: StructType,
       files: Vector[GraftFileRef], delta: Vector[GraftFileRef],

@@ -5,7 +5,7 @@ import java.util
 import java.util.UUID
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read._
@@ -123,25 +123,8 @@ class GraftDvTable(ident: String, dir: NioPath,
     }
   }
 
-  // `_pos` joins `_file` as a metadata column; BOTH are non-nullable
-  // here because they form the row id of the delta write (Spark's
-  // row-level rewrite rejects nullable row-id attributes).
   override def metadataColumns(): Array[MetadataColumn] =
-    Array(
-      new MetadataColumn {
-        override def name(): String = "_file"
-        override def dataType(): DataType = StringType
-        override def isNullable: Boolean = false
-        override def comment(): String =
-          "path of the data file this row was read from"
-      },
-      new MetadataColumn {
-        override def name(): String = "_pos"
-        override def dataType(): DataType = LongType
-        override def isNullable: Boolean = false
-        override def comment(): String =
-          "physical position of this row within its data file"
-      })
+    GraftDvTable.metadataColumns()
 
   // The append log streams BASE file arrivals; a position delete does
   // not retract streamed rows, so (like MOR) streaming reads are a
@@ -198,10 +181,9 @@ class GraftDvTable(ident: String, dir: NioPath,
     if (delta.isEmpty)
       // a compacted DV table scans exactly like CoW: full pushdown,
       // SPJ, runtime filtering, manifest aggregates — except a query
-      // requesting `_pos` re-plans as a vector-less DV scan at build()
-      // (the plain readers never synthesize positions)
-      new GraftDvCowScanBuilder(st.schema, files, partSpecEncoded,
-        bucketSpec, sortColumns ++ zorderColumns)
+      // requesting `_pos` builds the positional scan with no deletes
+      new GraftScanBuilder(st.schema, files, None, partSpecEncoded,
+        bucketSpec, sortColumns ++ zorderColumns, posColumn = true)
     else {
       guardFoldBound(delta)
       val (eqs, vecs) = delta.partition(GraftDvTable.isEqRef)
@@ -378,6 +360,27 @@ object GraftDvTable {
     StructField("__file", StringType, nullable = false),
     StructField("__pos", LongType, nullable = false)))
 
+  /** The metadata columns of a DV table and of its snapshot views.
+    * `_pos` joins `_file`; BOTH are non-nullable here because they form
+    * the row id of the delta write (Spark's row-level rewrite rejects
+    * nullable row-id attributes). */
+  private[catalog] def metadataColumns(): Array[MetadataColumn] =
+    Array(
+      new MetadataColumn {
+        override def name(): String = "_file"
+        override def dataType(): DataType = StringType
+        override def isNullable: Boolean = false
+        override def comment(): String =
+          "path of the data file this row was read from"
+      },
+      new MetadataColumn {
+        override def name(): String = "_pos"
+        override def dataType(): DataType = LongType
+        override def isNullable: Boolean = false
+        override def comment(): String =
+          "physical position of this row within its data file"
+      })
+
   /** Is this change-ledger entry a deletion-vector file (vs an
     * inserted data file)? Decided by its RECORDED column list — the
     * marker names are reserved on DV tables, so no data file can
@@ -454,8 +457,6 @@ object GraftDvTable {
     vecFoldCache.invalidateIf(k => paths.contains(k._1))
     eqFoldCache.invalidateIf(k => paths.contains(k._1))
   }
-  private[catalog] def foldCacheBytes: Long =
-    vecFoldCache.currentBytes + eqFoldCache.currentBytes
 
   /** [[foldEq]] plus a merge of same-(fence, key-columns) groups —
     * the per-task eq files of one commit collapse to ONE set; the scan
@@ -623,24 +624,14 @@ class GraftDvSnapshotTable(ident: String, tableSchema: StructType,
   override def name(): String = ident
   override def schema(): StructType = tableSchema
   // same metadata surface as the live table: a time-travel read may
-  // ask for physical positions too (the DV-aware builders serve both)
+  // ask for physical positions too
   override def metadataColumns(): Array[MetadataColumn] =
-    Array(
-      new MetadataColumn {
-        override def name(): String = "_file"
-        override def dataType(): DataType = StringType
-        override def isNullable: Boolean = false
-      },
-      new MetadataColumn {
-        override def name(): String = "_pos"
-        override def dataType(): DataType = LongType
-        override def isNullable: Boolean = false
-      })
+    GraftDvTable.metadataColumns()
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     if (delta.isEmpty)
-      new GraftDvCowScanBuilder(tableSchema, files, Nil, None, Nil)
+      new GraftScanBuilder(tableSchema, files, None, posColumn = true)
     else {
       val (eqs, vecs) = delta.partition(GraftDvTable.isEqRef)
       new GraftDvScanBuilder(tableSchema, files,
@@ -649,59 +640,20 @@ class GraftDvSnapshotTable(ident: String, tableSchema: StructType,
     }
 }
 
-/** Scan builder for a DV table with NO live vectors: inherits every
-  * CoW pushdown seam (manifest aggregates, exact partition pushdown,
-  * LIMIT/TopN narrowing, SPJ) — except that a query requesting the
-  * `_pos` metadata column re-plans at build() as a [[GraftDvScan]]
-  * with an empty vector map, because only the DV readers synthesize
-  * positions (ADVICE r14: `SELECT _pos` on a fresh or freshly
-  * compacted DV table must work, not error). The re-plan reuses the
-  * already-pruned schema and pushed-filter state, so file pruning and
-  * residual semantics are identical to what Spark negotiated; under
-  * exact partition pushdown the must-match file set carries over
-  * whole (every physical row qualifies, so the empty residual stays
-  * sound). OFFSET pushdown alone is refused up front: a pushed offset
-  * removes Spark's Offset node and the DV scan has no row-prefix
-  * skip — refusal only means the operator stays in the plan. */
-private[catalog] class GraftDvCowScanBuilder(tableSchema: StructType,
-    files: Vector[GraftFileRef], partCols: Seq[String],
-    bucketSpec: Option[(String, Int)], clusterCols: Seq[String])
-    extends GraftScanBuilder(tableSchema, files, None, partCols,
-      bucketSpec, clusterCols) {
-
-  override def pushOffset(offset: Int): Boolean = false
-
-  override def build(): Scan = {
-    val needsPos = servedAgg.isEmpty &&
-      required.fieldNames.exists(_.equalsIgnoreCase("_pos"))
-    if (!needsPos) super.build()
-    else {
-      val base = narrowedByLimit.getOrElse(effFiles)
-      val surviving = base.filter(f =>
-        bucketSurvives(f) && fileColSurvives(f) &&
-          all.forall(GraftStorage.mayMatch(tableSchema, f, _)) &&
-          v2Only.forall(GraftV2Preds.mayMatch(tableSchema, f, _)))
-      new GraftDvScan(tableSchema, required, accepted,
-        surviving.zipWithIndex,
-        Map.empty, skipped = files.size - surviving.size, partCols,
-        bucketSpec, clusterCols)
-    }
-  }
-}
-
 /** Scan builder for a DV table with live vectors (and for every DV
   * row-level rewrite, which needs `_pos`), and for a merge-on-read
   * table with a live delta log, whose fold arrives as equality deletes
-  * on the row id plus the replacement `rows`. Deliberately implements
-  * ONLY column pruning and filter-driven FILE pruning: per-file row
-  * counts include deleted rows, so the aggregate/limit/offset/exact-
-  * partition seams of [[GraftScanBuilder]] would all be unsound here.
-  * Every filter returns as a post-scan residual (the file-source
-  * convention — Spark's codegen does exact row eval, and dynamic
-  * partition pruning anchors on a dim side's Filter node), unless
-  * `exactFilters`: the MOR read keeps its accepted filters exact (every
-  * reader branch applies them), so its plans carry no residual Filter
-  * and compile no per-literal Filter code. */
+  * on the row id plus the replacement `rows`. It builds the positional
+  * [[GraftScan]]. Deliberately implements ONLY column pruning and
+  * filter-driven FILE pruning: per-file row counts include deleted
+  * rows, so the aggregate/limit/offset/exact-partition seams of
+  * [[GraftScanBuilder]] would all be unsound here. Every filter returns
+  * as a post-scan residual (the file-source convention — Spark's
+  * codegen does exact row eval, and dynamic partition pruning anchors
+  * on a dim side's Filter node), unless `exactFilters`: the MOR read
+  * keeps its accepted filters exact (every reader branch applies them),
+  * so its plans carry no residual Filter and compile no per-literal
+  * Filter code. */
 class GraftDvScanBuilder(tableSchema: StructType,
     files: Vector[GraftFileRef], dv: Map[String, Array[Long]],
     partCols: Seq[String] = Nil,
@@ -736,251 +688,16 @@ class GraftDvScanBuilder(tableSchema: StructType,
     accepted
 
   override def build(): Scan = {
-    // ORIGINAL snapshot indices survive the skip filter: equality-
-    // delete fences bind by position in the full base-file vector.
     // Skipping by every filter is sound: deletes only shrink a file's
-    // rows inside the range its stats describe
-    val surviving = files.zipWithIndex.filter { case (f, _) =>
-      all.forall(GraftStorage.mayMatch(tableSchema, f, _)) }
-    new GraftDvScan(tableSchema, required, accepted, surviving, dv,
-      skipped = files.size - surviving.size, partCols, bucketSpec,
-      clusterCols, eq, rows)
-  }
-}
-
-class GraftDvScan(tableSchema: StructType, requiredSchema: StructType,
-    filters: Array[org.apache.spark.sql.sources.Filter],
-    indexedFiles: Vector[(GraftFileRef, Int)],
-    dv: Map[String, Array[Long]],
-    skipped: Int, partCols: Seq[String] = Nil,
-    bucketSpec: Option[(String, Int)] = None,
-    clusterCols: Seq[String] = Nil,
-    eq: Vector[GraftDvTable.EqDeletes] = Vector.empty,
-    rows: Array[UnsafeRow] = Array.empty)
-    extends Scan with Batch
-    with SupportsReportStatistics
-    with SupportsRuntimeV2Filtering {
-
-  private def files: Vector[GraftFileRef] = indexedFiles.map(_._1)
-
-  override def readSchema(): StructType = requiredSchema
-  override def toBatch: Batch = this
-
-  // ---- runtime file skipping (dynamic pruning) — same contract as
-  // [[GraftScan]]: a star join's dim-side selection arrives at
-  // execution time as IN predicates over the layout columns, and every
-  // file whose stats (or bucket id) exclude all probed keys is never
-  // opened. SOUND with live vectors: this only drops WHOLE files (a
-  // skipped file's deleted positions are simply unused), and surviving
-  // files still apply their vectors. The replacement-rows partition is
-  // never dropped. Without this, the vector window after a DELETE
-  // would silently cost a full fact scan per star join.
-  @volatile private var runtimeFiles: Vector[(GraftFileRef, Int)] =
-    indexedFiles
-
-  override def filterAttributes():
-      Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val names = tableSchema.fieldNames.toSet
-    (partCols.map(GraftPartField.parse(_).col) ++
-      bucketSpec.map(_._1) ++ clusterCols).distinct
-      .filter(names.contains)
-      .map(c => Expressions.column(c): NamedReference)
-      .toArray
-  }
-
-  override def filter(predicates: Array[
-      org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
-    runtimeFiles = runtimeFiles.filter { case (f, _) =>
-      predicates.forall(p =>
-        GraftV2Preds.bucketMayMatch(tableSchema, bucketSpec, f, p) &&
-          GraftV2Preds.mayMatch(tableSchema, f, p)) }
-
-  private[graft] def plannedFileCount: Int = files.size
-  private[graft] def runtimeFileCount: Int = runtimeFiles.size
-
-  // Large files split by their COMMIT-TIME row-group offsets exactly
-  // like the plain scan — each range additionally carries its starting
-  // row ordinal (the running sum of preceding groups' rows), so the
-  // reader's position counter stays FILE-global and the vector's
-  // ordinals keep binding: a DELETE against a freshly compacted 10 GB
-  // file doesn't turn its next scan into one straggler task. Files
-  // whose refs predate offset recording stay whole (positions must
-  // never be guessed from a byte split).
-  override def planInputPartitions(): Array[InputPartition] = {
-    val target = GraftScan.splitTargetBytesNow
-    val base = runtimeFiles.flatMap { case (f, idx) =>
-      val dels = dv.getOrElse(f.path, Array.emptyLongArray)
-      // equality deletes applicable to THIS file: fence strictly above
-      // its snapshot index (files the write had already seen; an
-      // unfenced legacy entry covers every file), merged into ONE set
-      // per key shape and narrowed by the file's stats where a
-      // single-column key allows
-      val eqDels: Seq[(Vector[String], java.util.Set[AnyRef])] =
-        eq.filter(e => e.fence < 0 || idx < e.fence)
-          .groupBy(_.keyCols).toSeq.map { case (keyCols, es) =>
-            (keyCols, GraftDvTable.narrowKeys(f, tableSchema, es))
-          }.filter(!_._2.isEmpty)
-      if (f.bytes <= target || f.bytes <= 0 || f.groups.isEmpty)
-        Seq(GraftDvFilePartition(f.path, f.cols, f.rows, f.colIds, dels,
-          eqDels = eqDels))
-      else {
-        val ranges = GraftStorage.rangesFromGroups(f.groups, target)
-        // posBase per range = rows of all groups strictly before the
-        // range's starting byte (ranges cover groups in file order)
-        var cum = 0L
-        ranges.map { case (s, e, r) =>
-          val p = GraftDvFilePartition(f.path, f.cols, r, f.colIds, dels,
-            rangeStart = s, rangeEnd = e, posBase = cum, eqDels = eqDels)
-          cum += r
-          p
-        }
-      }
-    }.map(p => p: InputPartition)
-    (if (rows.isEmpty) base else base :+ GraftMorRowsPartition(rows)).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftDvReaderFactory(tableSchema, requiredSchema, filters)
-
-  /** Live-row statistics: physical rows minus the (exact) deleted
-    * count plus the replacement rows — so join sizing sees the
-    * effective table (equality deletes only shrink it: an upper bound
-    * is the safe direction). Size is unknown unless EVERY base ref
-    * carries a real size (pre-stats refs read 0, and a partial sum
-    * would invite a false broadcast). */
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val phys = files.map(_.rows).sum
-    val deleted = files.map(f => dv.get(f.path).map(_.length.toLong)
-      .getOrElse(0L)).sum
-    val bytes = files.map(_.bytes).sum +
-      rows.map(_.getSizeInBytes.toLong).sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        if (files.exists(_.bytes <= 0)) java.util.OptionalLong.empty()
-        else java.util.OptionalLong.of(math.max(1L, bytes))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(math.max(0L, phys - deleted) + rows.length)
-    }
-  }
-
-  override def description(): String =
-    s"GraftDvScan(${files.size} files ($skipped skipped), " +
-      s"${dv.valuesIterator.map(_.length).sum} deleted positions, " +
-      s"${eq.map(_.keys.size).sum} equality-delete keys, " +
-      s"${rows.length} replacement rows)"
-}
-
-case class GraftDvFilePartition(path: String, cols: Vector[String],
-    rows: Long, colIds: Vector[Int], dels: Array[Long],
-    rangeStart: Long = 0L, rangeEnd: Long = Long.MaxValue,
-    posBase: Long = 0L,
-    eqDels: Seq[(Vector[String], java.util.Set[AnyRef])] = Nil)
-    extends InputPartition
-/** A merge-on-read fold's replacement rows, in table-schema layout. */
-case class GraftMorRowsPartition(rows: Array[UnsafeRow]) extends InputPartition
-
-/** DV reader: iterate the file in PHYSICAL order (no in-parquet
-  * filtering — ordinals must count every stored row), drop deleted
-  * ordinals and equality-deleted keys, then run the shared
-  * filter/project pipeline with `_file` as a partition constant and
-  * `_pos` as a per-row appended column. */
-class GraftDvReaderFactory(tableSchema: StructType,
-    requiredSchema: StructType,
-    filters: Array[org.apache.spark.sql.sources.Filter])
-    extends PartitionReaderFactory {
-
-  // data columns actually read from parquet (metadata columns are
-  // synthesized here, never requested from the file)
-  private val dataRequired = StructType(requiredSchema.fields
-    .filterNot(f => f.name == "_file" || f.name == "_pos"))
-
-  /** "Some equality delete kills this row", bound to `schema`'s
-    * ordinals once. A null key component never matches (upsert writes
-    * reject null keys, so no tombstone can bind to one). */
-  private def eqDead(schema: StructType,
-      eqDels: Seq[(Vector[String], java.util.Set[AnyRef])])
-      : InternalRow => Boolean = {
-    val names = schema.fieldNames.toIndexedSeq
-    val probes = eqDels.map { case (keyCols, keys) =>
-      (keyCols.map { c =>
-        val o = GraftStorage.ordinalByName(names, c)
-        (o, schema.fields(o).dataType)
-      }.toArray, keys)
-    }.toArray
-    r => probes.exists { case (ords, keys) =>
-      !ords.exists(o => r.isNullAt(o._1)) && keys.contains(
-        if (ords.length == 1)
-          GraftDeltaTable.idValue(r, ords(0)._1, ords(0)._2)
-        else Vector.tabulate(ords.length)(j =>
-          GraftDeltaTable.idValue(r, ords(j)._1, ords(j)._2)))
-    }
-  }
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p match {
-      case fp: GraftDvFilePartition => fp
-      case rp: GraftMorRowsPartition =>
-        // replacement rows come from the delta log, not a data file
-        return new GraftRowPipeline(tableSchema, requiredSchema, filters,
-          rp.rows.iterator, () => (), Map("_file" -> null))
-      case other =>
-        throw new IllegalStateException(s"unexpected partition $other")
-    }
-    // equality-delete key columns must be READ even when the query
-    // didn't ask for them; the pipeline's projection drops them
-    val fileSchema: StructType =
-      GraftStorage.projectionSchema(tableSchema, dataRequired, filters,
-        fp.eqDels.flatMap(_._1).toSet)
-    val dead = eqDead(fileSchema, fp.eqDels)
-    // NO-POSITION FAST PATH: a file with no tombstoned positions has
-    // nothing ordinal-bound to honor — when the query doesn't ask for
-    // `_pos` either, read it like the plain scan, WITH in-parquet
-    // row-group skipping, and drop equality-deleted keys as a row
-    // filter (filter-then-drop equals drop-then-filter for row-level
-    // predicates). A 10-row DELETE must not tax the 10,000 clean files
-    // of a 100-TB table with full-ordinal iteration.
-    val needsPos = requiredSchema.fieldNames
-      .exists(_.equalsIgnoreCase("_pos"))
-    if (fp.dels.isEmpty && !needsPos) {
-      val pit = new GraftStorage.FileIterator(fp.path, fp.cols,
-        fileSchema, fp.rows, fp.rangeStart, fp.rangeEnd,
-        pushFilters = filters, fileColIds = fp.colIds)
-      return new GraftRowPipeline(fileSchema, requiredSchema, filters,
-        if (fp.eqDels.isEmpty) pit else pit.filterNot(dead), pit,
-        Map("_file" -> UTF8String.fromString(fp.path)))
-    }
-    val neededSchema: StructType =
-      StructType(fileSchema.fields :+
-        StructField("_pos", LongType, nullable = false))
-    val it = new GraftStorage.FileIterator(fp.path, fp.cols, fileSchema,
-      fp.rows, fp.rangeStart, fp.rangeEnd, fileColIds = fp.colIds)
-    val dels = fp.dels
-    val posRow = new GenericInternalRow(1)
-    val joined = new JoinedRow()
-    val wrapped = new Iterator[InternalRow] {
-      private var pos = fp.posBase - 1L
-      private var cur: InternalRow = _
-      override def hasNext: Boolean = {
-        if (cur != null) return true
-        while (it.hasNext) {
-          val r = it.next()
-          pos += 1 // ordinals count every PHYSICAL row, drops included
-          if (java.util.Arrays.binarySearch(dels, pos) < 0 && !dead(r)) {
-            posRow.setLong(0, pos)
-            cur = joined(r, posRow)
-            return true
-          }
-        }
-        false
-      }
-      override def next(): InternalRow = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = cur; cur = null; r
-      }
-    }
-    new GraftRowPipeline(neededSchema, requiredSchema, filters, wrapped, it,
-      Map("_file" -> UTF8String.fromString(fp.path)))
+    // rows inside the range its stats describe. Equality-delete fences
+    // bind by position in the FULL base-file vector, which the deletes
+    // keep.
+    val surviving = files.filter(f =>
+      all.forall(GraftStorage.mayMatch(tableSchema, f, _)))
+    new GraftScan(tableSchema, required, accepted, surviving,
+      skipped = files.size - surviving.size, None, partCols, bucketSpec,
+      clusterCols,
+      deletes = Some(new GraftDeletes(tableSchema, dv, eq, files, rows)))
   }
 }
 

@@ -1,11 +1,12 @@
 package graft.catalog
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -39,10 +40,11 @@ import org.json4s.jackson.JsonMethods
   *     and empty tables contribute nothing (SQL MIN/MAX over no values
   *     is NULL — the same answer Spark computes).
   *
-  * MOR tables with live deltas never reach this code (they plan through
-  * [[GraftDvScanBuilder]], which has no aggregate seam); snapshot views
-  * serve their own version's refs, so time travel aggregates stay
-  * version-exact. */
+  * Reads with live deletes (DV vectors, equality deletes, a MOR delta
+  * log) never reach this code: they plan through
+  * [[GraftDvScanBuilder]], which has no aggregate seam, into the same
+  * [[GraftScan]]. Snapshot views serve their own version's refs, so
+  * time travel aggregates stay version-exact. */
 private[catalog] object GraftAggPushdown {
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.expressions.aggregate._
@@ -237,37 +239,39 @@ private[catalog] object GraftAggPushdown {
   * filter costs performance; accepting an unevaluatable one corrupts
   * results). File skipping additionally uses the REJECTED filters —
   * [[GraftStorage.mayMatch]] is conservative, so an unevaluatable
-  * filter can still prune a file whose stats exclude it. */
+  * filter can still prune a file whose stats exclude it.
+  *
+  * `posColumn`: the table serves the `_pos` metadata column (a DV
+  * table with no live deletes). A read that requests it builds the
+  * positional [[GraftScan]] with no deletes, whose readers count
+  * physical ordinals. */
 class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
     streamTable: Option[GraftTable], partCols: Seq[String] = Nil,
     bucketSpec: Option[(String, Int)] = None,
     clusterCols: Seq[String] = Nil,
-    admission: GraftAdmission = GraftAdmission())
+    admission: GraftAdmission = GraftAdmission(),
+    posColumn: Boolean = false)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownV2Filters
     with SupportsPushDownAggregates
     with SupportsPushDownLimit with SupportsPushDownTopN
     with SupportsPushDownOffset {
 
-  // scan-planning state is package-visible so [[GraftDvCowScanBuilder]]
-  // can re-plan an already-pruned/pushed scan as a DV scan when `_pos`
-  // is requested (metadata only the DV readers synthesize)
-  private[catalog] var required: StructType = tableSchema
-  private[catalog] var accepted: Array[org.apache.spark.sql.sources.Filter] =
+  private var required: StructType = tableSchema
+  private var accepted: Array[org.apache.spark.sql.sources.Filter] =
     Array.empty
   private var acceptedV2: Array[
     org.apache.spark.sql.connector.expressions.filter.Predicate] = Array.empty
-  private[catalog] var all: Array[org.apache.spark.sql.sources.Filter] =
-    Array.empty
+  private var all: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var allV2: Array[
     org.apache.spark.sql.connector.expressions.filter.Predicate] = Array.empty
   // predicates with no V1 rendering — still consulted for file skipping
   // through the V2 stats walk (GraftV2Preds.mayMatch)
-  private[catalog] var v2Only: Array[
+  private var v2Only: Array[
     org.apache.spark.sql.connector.expressions.filter.Predicate] = Array.empty
-  private[catalog] var servedAgg:
-      Option[(StructType, Array[Array[Any]], String)] = None
-  private[catalog] var narrowedByLimit: Option[Vector[GraftFileRef]] = None
+  private var servedAgg: Option[(StructType, Array[Array[Any]], String)] =
+    None
+  private var narrowedByLimit: Option[Vector[GraftFileRef]] = None
   // exact partition-filter pushdown (VERDICT r12 item 5): when every
   // pushed predicate references only PARTITION columns and the file
   // set is DECIDABLE (each file provably full-matches or provably
@@ -276,9 +280,8 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
   // pushed: no residual Filter remains, which is precisely what lets
   // Spark attempt aggregate/limit pushdown — `COUNT(*) WHERE p = v`
   // on a 100-TB partitioned table becomes a zero-I/O manifest fold.
-  private[catalog] var exactFiles: Option[Vector[GraftFileRef]] = None
-  private[catalog] def effFiles: Vector[GraftFileRef] =
-    exactFiles.getOrElse(files)
+  private var exactFiles: Option[Vector[GraftFileRef]] = None
+  private def effFiles: Vector[GraftFileRef] = exactFiles.getOrElse(files)
 
   // nested = true: every partition of this scan reads through the
   // parquet FileIterator, so a validated nested prune reaches the
@@ -310,22 +313,11 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
     }
     accepted = acc.map(_._2)
     acceptedV2 = acc.map(_._1)
-    // EXACT partition-filter pushdown: engaged only when (a) the
-    // session conf allows it, (b) every predicate both renders to V1
-    // and references only partition columns, and (c) the current file
-    // set is decidable — so selecting the must-match files IS the
-    // filter, bit-exactly. Trade-off (why the conf exists): a fully-
-    // pushed filter leaves no Filter node, and if THIS table is the
-    // dim side of a star join, Spark's partition-pruning planner then
-    // sees no selective dim predicate and skips the DPP subquery the
-    // FACT side's runtime file skipping hangs on. Partition-exact
-    // filters on a dim table are a rare shape; the metadata-served
-    // aggregate is the common one — default on, switchable off.
-    val exactOn =
-      try org.apache.spark.sql.SparkSession.active.conf
-        .get("spark.graft.exactPartitionPushdown", "true") == "true"
-      catch { case _: Exception => false }
-    if (exactOn && partCols.nonEmpty && predicates.nonEmpty &&
+    // EXACT partition-filter pushdown: engaged only when (a) every
+    // predicate both renders to V1 and references only partition
+    // columns, and (b) the current file set is decidable — so
+    // selecting the must-match files IS the filter, bit-exactly.
+    if (partCols.nonEmpty && predicates.nonEmpty &&
         all.length == predicates.length && {
           // SOURCE column names: a days(ts) table's users filter on ts,
           // and the per-file decidability gate below is what keeps the
@@ -366,7 +358,7 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
     * file's recorded bucket, so a file in a different bucket cannot
     * contain the value (unbucketed legacy refs, bucket -1, never
     * prune). Null literals stay conservative. */
-  private[catalog] def bucketSurvives(f: GraftFileRef): Boolean =
+  private def bucketSurvives(f: GraftFileRef): Boolean =
     bucketSpec match {
       case Some((c, n)) if f.bucket >= 0 =>
         val o = GraftStorage.ordinalByName(
@@ -440,10 +432,13 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
     * qualifies); refused when a LIMIT already narrowed the plan (the
     * partial-limit shape keeps its own operator above). A `SELECT *
     * FROM t OFFSET 1e9` on a 100-TB table opens no file the offset
-    * provably spans. */
+    * provably spans. Refused on a table that serves `_pos`: Spark
+    * prunes columns only after this push, so whether `_pos` is required
+    * is not known yet, and the positional read keeps Spark's Offset
+    * operator. */
   private var pushedOffset: Long = 0L
   override def pushOffset(offset: Int): Boolean = {
-    if ((allV2.nonEmpty && exactFiles.isEmpty) ||
+    if ((allV2.nonEmpty && exactFiles.isEmpty) || posColumn ||
         narrowedByLimit.isDefined || offset <= 0) return false
     pushedOffset = offset.toLong
     true
@@ -522,7 +517,7 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
     * surgical-rewrite shape. Row-level evaluation stays in Spark's
     * residual Filter (it resolves the metadata column); this only
     * narrows the planned set. */
-  private[catalog] def fileColSurvives(f: GraftFileRef): Boolean = all.forall {
+  private def fileColSurvives(f: GraftFileRef): Boolean = all.forall {
     case org.apache.spark.sql.sources.EqualTo("_file", v: String) =>
       f.path == v
     case org.apache.spark.sql.sources.EqualNullSafe("_file", v: String) =>
@@ -565,9 +560,14 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
         }
         (surviving0.drop(i), pushedOffset - cum)
       }
+    // `_pos` on a table with no live deletes: the positional scan with
+    // no deletes (only its readers count physical ordinals)
+    val withPos = posColumn &&
+      required.fieldNames.exists(_.equalsIgnoreCase("_pos"))
     new GraftScan(tableSchema, required, accepted, surviving,
       skipped = files.size - surviving.size, streamTable, partCols,
-      bucketSpec, clusterCols, admission, skipLeadingRows = skipRows)
+      bucketSpec, clusterCols, admission, skipLeadingRows = skipRows,
+      deletes = if (withPos) Some(GraftDeletes.none) else None)
   }
 }
 
@@ -971,7 +971,16 @@ object GraftFilterEval {
 /** Batch scan over a pinned file list — one input partition per file
   * (the commit unit), rows read where the data is. Also the
   * MICRO_BATCH_READ seam: `toMicroBatchStream` streams the table's
-  * append log with file-index offsets. */
+  * append log with file-index offsets.
+  *
+  * The one base-file scan of every table kind: a read with `deletes`
+  * (live DV vectors or equality deletes, a MOR delta log's fold, or
+  * `_pos` on a DV table) is POSITIONAL. Each file's input partitions
+  * carry its deleted positions and the equality-delete keys that apply
+  * to it, a MOR fold's replacement rows ship as one more partition,
+  * and statistics count live rows. Per-file `rows` then include
+  * deleted rows, so a positional scan reports no column stats and no
+  * key-grouped partitioning. */
 class GraftScan(tableSchema: StructType, requiredSchema: StructType,
     rowFilters: Array[org.apache.spark.sql.sources.Filter],
     files: Vector[GraftFileRef], skipped: Int,
@@ -979,7 +988,8 @@ class GraftScan(tableSchema: StructType, requiredSchema: StructType,
     bucketSpec: Option[(String, Int)] = None,
     clusterCols: Seq[String] = Nil,
     admission: GraftAdmission = GraftAdmission(),
-    skipLeadingRows: Long = 0L)
+    skipLeadingRows: Long = 0L,
+    deletes: Option[GraftDeletes] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning with SupportsRuntimeV2Filtering {
 
@@ -995,9 +1005,11 @@ class GraftScan(tableSchema: StructType, requiredSchema: StructType,
   // this turns "scan the whole fact table" into "open the handful of
   // files the dim selection touches". Sound: filter() only narrows,
   // via the same conservative mayMatch used at plan time; correctness
-  // never depends on it. Disabled under SPJ (narrowing keyed
-  // partitions would desync the reported key grouping) and for
-  // streaming scans (each micro-batch re-plans anyway).
+  // never depends on it — and sound with live deletes: it drops WHOLE
+  // files, and survivors still apply theirs. Disabled under SPJ
+  // (narrowing keyed partitions would desync the reported key
+  // grouping) and for streaming scans (each micro-batch re-plans
+  // anyway).
   @volatile private var runtimeFiles: Vector[GraftFileRef] = files
 
   // NOTE: streamTable being set does NOT mean streaming execution —
@@ -1059,7 +1071,8 @@ class GraftScan(tableSchema: StructType, requiredSchema: StructType,
       try org.apache.spark.sql.SparkSession.active.conf
         .get("spark.sql.sources.v2.bucketing.enabled", "false") == "true"
       catch { case _: Exception => false }
-    if (files.isEmpty || !enabled || skipLeadingRows > 0) None
+    if (files.isEmpty || !enabled || skipLeadingRows > 0 ||
+        deletes.isDefined) None
     else if (bucketSpec.isDefined) {
       // hash-bucket layout: every file carries its recorded bucket id;
       // the clustering expression is the catalog-resolved bucket(n, c)
@@ -1122,7 +1135,10 @@ class GraftScan(tableSchema: StructType, requiredSchema: StructType,
     * Refs from pre-stats logs carry bytes = 0; report unknown rather
     * than a flattering zero (a false broadcast OOMs, a missed one
     * merely shuffles). */
-  override def estimateStatistics(): Statistics = new Statistics {
+  override def estimateStatistics(): Statistics =
+    deletes.fold(fileStatistics)(_.statistics(files))
+
+  private def fileStatistics: Statistics = new Statistics {
     // EVERY surviving ref must carry a real size, or the sum
     // understates the table (refs from pre-stats logs read bytes = 0)
     // and invites a false broadcast — report unknown instead
@@ -1269,15 +1285,34 @@ class GraftScan(tableSchema: StructType, requiredSchema: StructType,
             colIds = runtimeFiles.head.colIds,
             skipRows = skipLeadingRows): InputPartition) +:
             GraftScan.partitionsFor(runtimeFiles.tail)
-        else GraftScan.partitionsFor(runtimeFiles)
+        else {
+          val d = deletes.getOrElse(GraftDeletes.none)
+          val parts = GraftScan.partitionsFor(runtimeFiles, d, withPos)
+          // the replacement rows are never dropped by runtime filtering
+          if (d.rows.isEmpty) parts
+          else parts :+ (GraftMorRowsPartition(d.rows): InputPartition)
+        }
     }
+
+  // `_pos` is synthesized only by a positional scan: on any other table
+  // a column of that name is data
+  private def withPos: Boolean = deletes.isDefined &&
+    requiredSchema.fieldNames.exists(_.equalsIgnoreCase("_pos"))
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(tableSchema, requiredSchema, rowFilters)
-  override def description(): String =
-    s"GraftScan(${files.map(_.rows).sum} rows, ${files.size} files " +
-      s"($skipped skipped), " +
-      s"PushedFilters: [${rowFilters.mkString(", ")}], " +
-      s"ReadSchema: ${requiredSchema.catalogString})"
+    new GraftReaderFactory(tableSchema, requiredSchema, rowFilters, withPos)
+  override def description(): String = deletes match {
+    case Some(d) =>
+      s"GraftDvScan(${files.size} files ($skipped skipped), " +
+        s"${d.positions.valuesIterator.map(_.length).sum} deleted " +
+        s"positions, ${d.eq.map(_.keys.size).sum} equality-delete keys, " +
+        s"${d.rows.length} replacement rows)"
+    case None =>
+      s"GraftScan(${files.map(_.rows).sum} rows, ${files.size} files " +
+        s"($skipped skipped), " +
+        s"PushedFilters: [${rowFilters.mkString(", ")}], " +
+        s"ReadSchema: ${requiredSchema.catalogString})"
+  }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     streamTable match {
@@ -1296,11 +1331,77 @@ class GraftScan(tableSchema: StructType, requiredSchema: StructType,
 /** One scan task: a data file, or a row-group byte range of one (large
   * files split at plan time — see [[GraftScan.partitionsFor]]). `rows`
   * is the count within the range (exact, from the footer), feeding the
-  * zero-column count-only path. */
+  * zero-column count-only path. A positional scan's tasks also carry
+  * the file's sorted deleted positions (`dels`), the range's first
+  * file-global ordinal (`posBase`) and the equality-delete key sets
+  * that apply to the file, one per key shape (`eqDels`). */
 case class GraftFilePartition(path: String, cols: Vector[String],
     rows: Long, rangeStart: Long = 0L, rangeEnd: Long = Long.MaxValue,
-    colIds: Vector[Int] = Vector.empty, skipRows: Long = 0L)
+    colIds: Vector[Int] = Vector.empty, skipRows: Long = 0L,
+    dels: Array[Long] = Array.emptyLongArray, posBase: Long = 0L,
+    eqDels: Seq[(Vector[String], java.util.Set[AnyRef])] = Nil)
     extends InputPartition
+
+/** A merge-on-read fold's replacement rows, in table-schema layout. */
+case class GraftMorRowsPartition(rows: Array[UnsafeRow]) extends InputPartition
+
+/** The deletes a read of a DV or merge-on-read table applies over its
+  * base files: the folded vectors (path -> SORTED DISTINCT positions),
+  * the equality deletes (fenced by base-file index in the snapshot's
+  * `snapshotFiles`) and a MOR fold's replacement rows. */
+final class GraftDeletes(tableSchema: StructType,
+    val positions: Map[String, Array[Long]],
+    val eq: Vector[GraftDvTable.EqDeletes],
+    snapshotFiles: Vector[GraftFileRef], val rows: Array[UnsafeRow]) {
+
+  private lazy val snapshotIndex: Map[String, Int] =
+    snapshotFiles.iterator.map(_.path).zipWithIndex.toMap
+
+  def positionsOf(f: GraftFileRef): Array[Long] =
+    positions.getOrElse(f.path, Array.emptyLongArray)
+
+  /** Equality deletes applicable to `f`: fence strictly above its
+    * snapshot index (files the write had already seen; an unfenced
+    * legacy entry covers every file), merged into ONE set per key
+    * shape and narrowed by the file's stats where a single-column key
+    * allows. */
+  def eqOf(f: GraftFileRef): Seq[(Vector[String], java.util.Set[AnyRef])] =
+    if (eq.isEmpty) Nil
+    else {
+      val idx = snapshotIndex(f.path)
+      eq.filter(e => e.fence < 0 || idx < e.fence)
+        .groupBy(_.keyCols).toSeq.map { case (keyCols, es) =>
+          (keyCols, GraftDvTable.narrowKeys(f, tableSchema, es))
+        }.filter(!_._2.isEmpty)
+    }
+
+  /** Live-row statistics over the planned `files`: physical rows minus
+    * the (exact) deleted positions plus the replacement rows, so join
+    * sizing sees the effective table (equality deletes only shrink it:
+    * an upper bound is the safe direction). Size is unknown unless
+    * EVERY base ref carries a real size (pre-stats refs read 0, and a
+    * partial sum would invite a false broadcast). */
+  def statistics(files: Vector[GraftFileRef]): Statistics = {
+    val phys = files.map(_.rows).sum
+    val deleted = files.map(positionsOf(_).length.toLong).sum
+    val bytes = files.map(_.bytes).sum +
+      rows.map(_.getSizeInBytes.toLong).sum
+    new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        if (files.exists(_.bytes <= 0)) java.util.OptionalLong.empty()
+        else java.util.OptionalLong.of(math.max(1L, bytes))
+      override def numRows(): java.util.OptionalLong =
+        java.util.OptionalLong.of(math.max(0L, phys - deleted) + rows.length)
+    }
+  }
+}
+
+object GraftDeletes {
+  /** A positional read with nothing deleted: `_pos` on a DV table. */
+  val none: GraftDeletes =
+    new GraftDeletes(new StructType(), Map.empty, Vector.empty, Vector.empty,
+      Array.empty)
+}
 
 /** SPJ variant of a file task: carries the file's pinned partition
   * tuple as catalyst values so Spark's key-grouped planner can merge
@@ -1326,68 +1427,155 @@ object GraftScan {
       .get("graft.scan.split_target_bytes", DefaultSplitBytes.toString).toLong
     catch { case _: Exception => DefaultSplitBytes }
 
-  /** The DV scan splits large files too (with file-global position
-    * bases) — same knob, same default. */
-  private[catalog] def splitTargetBytesNow: Long = splitTargetBytes
-
   /** One input partition per file — the commit unit — EXCEPT files
     * larger than the split target (compaction output): those split by
     * parquet row-group ranges so a 10 GB compacted file fans out to
     * ~80 tasks instead of one straggler (VERDICT r10 item 8). The
     * ranges come from the ref's COMMIT-TIME recorded offsets (VERDICT
     * r11 item 2) — zero plan-time I/O; only legacy refs that predate
-    * recording fall back to a driver footer read. */
-  private[catalog] def partitionsFor(
-      files: Vector[GraftFileRef]): Array[InputPartition] = {
+    * recording fall back to a driver footer read.
+    *
+    * Under `deletes` each task carries its file's deletes, and each
+    * range its starting row ordinal (the running sum of preceding
+    * groups' rows), so the reader's position counter stays FILE-global
+    * and the vector's ordinals keep binding. A file whose ranges need
+    * positions (deleted positions, or `withPos`) and whose ref predates
+    * offset recording stays whole: positions are never guessed from a
+    * byte split. */
+  private[catalog] def partitionsFor(files: Vector[GraftFileRef],
+      deletes: GraftDeletes = GraftDeletes.none,
+      withPos: Boolean = false): Array[InputPartition] = {
     val target = splitTargetBytes
     files.flatMap { f =>
-      if (f.bytes <= target || f.bytes <= 0)
-        Seq(GraftFilePartition(f.path, f.cols, f.rows, colIds = f.colIds))
-      else {
-        val ranges =
-          if (f.groups.nonEmpty)
-            GraftStorage.rangesFromGroups(f.groups, target)
-          else GraftStorage.splitRanges(f.path, target)
-        ranges.map { case (s, e, r) =>
-          GraftFilePartition(f.path, f.cols, r, s, e, f.colIds)
+      val whole = GraftFilePartition(f.path, f.cols, f.rows,
+        colIds = f.colIds, dels = deletes.positionsOf(f),
+        eqDels = deletes.eqOf(f))
+      if (f.bytes <= target || f.bytes <= 0) Seq(whole)
+      else if (f.groups.nonEmpty) {
+        var cum = 0L
+        GraftStorage.rangesFromGroups(f.groups, target).map {
+          case (s, e, r) =>
+            val p = whole.copy(rows = r, rangeStart = s, rangeEnd = e,
+              posBase = cum)
+            cum += r
+            p
         }
+      } else if (withPos || whole.dels.nonEmpty) Seq(whole)
+      else GraftStorage.splitRanges(f.path, target).map { case (s, e, r) =>
+        whole.copy(rows = r, rangeStart = s, rangeEnd = e)
       }
     }.map(p => p: InputPartition).toArray
   }
 }
 
 /** Builds the per-task reader pipeline: parquet-project to the columns
-  * needed (required + filter references; ALTER-added columns the file
-  * predates backfill null), evaluate accepted filters, project to the
-  * required schema. All per-row; names are bound ONCE per task. */
+  * needed (required + filter references + equality-delete keys;
+  * ALTER-added columns the file predates backfill null), drop deleted
+  * rows, evaluate accepted filters, project to the required schema.
+  * All per-row; names are bound ONCE per task.
+  *
+  * A range with no deleted positions and no `_pos` request reads with
+  * in-parquet row-group skipping and drops equality-deleted keys as a
+  * row filter (filter-then-drop equals drop-then-filter for row-level
+  * predicates): a 10-row DELETE must not tax the 10,000 clean files of
+  * a 100-TB table with full-ordinal iteration. Otherwise the range is
+  * read in PHYSICAL order (ordinals must count every stored row), its
+  * deleted ordinals and equality-deleted keys dropped, and `_pos`
+  * appended per row. */
 class GraftReaderFactory(tableSchema: StructType,
     requiredSchema: StructType,
-    filters: Array[org.apache.spark.sql.sources.Filter])
+    filters: Array[org.apache.spark.sql.sources.Filter],
+    withPos: Boolean = false)
     extends PartitionReaderFactory {
 
-  private val neededSchema: StructType =
-    GraftStorage.projectionSchema(tableSchema, requiredSchema, filters,
-      Set.empty)
+  /** "Some equality delete kills this row", bound to `schema`'s
+    * ordinals once. A null key component never matches (upsert writes
+    * reject null keys, so no tombstone can bind to one). */
+  private def eqDead(schema: StructType,
+      eqDels: Seq[(Vector[String], java.util.Set[AnyRef])])
+      : InternalRow => Boolean = {
+    val names = schema.fieldNames.toIndexedSeq
+    val probes = eqDels.map { case (keyCols, keys) =>
+      (keyCols.map { c =>
+        val o = GraftStorage.ordinalByName(names, c)
+        (o, schema.fields(o).dataType)
+      }.toArray, keys)
+    }.toArray
+    r => probes.exists { case (ords, keys) =>
+      !ords.exists(o => r.isNullAt(o._1)) && keys.contains(
+        if (ords.length == 1)
+          GraftDeltaTable.idValue(r, ords(0)._1, ords(0)._2)
+        else Vector.tabulate(ords.length)(j =>
+          GraftDeltaTable.idValue(r, ords(j)._1, ords(j)._2)))
+    }
+  }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val (path, cols, rows, rangeStart, rangeEnd, colIds, skip) = p match {
-      case fp: GraftFilePartition =>
-        (fp.path, fp.cols, fp.rows, fp.rangeStart, fp.rangeEnd, fp.colIds,
-          fp.skipRows)
+    val fp = p match {
+      case fp: GraftFilePartition => fp
       case kp: GraftKeyedFilePartition =>
-        (kp.path, kp.cols, kp.rows, 0L, Long.MaxValue, kp.colIds, 0L)
+        GraftFilePartition(kp.path, kp.cols, kp.rows, colIds = kp.colIds)
+      case rp: GraftMorRowsPartition =>
+        // replacement rows come from the delta log, not a data file
+        return new GraftRowPipeline(tableSchema, requiredSchema, filters,
+          rp.rows.iterator, () => (), Map("_file" -> null))
       case other =>
         throw new IllegalStateException(s"unexpected partition $other")
     }
-    val it = new GraftStorage.FileIterator(path, cols, neededSchema,
-      rows, rangeStart, rangeEnd, filters, colIds)
+    // equality-delete key columns must be READ even when the query
+    // didn't ask for them; the pipeline's projection drops them
+    val fileSchema = GraftStorage.projectionSchema(tableSchema,
+      requiredSchema, filters, fp.eqDels.flatMap(_._1).toSet)
+    val dead = eqDead(fileSchema, fp.eqDels)
+    val consts = Map("_file" -> UTF8String.fromString(fp.path))
+    val (neededSchema, it, live) =
+      if (fp.dels.isEmpty && !withPos) {
+        val it = new GraftStorage.FileIterator(fp.path, fp.cols, fileSchema,
+          fp.rows, fp.rangeStart, fp.rangeEnd, filters, fp.colIds)
+        (fileSchema, it, if (fp.eqDels.isEmpty) it else it.filterNot(dead))
+      } else {
+        val it = new GraftStorage.FileIterator(fp.path, fp.cols, fileSchema,
+          fp.rows, fp.rangeStart, fp.rangeEnd, fileColIds = fp.colIds)
+        (StructType(fileSchema.fields :+
+          StructField("_pos", LongType, nullable = false)), it,
+          positioned(it, fp, dead))
+      }
     // pushed-OFFSET boundary file: drop the row prefix at the source
     // (offset pushes only on unfiltered scans, so this drops exactly
-    // `skip` table rows)
-    val src = if (skip > 0) it.drop(skip.toInt) else it
+    // `skipRows` table rows)
+    val src = if (fp.skipRows > 0) live.drop(fp.skipRows.toInt) else live
     new GraftRowPipeline(neededSchema, requiredSchema, filters, src, it,
-      Map("_file" ->
-        org.apache.spark.unsafe.types.UTF8String.fromString(path)))
+      consts)
+  }
+
+  /** `it`'s live rows with their file-global ordinal appended: ordinals
+    * count every PHYSICAL row, drops included. */
+  private def positioned(it: Iterator[InternalRow], fp: GraftFilePartition,
+      dead: InternalRow => Boolean): Iterator[InternalRow] = {
+    val dels = fp.dels
+    val posRow = new GenericInternalRow(1)
+    val joined = new JoinedRow()
+    new Iterator[InternalRow] {
+      private var pos = fp.posBase - 1L
+      private var cur: InternalRow = _
+      override def hasNext: Boolean = {
+        if (cur != null) return true
+        while (it.hasNext) {
+          val r = it.next()
+          pos += 1
+          if (java.util.Arrays.binarySearch(dels, pos) < 0 && !dead(r)) {
+            posRow.setLong(0, pos)
+            cur = joined(r, posRow)
+            return true
+          }
+        }
+        false
+      }
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        val r = cur; cur = null; r
+      }
+    }
   }
 }
 

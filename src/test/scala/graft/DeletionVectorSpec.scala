@@ -291,11 +291,11 @@ class DeletionVectorSpec extends SparkSpec {
       assert(df.collect().map(_.toString).toSeq == expected)
       val scan = df.queryExecution.executedPlan.collectLeaves().collect {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-            if b.scan.isInstanceOf[graft.catalog.GraftDvScan] => b.scan
+            if b.scan.isInstanceOf[graft.catalog.GraftScan] => b.scan
       }.collectFirst {
-        case s: graft.catalog.GraftDvScan
+        case s: graft.catalog.GraftScan
             if s.plannedFileCount == factFiles => s
-      }.getOrElse(fail("fact GraftDvScan not found in plan"))
+      }.getOrElse(fail("fact GraftScan not found in plan"))
       assert(scan.runtimeFileCount < scan.plannedFileCount,
         s"runtime filter pruned nothing " +
           s"(${scan.runtimeFileCount}/${scan.plannedFileCount})")
@@ -307,15 +307,50 @@ class DeletionVectorSpec extends SparkSpec {
     }
   }
 
+  // Spark's partition-pruning planner resolves a scan's runtime-filter
+  // attributes against the scan's OUTPUT: a layout column the query
+  // does not read (here the sort column `s`) must not be advertised,
+  // with or without live deletes
+  for ((mode, props, dml) <- Seq(
+      ("cow", "'graft.mode'='cow'", "DELETE FROM $f WHERE k % 3 = 1"),
+      ("dv", "'graft.mode'='dv'", "DELETE FROM $f WHERE k % 3 = 1"),
+      ("mor", "'graft.mode'='mor', 'graft.row_id'='k'",
+        "UPDATE $f SET v = 0 WHERE k = 3")))
+    test(s"$mode: a join that does not read the sort column plans and " +
+        "answers with live deletes") {
+      spark.conf.set("spark.sql.catalog.gdv",
+        classOf[graft.catalog.GraftCatalog].getName)
+      val f = s"gdv.default.${mode}_unread_fact"
+      val d = s"gdv.default.${mode}_unread_dim"
+      sql(s"DROP TABLE IF EXISTS $f")
+      sql(s"DROP TABLE IF EXISTS $d")
+      sql(s"CREATE TABLE $f (k BIGINT, s BIGINT, v BIGINT) " +
+        s"TBLPROPERTIES ($props, 'graft.sort_by'='s')")
+      sql(s"INSERT INTO $f SELECT id, id % 10, id * 7 FROM range(200)")
+      sql(dml.replace("$f", f))
+      sql(s"CREATE TABLE $d (k BIGINT, tag STRING)")
+      sql(s"INSERT INTO $d VALUES (5, 'pick'), (9, 'pick'), (100, 'x')")
+      val got = sql(s"SELECT f.v FROM $f f JOIN $d d ON f.k = d.k " +
+        "WHERE d.tag = 'pick' ORDER BY f.v").collect().map(_.getLong(0))
+      assert(got.toSeq == Seq(35L, 63L))
+    }
+
   test("_pos and _file are selectable on a fresh (vector-less) DV " +
       "table and again after compaction folds the vectors away") {
     val t = setup("dv_pos_fresh")
-    // no DML yet: the CoW-path builder must re-plan as a DV scan when
-    // _pos is requested (ADVICE r14 — this used to error at runtime)
+    // no DML yet: the CoW-path builder must build the positional scan
+    // when _pos is requested (ADVICE r14 — this used to error at runtime)
     val fresh = sql(s"SELECT _file, _pos, k FROM $t ORDER BY k").collect()
     assert(fresh.map(_.getLong(1)).toSeq ==
       Seq(0L, 1L, 2L, 3L, 0L, 1L, 2L, 3L), "per-file physical ordinals")
     assert(fresh.map(_.getString(0)).distinct.length == 2, "two base files")
+    // an un-ordered OFFSET over _pos keeps Spark's Offset operator above
+    // the positional scan: any 6 rows of the full read are a valid answer
+    val triples = fresh.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val skipped = sql(s"SELECT _file, _pos, k FROM $t OFFSET 2").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(skipped.length == 6, skipped.toSeq)
+    assert(skipped.forall(triples.contains), skipped.toSeq)
     // composes with a filter (file pruning + residual eval intact)
     assert(sql(s"SELECT _pos FROM $t WHERE k = 5").head().getLong(0) == 1L)
     // aggregate WITHOUT _pos still takes the manifest-served path

@@ -77,21 +77,6 @@ class ExactPartitionPushdownSpec extends SparkSpec {
       .head().getLong(0) == 3L)
   }
 
-  test("conf off: classic residual path, same answers") {
-    setup()
-    spark.conf.set("spark.graft.exactPartitionPushdown", "false")
-    try {
-      val got = sql("SELECT v FROM gexa.default.t WHERE p = 20 ORDER BY v")
-        .collect().map(_.getLong(0)).toSeq
-      assert(got == Seq(4L, 5L))
-      val n = opens {
-        assert(sql("SELECT COUNT(*) FROM gexa.default.t WHERE p = 10")
-          .head().getLong(0) == 3L)
-      }
-      assert(n > 0, "conf off must fall back to scanning the partition")
-    } finally spark.conf.set("spark.graft.exactPartitionPushdown", "true")
-  }
-
   test("streaming read with a partition filter stays row-exact") {
     setup()
     val ckpt = java.nio.file.Files

@@ -7,8 +7,8 @@ import graft.SparkSpec
 
 /** The merge-on-read read path: a live delta log folds into equality
   * deletes on the row id, one entry per fence, plus the replacement
-  * rows, and reads run through the deletion-vector scan
-  * ([[GraftDvScan]]). Pinned here: fences from interleaved appends and
+  * rows, and reads run through the positional [[GraftScan]]. Pinned
+  * here: fences from interleaved appends and
   * updates merge into ONE key set per base-file partition, reads equal
   * a plain model, and an unfenced (legacy) delta ref drops its ids in
   * every base file. */
@@ -31,11 +31,11 @@ class MorEqualityDeleteSpec extends SparkSpec {
       .loadTable(Identifier.of(Array("default"), name))
       .asInstanceOf[GraftDeltaTable]
 
-  private def dvScan(q: String): GraftDvScan =
+  private def dvScan(q: String): GraftScan =
     sql(q).queryExecution.executedPlan.collectLeaves().collectFirst {
-      case b: BatchScanExec if b.scan.isInstanceOf[GraftDvScan] =>
-        b.scan.asInstanceOf[GraftDvScan]
-    }.getOrElse(fail(s"no GraftDvScan in the plan of $q"))
+      case b: BatchScanExec if b.scan.isInstanceOf[GraftScan] =>
+        b.scan.asInstanceOf[GraftScan]
+    }.getOrElse(fail(s"no GraftScan in the plan of $q"))
 
   test("interleaved INSERTs and UPDATEs: several fences, at most one " +
       "key set per base-file partition, results equal a plain model") {
@@ -61,7 +61,7 @@ class MorEqualityDeleteSpec extends SparkSpec {
 
     val scan = dvScan(s"SELECT id, v FROM $t")
     val parts = scan.planInputPartitions()
-    val fileParts = parts.collect { case p: GraftDvFilePartition => p }
+    val fileParts = parts.collect { case p: GraftFilePartition => p }
     assert(fileParts.nonEmpty)
     assert(fileParts.forall(_.eqDels.size <= 1),
       "a base-file partition must probe one key set per key shape: " +
