@@ -151,18 +151,6 @@ class GraftDeltaTable(ident: String, dir: NioPath,
       "dynamic partition overwrite on a merge-on-read table requires an " +
         "empty delta log — CALL system.compact first")
 
-  /** MOR time travel: every snapshot versions BOTH the base file list
-    * AND the delta-file list (the round-10 storage made the log part
-    * of the commit), so a versioned read is simply the fold AT THAT
-    * SNAPSHOT — delta writes after it are invisible, compactions after
-    * it don't collapse it. (Rounds 8-9 refused here because the
-    * in-memory log was unversioned; that reason is gone.) Lookup and
-    * error behavior are inherited; only the VIEW differs. */
-  override protected def snapshotView(label: String,
-      snap: GraftSnapshot): Table =
-    new GraftMorSnapshotTable(label, snap.schema, snap.files,
-      snap.deltaFiles, idType, resolvedIdCol)
-
   /** ALTER TABLE ADD COLUMN works on MOR too (VERDICT r10 item 4):
     * every file — base AND delta — records the column list it was
     * written with (`cols`), so the fold's FileIterator backfills the
@@ -177,25 +165,18 @@ class GraftDeltaTable(ident: String, dir: NioPath,
     super.alterAddColumn(f)
   }
 
-  /** MOR read: fold the delta log (driver work O(|delta|)) and plan it
-    * as a deletion-vector scan — base files minus the superseded ids
-    * (equality deletes on the row id), plus the replacement rows. A
-    * log-free table takes the plain file-scan path unchanged. */
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    refreshFromDisk() // observe foreign-process commits at plan time
-    val st = stateNow
-    val files = st.current.map(_.files).getOrElse(Vector.empty)
-    val delta = st.current.map(_.deltaFiles).getOrElse(Vector.empty)
-    if (delta.isEmpty)
-      // a compacted MOR table is SPJ-eligible like any CoW table —
-      // pass the partition/bucket layout through for the key-grouped
-      // report and bucket pruning
-      new GraftScanBuilder(st.schema, files, None, partSpecEncoded,
-        bucketSpec, sortColumns ++ zorderColumns)
-    else GraftDeltaTable.foldedScan(st.schema, files, delta, idType,
-      resolvedIdCol, partSpecEncoded, bucketSpec,
-      sortColumns ++ zorderColumns)
-  }
+  /** MOR read: fold the delta log (driver work O(|delta|)) — base files
+    * minus the superseded ids (equality deletes on the row id), plus
+    * the replacement rows. A log-free (compacted) table has no deletes
+    * and is SPJ-eligible like any CoW table. Every snapshot versions
+    * BOTH the base file list AND the delta-file list, so a time-travel
+    * view is simply the fold AT THAT SNAPSHOT. */
+  override protected def readDeletes(schema: StructType,
+      files: Vector[GraftFileRef], delta: Vector[GraftFileRef],
+      live: Boolean): Option[GraftDeletes] =
+    if (delta.isEmpty) None
+    else Some(GraftDeltaTable.foldDelta(delta, files, schema, idType,
+      resolvedIdCol))
 
   /** COMPACTION — the MOR maintenance op (Iceberg's rewrite_data_files,
     * Delta's OPTIMIZE): rewrite the base with the log folded in and
@@ -260,18 +241,6 @@ object GraftDeltaTable {
           s"got ${other.catalogString}")
     }
 
-  /** The folded delta log: per-id FINAL action, last op wins. Every
-    * folded id is superseded — its base row must not be emitted, but
-    * only in base files BELOW the final op's fence (files that existed
-    * when the delta committed; later appends are exempt — review
-    * find): `deletes` holds them as equality deletes on the row-id
-    * column, one entry per fence (an unfenced legacy ref, fence -1,
-    * covers every base file). `replacements` holds the surviving final
-    * rows (updates and inserts), in table-schema layout. */
-  private[catalog] final case class DeltaFold(
-      deletes: Vector[GraftDvTable.EqDeletes],
-      replacements: Array[UnsafeRow])
-
   /** Extract a row-id as a plain JVM value (stable equals/hashCode,
     * java-serializable into input partitions). */
   private[catalog] def idValue(r: InternalRow, ordinal: Int,
@@ -309,9 +278,20 @@ object GraftDeltaTable {
 
   /** Driver-side fold of the delta FILES (never the base): read each
     * delta file in commit order, last op per id wins. Work and memory
-    * are O(|delta|), bounded by delta volume between compactions. */
+    * are O(|delta|), bounded by delta volume between compactions.
+    *
+    * The fold is the read's deletes over the base `files`: every folded
+    * id is superseded — its base row must not be emitted, but only in
+    * base files BELOW the final op's fence (files that existed when the
+    * delta committed; later appends are exempt — review find) — held as
+    * equality deletes on the row-id column, one entry per fence (an
+    * unfenced legacy ref, fence -1, covers every base file). The
+    * surviving final rows (updates and inserts) are the replacement
+    * rows, in table-schema layout. Filters stay exact: every reader
+    * branch applies the accepted ones. */
   private[catalog] def foldDelta(delta: Vector[GraftFileRef],
-      tableSchema: StructType, idType: DataType, idCol: String): DeltaFold = {
+      files: Vector[GraftFileRef], tableSchema: StructType,
+      idType: DataType, idCol: String): GraftDeletes = {
     val ds = StructType(
       StructField("__op", IntegerType, nullable = false) +:
       StructField("__id", idType, nullable = true) +:
@@ -377,35 +357,9 @@ object GraftDeltaTable {
     val deletes = Vector.newBuilder[GraftDvTable.EqDeletes]
     byFence.forEach((fence, ids) =>
       deletes += GraftDvTable.EqDeletes(fence, Vector(idCol), ids))
-    DeltaFold(deletes.result(), repl.toArray)
+    new GraftDeletes(tableSchema, Map.empty, deletes.result(), files,
+      repl.toArray, exactFilters = true)
   }
-
-  /** The MOR read over a live delta log: the positional scan with no
-    * vectors, the fold's equality deletes and its replacement rows —
-    * one read path, runtime file skipping and row-group splitting
-    * included. */
-  private[catalog] def foldedScan(tableSchema: StructType,
-      files: Vector[GraftFileRef], delta: Vector[GraftFileRef],
-      idType: DataType, idCol: String, partCols: Seq[String] = Nil,
-      bucketSpec: Option[(String, Int)] = None,
-      clusterCols: Seq[String] = Nil): ScanBuilder = {
-    val fold = foldDelta(delta, tableSchema, idType, idCol)
-    new GraftDvScanBuilder(tableSchema, files, Map.empty, partCols,
-      bucketSpec, clusterCols, fold.deletes, fold.replacements,
-      exactFilters = true)
-  }
-}
-
-/** Read-only MOR table pinned to one historical snapshot — what
-  * `VERSION AS OF` / `TIMESTAMP AS OF` resolve to for merge-on-read:
-  * the fold of THAT snapshot's delta files over THAT snapshot's base. */
-class GraftMorSnapshotTable(ident: String, tableSchema: StructType,
-    files: Vector[GraftFileRef], delta: Vector[GraftFileRef],
-    idType: DataType, idCol: String)
-    extends GraftSnapshotTable(ident, tableSchema, files) {
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (delta.isEmpty) super.newScanBuilder(options)
-    else GraftDeltaTable.foldedScan(tableSchema, files, delta, idType, idCol)
 }
 
 /** Per-task delta writer: Spark's DeltaWritingSparkTask has already

@@ -5,7 +5,7 @@ import java.util
 import java.util.UUID
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read._
@@ -46,10 +46,11 @@ import graft.util.Par
   *     a concurrent compaction rewrote would silently delete the wrong
   *     rows; the conflict errors and the statement retries;
   *   - per-file `rows` in refs count PHYSICAL rows, so manifest-served
-  *     aggregates, LIMIT/OFFSET narrowing, and exact partition pushdown
-  *     are all disabled while vectors are live (the DV scan builder
-  *     simply doesn't implement those seams); stats file PRUNING stays
-  *     on (deleted rows can only widen stats — over-keep is sound);
+  *     aggregates, LIMIT/TopN/OFFSET narrowing, and exact partition
+  *     pushdown are all disabled while vectors are live
+  *     ([[GraftScanBuilder]] refuses those seams whenever it carries
+  *     deletes); stats file PRUNING stays on (deleted rows can only
+  *     widen stats — over-keep is sound);
   *   - the `$partitions` census and the append-log stream already
   *     refuse tables with a live delta log — vectors ride the same
   *     `deltaFiles` ledger, so both refusals apply unchanged;
@@ -173,31 +174,22 @@ class GraftDvTable(ident: String, dir: NioPath,
   private[catalog] def snapshotFilesAt(ver: Int): Option[Vector[GraftFileRef]] =
     stateNow.snapshots.find(_.version == ver).map(_.files)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    refreshFromDisk()
-    val st = stateNow
-    val files = st.current.map(_.files).getOrElse(Vector.empty)
-    val delta = st.current.map(_.deltaFiles).getOrElse(Vector.empty)
-    if (delta.isEmpty)
-      // a compacted DV table scans exactly like CoW: full pushdown,
-      // SPJ, runtime filtering, manifest aggregates — except a query
-      // requesting `_pos` builds the positional scan with no deletes
-      new GraftScanBuilder(st.schema, files, None, partSpecEncoded,
-        bucketSpec, sortColumns ++ zorderColumns, posColumn = true)
+  /** The vectors and equality deletes of `delta`, folded. A compacted
+    * DV table has none and scans exactly like CoW: full pushdown, SPJ,
+    * runtime filtering, manifest aggregates — except a query requesting
+    * `_pos` builds the positional scan with empty deletes. Live reads
+    * and DML scans are bounded by `graft.dv.max_live_positions`. */
+  override protected def readDeletes(schema: StructType,
+      files: Vector[GraftFileRef], delta: Vector[GraftFileRef],
+      live: Boolean): Option[GraftDeletes] = {
+    if (live) guardFoldBound(delta)
+    if (delta.isEmpty) None
     else {
-      guardFoldBound(delta)
       val (eqs, vecs) = delta.partition(GraftDvTable.isEqRef)
-      new GraftDvScanBuilder(st.schema, files,
-        GraftDvTable.foldVectors(vecs), partSpecEncoded, bucketSpec,
-        sortColumns ++ zorderColumns,
-        GraftDvTable.foldEqMerged(eqs, st.schema))
+      Some(new GraftDeletes(schema, GraftDvTable.foldVectors(vecs),
+        GraftDvTable.foldEqMerged(eqs, schema), files))
     }
   }
-
-  override protected def snapshotView(label: String,
-      snap: GraftSnapshot): Table =
-    new GraftDvSnapshotTable(label, snap.schema, snap.files,
-      snap.deltaFiles)
 
   override private[catalog] def alterAddColumn(f: StructField): Unit = {
     require(!Seq("_pos", "__file", "__pos").exists(_.equalsIgnoreCase(f.name)),
@@ -235,19 +227,14 @@ class GraftDvTable(ident: String, dir: NioPath,
         refreshFromDisk()
         val st = stateNow
         scanVersion = st.current.map(_.version).getOrElse(-1)
-        // the DML scan folds the vectors too — same bound, same cure
-        val delta = st.current.map(_.deltaFiles).getOrElse(Vector.empty)
-        guardFoldBound(delta)
-        val (eqs, vecs) = delta.partition(GraftDvTable.isEqRef)
-        // ALWAYS the DV-aware builder (even with no live vectors): the
-        // rewrite needs _pos, which only this scan's readers emit.
-        // Equality deletes apply here too — a positional rewrite must
-        // never resurrect an upsert-superseded row.
-        new GraftDvScanBuilder(st.schema,
-          st.current.map(_.files).getOrElse(Vector.empty),
-          GraftDvTable.foldVectors(vecs),
-          partSpecEncoded, bucketSpec, sortColumns ++ zorderColumns,
-          GraftDvTable.foldEqMerged(eqs, st.schema))
+        // the DML scan folds the vectors too — same bound, same cure —
+        // and is ALWAYS positional (even with no live vectors): the
+        // rewrite needs _pos. Equality deletes apply here too — a
+        // positional rewrite must never resurrect an upsert-superseded
+        // row.
+        readScan(st.schema, st.current.map(_.files).getOrElse(Vector.empty),
+          st.current.map(_.deltaFiles).getOrElse(Vector.empty), options,
+          live = true, positional = true)
       }
       override def newWriteBuilder(winfo: LogicalWriteInfo): DeltaWriteBuilder =
         new DeltaWriteBuilder {
@@ -613,91 +600,6 @@ object GraftDvTable {
       }
       b.result()
     }
-  }
-}
-
-/** Read-only DV table pinned to one historical snapshot: the vectors
-  * AT THAT SNAPSHOT applied to that snapshot's base. */
-class GraftDvSnapshotTable(ident: String, tableSchema: StructType,
-    files: Vector[GraftFileRef], delta: Vector[GraftFileRef])
-    extends Table with SupportsRead with SupportsMetadataColumns {
-  override def name(): String = ident
-  override def schema(): StructType = tableSchema
-  // same metadata surface as the live table: a time-travel read may
-  // ask for physical positions too
-  override def metadataColumns(): Array[MetadataColumn] =
-    GraftDvTable.metadataColumns()
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (delta.isEmpty)
-      new GraftScanBuilder(tableSchema, files, None, posColumn = true)
-    else {
-      val (eqs, vecs) = delta.partition(GraftDvTable.isEqRef)
-      new GraftDvScanBuilder(tableSchema, files,
-        GraftDvTable.foldVectors(vecs),
-        eq = GraftDvTable.foldEqMerged(eqs, tableSchema))
-    }
-}
-
-/** Scan builder for a DV table with live vectors (and for every DV
-  * row-level rewrite, which needs `_pos`), and for a merge-on-read
-  * table with a live delta log, whose fold arrives as equality deletes
-  * on the row id plus the replacement `rows`. It builds the positional
-  * [[GraftScan]]. Deliberately implements ONLY column pruning and
-  * filter-driven FILE pruning: per-file row counts include deleted
-  * rows, so the aggregate/limit/offset/exact-partition seams of
-  * [[GraftScanBuilder]] would all be unsound here. Every filter returns
-  * as a post-scan residual (the file-source convention — Spark's
-  * codegen does exact row eval, and dynamic partition pruning anchors
-  * on a dim side's Filter node), unless `exactFilters`: the MOR read
-  * keeps its accepted filters exact (every reader branch applies them),
-  * so its plans carry no residual Filter and compile no per-literal
-  * Filter code. */
-class GraftDvScanBuilder(tableSchema: StructType,
-    files: Vector[GraftFileRef], dv: Map[String, Array[Long]],
-    partCols: Seq[String] = Nil,
-    bucketSpec: Option[(String, Int)] = None,
-    clusterCols: Seq[String] = Nil,
-    eq: Vector[GraftDvTable.EqDeletes] = Vector.empty,
-    rows: Array[UnsafeRow] = Array.empty, exactFilters: Boolean = false)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-
-  private var required: StructType = tableSchema
-  private var accepted: Array[org.apache.spark.sql.sources.Filter] =
-    Array.empty
-  private var all: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-
-  // replacement rows ship full-width from the fold (no parquet request
-  // to prune), so with any of them the scan's emitted layout must stay
-  // the table's own nested types — widen and let Spark project nested
-  // extractions above the scan
-  override def pruneColumns(r: StructType): Unit =
-    required = GraftStorage.sanitizeRequired(tableSchema, r,
-      nested = rows.isEmpty)
-
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    all = filters
-    accepted = filters.filter(GraftFilterEval.supports(tableSchema, _))
-    if (exactFilters) filters.filterNot(accepted.contains) else filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-    accepted
-
-  override def build(): Scan = {
-    // Skipping by every filter is sound: deletes only shrink a file's
-    // rows inside the range its stats describe. Equality-delete fences
-    // bind by position in the FULL base-file vector, which the deletes
-    // keep.
-    val surviving = files.filter(f =>
-      all.forall(GraftStorage.mayMatch(tableSchema, f, _)))
-    new GraftScan(tableSchema, required, accepted, surviving,
-      skipped = files.size - surviving.size, None, partCols, bucketSpec,
-      clusterCols,
-      deletes = Some(new GraftDeletes(tableSchema, dv, eq, files, rows)))
   }
 }
 

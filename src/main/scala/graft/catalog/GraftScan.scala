@@ -41,10 +41,9 @@ import org.json4s.jackson.JsonMethods
   *     is NULL — the same answer Spark computes).
   *
   * Reads with live deletes (DV vectors, equality deletes, a MOR delta
-  * log) never reach this code: they plan through
-  * [[GraftDvScanBuilder]], which has no aggregate seam, into the same
-  * [[GraftScan]]. Snapshot views serve their own version's refs, so
-  * time travel aggregates stay version-exact. */
+  * log) never reach this code: [[GraftScanBuilder]] refuses the
+  * aggregate seam while it carries deletes. Snapshot views serve their
+  * own version's refs, so time travel aggregates stay version-exact. */
 private[catalog] object GraftAggPushdown {
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.expressions.aggregate._
@@ -241,16 +240,31 @@ private[catalog] object GraftAggPushdown {
   * [[GraftStorage.mayMatch]] is conservative, so an unevaluatable
   * filter can still prune a file whose stats exclude it.
   *
+  * The one builder of every table read: the live table, a DV DML scan
+  * and every time-travel view ([[GraftTable.readScan]]).
+  *
+  * `deletes`: what the read applies over `files` (a DV table's vectors
+  * and equality deletes, or a MOR delta log's fold), with the
+  * equality-delete fences bound to `files`, the full snapshot list.
+  * While it is defined per-file `rows` count deleted rows, so the
+  * aggregate, LIMIT, TopN, OFFSET and exact-partition seams all refuse;
+  * filter-driven file pruning stays on (deletes only shrink a file's
+  * rows inside the range its stats describe). Filters go back to Spark
+  * as residuals, except under `deletes.exactFilters` (a MOR fold, whose
+  * readers apply the accepted ones on every branch), which hands back
+  * only the filters it cannot apply.
+  *
   * `posColumn`: the table serves the `_pos` metadata column (a DV
-  * table with no live deletes). A read that requests it builds the
-  * positional [[GraftScan]] with no deletes, whose readers count
+  * table). A read that requests it with no deletes builds the
+  * positional [[GraftScan]] with empty deletes, whose readers count
   * physical ordinals. */
 class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
     streamTable: Option[GraftTable], partCols: Seq[String] = Nil,
     bucketSpec: Option[(String, Int)] = None,
     clusterCols: Seq[String] = Nil,
     admission: GraftAdmission = GraftAdmission(),
-    posColumn: Boolean = false)
+    posColumn: Boolean = false,
+    deletes: Option[GraftDeletes] = None)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownV2Filters
     with SupportsPushDownAggregates
@@ -288,9 +302,12 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
   // actual page I/O (reading `m.b` of a wide struct column scans only
   // b's pages); unvalidated shapes widen to the full table field and
   // Spark re-projects above the scan (see sanitizeRequired)
+  // (a MOR fold's replacement rows ship full-width, with no parquet
+  // request to prune: with any of them the emitted layout stays the
+  // table's own nested types and Spark projects above the scan)
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = GraftStorage.sanitizeRequired(tableSchema, requiredSchema,
-      nested = true)
+      nested = deletes.forall(_.rows.isEmpty))
 
   /** V2 predicate pushdown (VERDICT r12 item 4 — the richer seam:
     * Spark's V2 translation covers startsWith and arbitrary AND/OR
@@ -317,7 +334,7 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
     // predicate both renders to V1 and references only partition
     // columns, and (b) the current file set is decidable — so
     // selecting the must-match files IS the filter, bit-exactly.
-    if (partCols.nonEmpty && predicates.nonEmpty &&
+    if (deletes.isEmpty && partCols.nonEmpty && predicates.nonEmpty &&
         all.length == predicates.length && {
           // SOURCE column names: a days(ts) table's users filter on ts,
           // and the per-file decidability gate below is what keeps the
@@ -344,8 +361,10 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
     // which is also what dynamic partition pruning anchors on (a
     // dim-side selective predicate swallowed into the scan would leave
     // no Filter in the plan and silently disable runtime file skipping
-    // on the fact side).
-    predicates
+    // on the fact side). A MOR fold keeps the accepted ones exact.
+    if (deletes.exists(_.exactFilters))
+      predicates.filterNot(acceptedV2.contains)
+    else predicates
   }
   override def pushedPredicates():
       Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
@@ -374,6 +393,13 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
       case _ => true
     }
 
+  /** Per-file `rows` are the scan's exact row contributions: no deletes
+    * (their `rows` count deleted rows) and no filter beyond one exact
+    * partition pushdown already applied. The aggregate, LIMIT, TopN
+    * and OFFSET seams are sound only then. */
+  private def rowsExact: Boolean =
+    deletes.isEmpty && (allV2.isEmpty || exactFiles.isDefined)
+
   // ---- manifest-served aggregate pushdown (see [[GraftAggPushdown]]).
   // Spark only attempts this when NO post-scan filter remains — and
   // every filter here stays a residual — so `all` is empty on this
@@ -384,8 +410,7 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Boolean =
-    (allV2.isEmpty || exactFiles.isDefined) &&
-      GraftAggPushdown.compute(tableSchema, effFiles, agg).isDefined
+    rowsExact && GraftAggPushdown.compute(tableSchema, effFiles, agg).isDefined
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Boolean = {
@@ -393,7 +418,7 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
     // must-match files only — `COUNT/MIN/MAX ... WHERE p = v` serves
     // from that partition's refs with zero files opened
     servedAgg =
-      if (allV2.nonEmpty && exactFiles.isEmpty) None
+      if (!rowsExact) None
       else GraftAggPushdown.compute(tableSchema, effFiles, agg)
     servedAgg.isDefined
   }
@@ -408,8 +433,7 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
     * commit order) until the cumulative row count covers k — a
     * `SELECT * FROM t LIMIT 10` on a 100 TB table opens one file. */
   override def pushLimit(limit: Int): Boolean = {
-    if ((allV2.nonEmpty && exactFiles.isEmpty) || effFiles.isEmpty)
-      return false
+    if (!rowsExact || effFiles.isEmpty) return false
     val sel = Vector.newBuilder[GraftFileRef]
     var cum = 0L
     val it = effFiles.iterator
@@ -438,8 +462,8 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
     * operator. */
   private var pushedOffset: Long = 0L
   override def pushOffset(offset: Int): Boolean = {
-    if ((allV2.nonEmpty && exactFiles.isEmpty) || posColumn ||
-        narrowedByLimit.isDefined || offset <= 0) return false
+    if (!rowsExact || posColumn || narrowedByLimit.isDefined ||
+        offset <= 0) return false
     pushedOffset = offset.toLong
     true
   }
@@ -458,8 +482,7 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       limit: Int): Boolean = {
     import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection}
-    if ((allV2.nonEmpty && exactFiles.isEmpty) || orders.isEmpty ||
-        effFiles.isEmpty) return false
+    if (!rowsExact || orders.isEmpty || effFiles.isEmpty) return false
     val nr = orders(0).expression() match {
       case n: NamedReference if n.fieldNames().length == 1 => n
       case _ => return false
@@ -561,13 +584,14 @@ class GraftScanBuilder(tableSchema: StructType, files: Vector[GraftFileRef],
         (surviving0.drop(i), pushedOffset - cum)
       }
     // `_pos` on a table with no live deletes: the positional scan with
-    // no deletes (only its readers count physical ordinals)
+    // empty deletes (only its readers count physical ordinals)
     val withPos = posColumn &&
       required.fieldNames.exists(_.equalsIgnoreCase("_pos"))
     new GraftScan(tableSchema, required, accepted, surviving,
       skipped = files.size - surviving.size, streamTable, partCols,
       bucketSpec, clusterCols, admission, skipLeadingRows = skipRows,
-      deletes = if (withPos) Some(GraftDeletes.none) else None)
+      deletes = deletes.orElse(
+        if (withPos) Some(GraftDeletes.none) else None))
   }
 }
 
@@ -1348,11 +1372,16 @@ case class GraftMorRowsPartition(rows: Array[UnsafeRow]) extends InputPartition
 /** The deletes a read of a DV or merge-on-read table applies over its
   * base files: the folded vectors (path -> SORTED DISTINCT positions),
   * the equality deletes (fenced by base-file index in the snapshot's
-  * `snapshotFiles`) and a MOR fold's replacement rows. */
+  * `snapshotFiles`) and a MOR fold's replacement rows. `exactFilters`:
+  * the read keeps its accepted filters exact instead of handing them
+  * back as residuals (a MOR fold, whose plans then carry no residual
+  * Filter and compile no per-literal Filter code). */
 final class GraftDeletes(tableSchema: StructType,
     val positions: Map[String, Array[Long]],
     val eq: Vector[GraftDvTable.EqDeletes],
-    snapshotFiles: Vector[GraftFileRef], val rows: Array[UnsafeRow]) {
+    snapshotFiles: Vector[GraftFileRef],
+    val rows: Array[UnsafeRow] = Array.empty,
+    val exactFilters: Boolean = false) {
 
   private lazy val snapshotIndex: Map[String, Int] =
     snapshotFiles.iterator.map(_.path).zipWithIndex.toMap
@@ -1399,8 +1428,7 @@ final class GraftDeletes(tableSchema: StructType,
 object GraftDeletes {
   /** A positional read with nothing deleted: `_pos` on a DV table. */
   val none: GraftDeletes =
-    new GraftDeletes(new StructType(), Map.empty, Vector.empty, Vector.empty,
-      Array.empty)
+    new GraftDeletes(new StructType(), Map.empty, Vector.empty, Vector.empty)
 }
 
 /** SPJ variant of a file task: carries the file's pinned partition

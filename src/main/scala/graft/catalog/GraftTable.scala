@@ -1397,13 +1397,6 @@ class GraftTable(ident: String, val dir: NioPath,
     }
   }
 
-  /** How a pinned historical snapshot materializes as a read-only
-    * table — the ONE hook the merge-on-read subclass overrides (its
-    * views must fold the snapshot's delta list); the lookup logic and
-    * error wording live only here. */
-  protected def snapshotView(label: String, snap: GraftSnapshot): Table =
-    new GraftSnapshotTable(label, snap.schema, snap.files)
-
   /** Read-only view pinned to commit `v` (time travel). Expired and
     * future versions are LOUD errors. */
   private[catalog] def snapshotAt(v: Int): Table = synchronized {
@@ -1419,7 +1412,7 @@ class GraftTable(ident: String, val dir: NioPath,
     require(v >= 0 && v <= maxVisible,
       s"version $v out of range [0, ${maxVisible + 1})")
     win.find(_.version == v) match {
-      case Some(snap) => snapshotView(s"$ident@v$v", snap)
+      case Some(snap) => new GraftSnapshotTable(s"$ident@v$v", this, snap)
       case None => throw new IllegalStateException(
         s"version $v of $ident has expired (retained: " +
           s"[${win.headOption.map(_.version).getOrElse(-1)}, " +
@@ -1434,7 +1427,8 @@ class GraftTable(ident: String, val dir: NioPath,
     val win = stateNow.snapshots
     require(win.nonEmpty, s"$ident has no commits to time-travel to")
     win.filter(_.tsMillis <= tMillis).lastOption match {
-      case Some(snap) => snapshotView(s"$ident@t$tMillis", snap)
+      case Some(snap) =>
+        new GraftSnapshotTable(s"$ident@t$tMillis", this, snap)
       case None => throw new IllegalStateException(
         s"timestamp $tMillis predates the retained history of $ident " +
           s"(earliest retained commit: ${win.head.tsMillis}; " +
@@ -1500,10 +1494,42 @@ class GraftTable(ident: String, val dir: NioPath,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     refreshFromDisk() // observe foreign-process commits at plan time
     val s = stateNow  // publish-transaction-resolved view (round 16)
-    new GraftScanBuilder(s.schema,
-      s.current.map(_.files).getOrElse(Vector.empty), Some(this), partCols,
-      bucketBy, sortCols ++ zorderCols,
-      admission = GraftAdmission.fromOptions(options))
+    readScan(s.schema, s.current.map(_.files).getOrElse(Vector.empty),
+      s.current.map(_.deltaFiles).getOrElse(Vector.empty), options,
+      live = true)
+  }
+
+  /** The deletes a read of `files` applies, given the same snapshot's
+    * delta files — the one per-kind read hook. Copy-on-write has none;
+    * a DV table folds its vectors and equality deletes, a merge-on-read
+    * table its delta log. `live` marks a read of the current snapshot
+    * (a table read or a DML scan), the reads a kind may bound; a
+    * time-travel view is never refused. */
+  protected def readDeletes(schema: StructType, files: Vector[GraftFileRef],
+      delta: Vector[GraftFileRef], live: Boolean): Option[GraftDeletes] =
+    None
+
+  /** The one table read path: the live table, a DV DML scan and every
+    * time-travel view build their [[GraftScanBuilder]] here, over the
+    * kind's [[readDeletes]]. Only a kind that streams its append log
+    * hands the scan its stream hook and admission options. A view
+    * passes no layout columns: the bucket or partition spec may have
+    * changed since its snapshot. `positional`: the scan emits `_pos`
+    * even with nothing deleted (a DV rewrite keys its rows on it). */
+  private[catalog] def readScan(schema: StructType,
+      files: Vector[GraftFileRef], delta: Vector[GraftFileRef],
+      options: CaseInsensitiveStringMap, live: Boolean,
+      positional: Boolean = false): ScanBuilder = {
+    val deletes = readDeletes(schema, files, delta, live)
+    val streams = live &&
+      capabilities().contains(TableCapability.MICRO_BATCH_READ)
+    new GraftScanBuilder(schema, files, if (streams) Some(this) else None,
+      if (live) partCols else Nil, if (live) bucketBy else None,
+      if (live) sortCols ++ zorderCols else Nil,
+      if (streams) GraftAdmission.fromOptions(options) else GraftAdmission(),
+      posColumn = metadataColumns().exists(_.name == "_pos"),
+      deletes = if (positional) deletes.orElse(Some(GraftDeletes.none))
+        else deletes)
   }
 
   // ---- plain write path (INSERT INTO / INSERT OVERWRITE) ---------------
@@ -1748,14 +1774,22 @@ class GraftRowLevelOp(table: GraftTable, info: RowLevelOperationInfo)
     s"GraftRowLevelOperation(${info.command()}, file-granularity copy-on-write)"
 }
 
-/** Read-only table pinned to one historical snapshot — what
-  * `VERSION AS OF n` resolves to. Deliberately NOT SupportsWrite. */
-class GraftSnapshotTable(ident: String, tableSchema: StructType,
-    files: Vector[GraftFileRef]) extends Table with SupportsRead {
+/** Read-only table pinned to one historical snapshot of `table` —
+  * what `VERSION AS OF` / `TIMESTAMP AS OF` resolve to, for every table
+  * kind: that snapshot's base files under the deletes of that
+  * snapshot's delta files (delta writes after it are invisible,
+  * compactions after it don't collapse it). Serves the table's own
+  * metadata columns. Deliberately NOT SupportsWrite. */
+class GraftSnapshotTable(ident: String, table: GraftTable,
+    snap: GraftSnapshot)
+    extends Table with SupportsRead with SupportsMetadataColumns {
   override def name(): String = ident
-  override def schema(): StructType = tableSchema
+  override def schema(): StructType = snap.schema
+  override def metadataColumns(): Array[MetadataColumn] =
+    table.metadataColumns()
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(tableSchema, files, None)
+    table.readScan(snap.schema, snap.files, snap.deltaFiles, options,
+      live = false)
 }

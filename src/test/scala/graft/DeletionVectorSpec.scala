@@ -120,7 +120,104 @@ class DeletionVectorSpec extends SparkSpec {
       .createOrReplaceTempView("dv_dim")
     assert(sql(s"SELECT sum(d.w) FROM $t x JOIN dv_dim d ON x.k = d.k")
       .head().getLong(0) == (0L + 2 + 3 + 5 + 7) * 10)
+
+    // Per-file `rows` count deleted rows whatever the deletes are, so
+    // every seam that answers from them must refuse: manifest
+    // aggregates, exact partition pushdown, LIMIT, TopN and OFFSET.
+    // Seed: file A holds k 0..2, file B k 3..11; v = v<kk>, p by parity.
+    // Each input deletes or replaces k 0, 1 and 11, the rows holding
+    // the extremes and most of file A.
+    def seed(k: Long): (Long, String, String) =
+      (k, f"v$k%02d", if (k % 2 == 0) "x" else "y")
+    val dropped = Map(0L -> None, 1L -> None, 11L -> None)
+    for ((input, props, dml, changed) <- Seq[(String, String,
+          String => Unit, Map[Long, Option[String]])](
+        ("dv_vec", "'graft.mode'='dv'",
+          f => sql(s"DELETE FROM $f WHERE k IN (0, 1, 11)"), dropped),
+        ("dv_eq", "'graft.mode'='dv'",
+          f => sql("SELECT * FROM VALUES (0L, 'v05x', 'x'), " +
+            "(1L, 'v06x', 'y'), (11L, 'v07x', 'y') AS u(k, v, p)")
+            .writeTo(f).option("graft.upsert_keys", "k").append(),
+          Map(0L -> Some("v05x"), 1L -> Some("v06x"), 11L -> Some("v07x"))),
+        ("mor", "'graft.mode'='mor', 'graft.row_id'='k'",
+          f => {
+            sql(s"DELETE FROM $f WHERE k IN (0, 1, 11)")
+            sql(s"UPDATE $f SET v = 'v05u' WHERE k = 7")
+          },
+          dropped + (7L -> Some("v05u"))));
+        partitioned <- Seq(false, true)) {
+      val f = s"gdv.default.dv_seam_${input}_${if (partitioned) "p" else "u"}"
+      val what = s"$input ${if (partitioned) "partitioned" else "unpartitioned"}"
+      sql(s"DROP TABLE IF EXISTS $f")
+      sql(s"CREATE TABLE $f (k BIGINT, v STRING, p STRING) " +
+        (if (partitioned) "PARTITIONED BY (p) " else "") +
+        s"TBLPROPERTIES ($props)")
+      Seq((0, 3), (3, 12)).foreach { case (lo, hi) =>
+        sql(s"INSERT INTO $f SELECT /*+ REPARTITION(1) */ id, " +
+          "format_string('v%02d', id), " +
+          s"CASE WHEN id % 2 = 0 THEN 'x' ELSE 'y' END FROM range($lo, $hi)")
+      }
+      dml(f)
+      val live = (0L until 12L).map(seed).flatMap { case (k, v, p) =>
+        changed.get(k) match {
+          case Some(None) => None
+          case Some(Some(nv)) => Some((k, nv, p))
+          case None => Some((k, v, p))
+        }
+      }
+      def one(q: String): Row = sql(q).head()
+      assert(one(s"SELECT count(*) FROM $f").getLong(0) == live.size, what)
+      assert(one(s"SELECT min(k), max(k), min(v), max(v) FROM $f") ==
+        Row(live.map(_._1).min, live.map(_._1).max, live.map(_._2).min,
+          live.map(_._2).max), what)
+      assert(one(s"SELECT count(*) FROM $f WHERE p = 'x'").getLong(0) ==
+        live.count(_._3 == "x"), what)
+      assert(sql(s"SELECT k, v FROM $f ORDER BY k LIMIT 2").collect().toSeq ==
+        live.sortBy(_._1).take(2).map(r => Row(r._1, r._2)), what)
+      assert(one(s"SELECT count(*) FROM (SELECT * FROM $f LIMIT 3)")
+        .getLong(0) == 3L, what)
+      assert(one(s"SELECT count(*) FROM (SELECT * FROM $f OFFSET 5)")
+        .getLong(0) == live.size - 5L, what)
+    }
   }
+
+  // Every kind's time-travel view serves the live table's metadata
+  // columns: `_file` resolves on a pinned snapshot and names that
+  // snapshot's files, also where the view folds live deletes
+  for ((mode, props) <- Seq(("cow", "'graft.mode'='cow'"),
+      ("dv", "'graft.mode'='dv'"),
+      ("mor", "'graft.mode'='mor', 'graft.row_id'='k'")))
+    test(s"$mode: time travel selects _file from the pinned snapshot") {
+      spark.conf.set("spark.sql.catalog.gdv",
+        classOf[graft.catalog.GraftCatalog].getName)
+      val t = s"gdv.default.${mode}_tt_file"
+      sql(s"DROP TABLE IF EXISTS $t")
+      sql(s"CREATE TABLE $t (k BIGINT, v STRING) TBLPROPERTIES ($props)")
+      sql(s"INSERT INTO $t SELECT id, concat('a', id) FROM range(0, 4)")
+      Thread.sleep(30) // commit timestamps are wall-clock millis
+      val mid = java.sql.Timestamp.from(java.time.Instant.now())
+      Thread.sleep(30)
+      sql(s"INSERT INTO $t SELECT id, concat('b', id) FROM range(4, 8)")
+      sql(s"DELETE FROM $t WHERE k % 3 = 1")
+      sql(s"UPDATE $t SET v = 'u' WHERE k = 2")
+      val st = spark.sessionState.catalogManager.catalog("gdv")
+        .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+        .loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(
+          Array("default"), s"${mode}_tt_file"))
+        .asInstanceOf[graft.catalog.GraftTable].stateNow
+      val v0Files = st.snapshots.find(_.version == 0).get.files.map(_.path)
+      for (clause <- Seq("VERSION AS OF 0", s"TIMESTAMP AS OF '$mid'")) {
+        val rows = sql(s"SELECT _file, k FROM $t $clause ORDER BY k").collect()
+        assert(rows.map(_.getLong(1)).toSeq == Seq(0L, 1L, 2L, 3L), clause)
+        assert(rows.forall(r => v0Files.contains(r.getString(0))),
+          s"$clause: ${rows.toSeq} outside $v0Files")
+      }
+      // the current version's view answers like the live table
+      val cur = st.current.get.version
+      def fileRows(q: String) = sql(q).collect().toSeq.sortBy(_.getLong(1))
+      assert(fileRows(s"SELECT _file, k, v FROM $t VERSION AS OF $cur") ==
+        fileRows(s"SELECT _file, k, v FROM $t"))
+    }
 
   test("a vector referencing a no-longer-current file conflicts loudly") {
     setup("dv_race")

@@ -14,7 +14,8 @@ import graft.SparkSpec
   * are one [[GraftMetaTable]] shape over one [[GraftLocalScan]]: each
   * keeps its schema and plans as a LocalTableScan, a base that is not a
   * managed table refuses cleanly, and `CALL system.history` reads
-  * through `$history`. */
+  * through `$history`. Source guards keep these shapes single: one
+  * LocalScan, and one table-read builder built in one place. */
 class MetaTableSpec extends SparkSpec {
 
   private def sql(q: String) = spark.sql(q)
@@ -118,6 +119,25 @@ class MetaTableSpec extends SparkSpec {
     assert(sites == Seq("GraftMetaTable.scala"), sites)
     assert(mainSources.exists { case (_, src) =>
       src.contains("final class GraftLocalScan(") })
+  }
+
+  test("src/main has three ScanBuilders and builds table reads in " +
+      "GraftTable.scala only") {
+    val read = """(org\.apache\.spark\.sql\.connector\.read\.)?ScanBuilder\b"""
+    val anySite = ("""\b(extends|with|new)\s+""" + read).r
+    val named = ("""\bclass\s+(\w+)((?!\bclass\b)[^{])*?\bextends\s+""" +
+      read).r
+    val sites = mainSources.map { case (_, src) =>
+      anySite.findAllIn(src).size }.sum
+    val builders = mainSources.flatMap { case (_, src) =>
+      named.findAllMatchIn(src).map(_.group(1)) }
+    assert(builders.sorted == Seq("GraftFeedScanBuilder",
+      "GraftGroupScanBuilder", "GraftScanBuilder"), builders)
+    assert(sites == builders.size, s"$sites ScanBuilder sites")
+    val built = mainSources.flatMap { case (p, src) =>
+      """new GraftScanBuilder\(""".r.findAllIn(src)
+        .map(_ => p.getFileName.toString) }
+    assert(built.nonEmpty && built.forall(_ == "GraftTable.scala"), built)
   }
 
   test("the metadata suffix literals occur in one definition") {
