@@ -4,8 +4,10 @@
     python3 tools/plan_diff.py <before.txt> <after.txt>
 
 Each dump is the standard output of `runMain graft.Explain <sfDir>
-[queryName ...]`: one `========== <name> ==========` header per query,
-then its formatted physical plan. For every query the script keeps each
+[queryName ...]`, as printed or as logged by sbt (a leading `[info] `
+is dropped, and sbt's `[error]`/`[warn]` lines, Spark's own log, are
+skipped): one `========== <name> ==========` header per query, then
+its formatted physical plan. For every query the script keeps each
 `BatchScan` node's header, output and description lines (and an
 `EXPLAIN FAILED` line, if any), masks what differs between runs of the
 same plan (`#` expression ids, `plan_id`s, operator numbers, UUIDs and
@@ -17,6 +19,8 @@ import difflib
 import re
 import sys
 
+SBT_PREFIX = re.compile(r"^\[info\] ?")
+SBT_LOG = re.compile(r"^\[(error|warn)\]")
 HEADER = re.compile(r"^========== (.+) ==========$")
 NODE = re.compile(r"^\(\d+\) ")
 SCAN = re.compile(r"^\(\d+\) BatchScan\b")
@@ -42,7 +46,9 @@ def scan_nodes(path):
     name, keep = None, False
     with open(path, encoding="utf-8", errors="replace") as f:
         for raw in f:
-            line = raw.rstrip("\n")
+            if SBT_LOG.match(raw):
+                continue
+            line = SBT_PREFIX.sub("", raw.rstrip("\n"), count=1)
             m = HEADER.match(line)
             if m:
                 name, keep = m.group(1), False
